@@ -25,9 +25,7 @@ from pyspark.sql import functions as _F
 from compute_histogram_spark.session import get_session, release_persists
 from compute_histogram_spark import registry
 from compute_histogram_spark.operators import behavior as BH
-from compute_histogram_spark.operators import deciles as _DE
 from compute_histogram_spark.operators import dedup as DD
-from compute_histogram_spark.operators import histogram as _H
 from compute_histogram_spark.operators import relational as R
 from compute_histogram_spark.operators import text as TX
 from compute_histogram_spark.sources.tables import load
@@ -85,13 +83,6 @@ LOCAL_QUERIES = {
     # times each engine's fastest value-identical formulation.
     "text_stats": lambda spark, d: TX.text_profile_arrow(
         load(spark, d, "documents")
-    ),
-    # r13: the one-pass window form of the decile tail — value-identical
-    # to the registry's reference-parity deciles_sql (equality pinned in
-    # tests/test_deciles.py), one Sort instead of scalar-agg + crossJoin.
-    # A/B at sf1: 0.58 vs 0.43 s.
-    "histogram_deciles": lambda spark, d: _DE.deciles_fused(
-        _H.histogram(load(spark, d, "events"), "value", "linear")
     ),
     # r11: the Arrow pair-kernel form of the exact Jaccard operator —
     # value-identical to the window's declarative plan (equality pinned
@@ -436,10 +427,10 @@ def _q5_layout_served(s, d):
             s, d, buckets=BK.scaled_buckets(d), database=db
         )
     ot, lt = _IDX_CACHE[key]
-    return R.local_supplier_revenue_bucketed(
-        s, ot, lt,
+    return R.local_supplier_revenue(
         load(s, d, "region"), load(s, d, "nation"),
         load(s, d, "customer"), load(s, d, "supplier"),
+        s.table(ot), s.table(lt),
     )
 
 
@@ -457,12 +448,11 @@ def _custkey_layout_served(s, d, which):
         _IDX_CACHE[key] = BK.write_custkey_layout(
             s, d, buckets=BK.scaled_buckets(d, table="orders"), database=db
         )
-    ot, ct = _IDX_CACHE[key]
+    orders, customer = (s.table(t) for t in _IDX_CACHE[key])
     if which == "q22":
-        return R.sales_opportunity_bucketed(s, ot, ct)
-    fn = (R.region_revenue_bucketed if which == "region"
-          else R.rollup_revenue_bucketed)
-    return fn(s, ot, ct, load(s, d, "region"), load(s, d, "nation"))
+        return R.sales_opportunity(customer, orders)
+    fn = R.region_revenue if which == "region" else R.rollup_revenue
+    return fn(load(s, d, "region"), load(s, d, "nation"), customer, orders)
 
 
 def _orderkey_layout_served(s, d, which):
@@ -478,37 +468,35 @@ def _orderkey_layout_served(s, d, which):
         _IDX_CACHE[key] = BK.write_q5_layout(
             s, d, buckets=BK.scaled_buckets(d), database=db
         )
-    ot, lt = _IDX_CACHE[key]
+    o, li = (s.table(t) for t in _IDX_CACHE[key])
     if which == "q3":
-        return R.shipping_priority_bucketed(s, ot, lt, load(s, d, "customer"))
+        return R.shipping_priority(load(s, d, "customer"), o, li)
     if which == "q21":
-        return R.waiting_suppliers_bucketed(s, ot, lt, load(s, d, "supplier"))
+        return R.waiting_suppliers(o, li, load(s, d, "supplier"))
     if which == "q18":
-        return R.large_volume_customers_bucketed(
-            s, ot, lt, load(s, d, "customer")
-        )
+        return R.large_volume_customers(load(s, d, "customer"), o, li)
     if which == "q10":
-        return R.returned_item_customers_bucketed(
-            s, ot, lt, load(s, d, "customer"), load(s, d, "nation")
+        return R.returned_item_customers(
+            load(s, d, "customer"), load(s, d, "nation"), o, li
         )
     if which == "q8":
-        return R.market_share_bucketed(
-            s, ot, lt, load(s, d, "customer"), load(s, d, "supplier"),
+        return R.market_share(
+            li, o, load(s, d, "customer"), load(s, d, "supplier"),
             load(s, d, "part"), load(s, d, "nation"), load(s, d, "region"),
         )
     if which == "q9":
-        return R.product_type_profit_orderkey(
-            s, ot, lt, load(s, d, "supplier"), load(s, d, "part"),
+        return R.product_type_profit(
+            li, o, load(s, d, "supplier"), load(s, d, "part"),
             load(s, d, "nation"),
         )
     if which == "q12":
-        return R.latency_mode_priority_bucketed(s, ot, lt)
+        return R.latency_mode_priority(o, li)
     if which == "q7":
-        return R.volume_shipping_bucketed(
-            s, ot, lt, load(s, d, "customer"), load(s, d, "supplier"),
+        return R.volume_shipping(
+            li, o, load(s, d, "customer"), load(s, d, "supplier"),
             load(s, d, "nation"), load(s, d, "region"),
         )
-    return R.late_order_priority_bucketed(s, ot, lt)
+    return R.late_order_priority(o, li)
 
 
 def _userkey_layout_served(s, d, which):
@@ -557,18 +545,16 @@ def _partkey_layout_served(s, d, which="q16"):
         _IDX_CACHE[key] = BK.write_partkey_layout(
             s, d, buckets=BK.scaled_buckets(d), database=db
         )
-    lt, pt = _IDX_CACHE[key]
+    li, part = (s.table(t) for t in _IDX_CACHE[key])
     if which == "q17":
-        return R.small_quantity_revenue_bucketed(s, lt, load(s, d, "part"))
+        return R.small_quantity_revenue(li, load(s, d, "part"))
     if which == "q20":
-        return R.promotion_suppliers_bucketed(
-            s, lt, load(s, d, "supplier"), load(s, d, "part")
+        return R.promotion_suppliers(
+            li, load(s, d, "supplier"), load(s, d, "part")
         )
     if which == "q14":
-        return R.promo_revenue_share_bucketed(s, lt, pt)
-    return R.supplier_part_counts_bucketed(
-        s, lt, pt, load(s, d, "supplier")
-    )
+        return R.promo_revenue_share(part, li)
+    return R.supplier_part_counts(li, load(s, d, "supplier"), part)
 
 
 def _cents_projection_served(s, d):
@@ -1150,6 +1136,54 @@ def _bench_sf10(spark, out: dict) -> None:
         }
 
 
+# Whoever runs the bench keeps only a 2000-char stdout tail.
+_LINE_MAX = 1900
+
+
+def compact_line(compact: dict) -> str:
+    """Serialize the compact result as ONE JSON line of at most
+    ``_LINE_MAX`` characters, shedding detail in a fixed order until it
+    fits: decorations first, then the sweep blocks down to their ratios,
+    then coarser per-query rounding, then the fastest queries (the
+    ``queries`` map is the line's only per-query signal, so it goes
+    last and always keeps its slowest entry; ``queries_shed`` counts
+    what was dropped), and finally everything outside the
+    metric/value/queries contract. Mutates ``compact``."""
+    line = json.dumps(compact)
+    for k in ("fresh_total", "n_ok", "n_err", "full"):
+        if len(line) <= _LINE_MAX:
+            return line
+        compact.pop(k, None)
+        line = json.dumps(compact)
+    if len(line) > _LINE_MAX:
+        for k in ("sf10", "sf1", "sf01", "tpch_sf1", "tpch_sf10"):
+            if k in compact:
+                compact[k] = {
+                    kk: compact[k][kk]
+                    for kk in ("ratio", "floor_adjusted_ratio", "error")
+                    if kk in compact[k]
+                }
+        line = json.dumps(compact)
+    if len(line) > _LINE_MAX:
+        compact["queries"] = {
+            n: round(v, 2) for n, v in compact["queries"].items()
+        }
+        line = json.dumps(compact)
+    if len(line) > _LINE_MAX and len(compact["queries"]) > 1:
+        slowest = sorted(compact["queries"].items(), key=lambda kv: -kv[1])
+        n_all = len(slowest)
+        while len(line) > _LINE_MAX and len(slowest) > 1:
+            slowest.pop()
+            compact["queries"] = dict(slowest)
+            compact["queries_shed"] = n_all - len(slowest)
+            line = json.dumps(compact)
+    if len(line) > _LINE_MAX:
+        contract = ("metric", "value", "unit", "sf", "queries", "queries_shed")
+        compact = {k: compact[k] for k in contract if k in compact}
+        line = json.dumps(compact)
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -1277,33 +1311,7 @@ def main() -> None:
     if full_path:
         compact["full"] = os.path.relpath(full_path)
     compact["queries"] = out["queries"]
-    line = json.dumps(compact)
-    if len(line) > 1900:
-        # shed ladder: decorations first, per-query detail LAST — the
-        # queries map is the driver's only per-query signal (PERF
-        # per_query was empty for two rounds because r16 shed it first)
-        for k in ("fresh_total", "n_ok", "n_err", "full"):
-            compact.pop(k, None)
-            line = json.dumps(compact)
-            if len(line) <= 1900:
-                break
-    if len(line) > 1900:
-        # sweep blocks down to the two headline ratios
-        for k in ("sf10", "sf1", "sf01", "tpch_sf1", "tpch_sf10"):
-            if k in compact:
-                compact[k] = {
-                    kk: compact[k][kk]
-                    for kk in ("ratio", "floor_adjusted_ratio", "error")
-                    if kk in compact[k]
-                }
-        line = json.dumps(compact)
-    if len(line) > 1900:
-        # last resort: coarser per-query rounding (still a full map)
-        compact["queries"] = {
-            n: round(v, 2) for n, v in compact["queries"].items()
-        }
-        line = json.dumps(compact)
-    print(line)
+    print(compact_line(compact))
 
 
 if __name__ == "__main__":

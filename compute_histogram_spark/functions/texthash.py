@@ -14,6 +14,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+
+def _ident(name: str) -> str:
+    """Backtick-quote a column name for interpolation into ``F.expr``
+    text, so names with spaces, hyphens or backticks parse as one
+    identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def tokens(col: str = "text") -> Column:
     """Single-space split — mirrors DuckDB ``string_split(text, ' ')``."""
     return F.split(F.col(col), " ")
@@ -25,10 +33,11 @@ def word_shingles(tok_col: str = "toks", n: int = 3) -> Column:
     Guarded so docs shorter than n yield an empty array (matching DuckDB's
     empty ``generate_series`` range in the oracle).
     """
-    items = ", ".join(f"{tok_col}[i + {j}]" for j in range(n))
+    t = _ident(tok_col)
+    items = ", ".join(f"{t}[i + {j}]" for j in range(n))
     return F.expr(
-        f"CASE WHEN size({tok_col}) >= {n} "
-        f"THEN transform(sequence(0, size({tok_col}) - {n}), "
+        f"CASE WHEN size({t}) >= {n} "
+        f"THEN transform(sequence(0, size({t}) - {n}), "
         f"     i -> concat_ws(' ', {items})) "
         f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
@@ -51,7 +60,7 @@ def minhash_aggs(shingle_col: str, num_hashes: int) -> list[Column]:
     Identical analyzed plan, value-identity pinned by every existing
     signature test."""
     return [
-        F.expr(f"min(md5(concat('{i}:', {shingle_col}))) AS mh{i}")
+        F.expr(f"min(md5(concat('{i}:', {_ident(shingle_col)}))) AS mh{i}")
         for i in range(num_hashes)
     ]
 
@@ -63,7 +72,7 @@ def band_hashes(num_hashes: int, rows_per_band: int) -> list[Column]:
     out = []
     for b in range(bands):
         members = ", ".join(
-            f"mh{b * rows_per_band + r}" for r in range(rows_per_band)
+            _ident(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)
         )
         out.append(F.expr(f"md5(concat_ws('|', {members})) AS band{b}"))
     return out

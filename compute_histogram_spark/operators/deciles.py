@@ -6,12 +6,14 @@
     select floor((sum(count) over (order by value) / total) * 10) as pct, ...
     group by pct order by min(value)
 
-Two twins are provided (SURVEY §2.3, §7 M2):
+Two forms (SURVEY §2.3, §7 M2):
 
+- :func:`deciles` — the engine's form: one ordered pass, no scalar
+  aggregate and no cross join.
 - :func:`deciles_sql` — the query as Spark SQL text, structurally the
   reference file with aliased outputs (CTE + scalar agg + cross join +
-  running-sum window + floor bucket + group agg + order-by-aggregate).
-- :func:`deciles` — the same plan through the DataFrame/Window API.
+  running-sum window + floor bucket + group agg + order-by-aggregate);
+  kept as the reference the tests compare :func:`deciles` against.
 
 Scale note: the running ``sum() OVER (ORDER BY value)`` is a global ordered
 window — a single-partition sort. That is correct here because its input is
@@ -49,42 +51,13 @@ def deciles_sql(histo: DataFrame, view_name: str = "histo") -> DataFrame:
 
 
 def deciles(histo: DataFrame) -> DataFrame:
-    """DataFrame/Window twin of :func:`deciles_sql` (same output schema)."""
-    total = histo.agg(F.sum("pixel_count").alias("total"))
-    # comma-join with the 1-row scalar aggregate (compute_histogram.sql:2) —
-    # broadcast nested-loop join of a single row, negligible at any scale.
-    w = Window.orderBy("value")  # RANGE UNBOUNDED PRECEDING..CURRENT ROW
-    cum = (
-        histo.crossJoin(F.broadcast(total))
-        .withColumn("cum", F.sum("pixel_count").over(w))
-        .withColumn("pct", F.floor((F.col("cum") / F.col("total")) * 10))
-    )
-    return (
-        cum.groupBy("pct")
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.sum("pixel_count").alias("bucket_count"),
-        )
-        .select(
-            (F.col("pct").cast("bigint") * 10).alias("percentile"),
-            "min_value",
-            "max_value",
-            "bucket_count",
-        )
-        .orderBy("min_value")
-    )
-
-
-def deciles_fused(histo: DataFrame) -> DataFrame:
-    """Value-identical to :func:`deciles` / :func:`deciles_sql` in ONE
+    """Value-identical to :func:`deciles_sql` (same output schema) in ONE
     ordered pass: the scalar total comes from an unbounded frame over the
     SAME single-partition ordering the running sum already needs, so the
-    separate scalar-aggregate job and its cross join disappear (two
-    Window operators share one Sort, zero extra Exchange). The parity
-    forms above keep the reference's SQL structure; this is the plan a
-    Spark engine actually wants — equality is pinned in
-    tests/test_deciles.py at both test SFs."""
+    reference's separate scalar-aggregate job and its cross join
+    disappear (two Window operators share one Sort, zero extra
+    Exchange). Equality is pinned in tests/test_deciles.py at both test
+    SFs; A/B at sf1: 0.58 s (SQL form) vs 0.43 s."""
     w = Window.orderBy("value")
     wt = Window.orderBy("value").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing

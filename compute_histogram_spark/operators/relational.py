@@ -23,6 +23,15 @@ dimension whose static estimate (pre-filter file bytes) blocks the
 broadcast the runtime size would allow — goes through the driver-side
 cardinality gate (plans/broadcast_gate.py): count the slice, broadcast
 iff it fits a deployment budget, else keep the shuffle plan.
+
+Layouts: each operator has one formulation and takes DataFrames. A
+write-once bucketed layout (sources/bucketing.py) is passed in as
+``spark.table(name)`` in place of the plain parquet read. Where the best
+plan over co-bucketed facts differs (a hint or join order that only pays
+when the fact join would otherwise shuffle), the operator picks it from
+:func:`~compute_histogram_spark.sources.bucketing.bucketed_on`, which
+reads the inputs' planned partitioning. Over plain parquet that check is
+False and the plan is the one each operator documents.
 """
 
 from __future__ import annotations
@@ -31,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..plans.broadcast_gate import broadcast_if_fits, counted_rows, fits
 from ..session import defer_release
+from ..sources.bucketing import bucketed_on
 
 
 def cents(col: Column | str) -> Column:
@@ -174,9 +184,15 @@ def _orders_per_customer(orders: DataFrame) -> DataFrame:
     aggregation below a join on its own, but revenue is additive, so
     summing partials after the join is value-identical — and the join
     input drops from |orders| to |customers| rows (the orders-per-customer
-    factor, unboundedly large at 100 TB)."""
+    factor, unboundedly large at 100 TB).
+
+    The custkey layout (sources/bucketing.py:write_custkey_layout)
+    stores the cents as a ``tp_c`` column: the same round(x*100) bigints
+    the expression derives, so the sum is value-exact and the per-row
+    cast moves into the one-time write. Plain parquet has no ``tp_c``."""
+    rev_c = F.col("tp_c") if "tp_c" in orders.columns else cents("o_totalprice")
     return orders.groupBy("o_custkey").agg(
-        F.sum(cents("o_totalprice")).alias("rev_c"),
+        F.sum(rev_c).alias("rev_c"),
         F.count(F.lit(1)).alias("n_o"),
     )
 
@@ -187,7 +203,9 @@ def region_revenue(
     """Revenue by region/nation; the fact side pre-aggregates per customer
     (see :func:`_orders_per_customer`), bounded dims (nation/region)
     broadcast, the data-scaled customer join stays AQE's stats-based
-    choice."""
+    choice. Over the custkey layout (orders + customer co-bucketed) the
+    pre-aggregation and the customer join are bucket-local: zero
+    fact-side Exchange, only the ≤ |nations|-group aggregate moves."""
     j = (
         _orders_per_customer(orders)
         .join(customer, F.col("o_custkey") == customer["c_custkey"])
@@ -366,15 +384,24 @@ def shipping_priority(
     value-identical; same rationale as :func:`_orders_per_customer`), so
     that join moves one row per order, not one per line item. It remains
     the one real shuffle; with both tables bucketed by orderkey
-    (sources/bucketing.py) it too becomes exchange-free. Revenue sums in
-    integer cents*1e2 (pc * (100-dc)) so the result is bit-identical
-    across engines and partitionings; top-k is TakeOrdered (no global
-    sort).
+    (sources/bucketing.py:write_q5_layout) it too becomes exchange-free.
+    Revenue sums in integer cents*1e2 (pc * (100-dc)) so the result is
+    bit-identical across engines and partitionings; top-k is TakeOrdered
+    (no global sort).
+
+    Over the orderkey layout the gated path drops the SHUFFLE_HASH hint
+    (the co-bucketed merge needs no shuffle to skip), and the declined
+    path joins the facts FIRST: a custkey exchange on orders before the
+    fact join would discard its buckets. sf100 warm fresh-JVM on the
+    layout: 15.4 s (pre-aggregated) -> 7.65 s (gate + join-first).
     """
+    bucketed = bucketed_on(orders, "o_orderkey") and bucketed_on(
+        lineitem, "l_orderkey"
+    )
     cust = customer.where(F.col("c_mktsegment") == segment).select("c_custkey")
     ords = orders.where(F.col("o_orderdate") < F.lit(cutoff).cast("timestamp"))
     disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    # r15: the JOIN-FIRST rewrite (measured on the layout form, same
+    # r15: the JOIN-FIRST rewrite (measured over the orderkey layout, same
     # selectivity argument without it): Q3's shipdate filter leaves
     # ~1.1x compression for the per-order pre-aggregation, so the
     # 134M-group hash table was overhead on rows that mostly lose the
@@ -387,10 +414,12 @@ def shipping_priority(
             F.broadcast(cust), ords["o_custkey"] == cust["c_custkey"],
             "left_semi",
         ).select("o_orderkey", "o_orderdate", "o_orderpriority")
+        if not bucketed:
+            oc = oc.hint("shuffle_hash")
         li = lineitem.where(
             F.col("l_shipdate") > F.lit(cutoff).cast("timestamp")
         ).select("l_orderkey", "l_extendedprice", "l_discount")
-        j = oc.hint("shuffle_hash").join(
+        j = oc.join(
             li, oc["o_orderkey"] == li["l_orderkey"]
         ).select(
             "l_orderkey", "o_orderdate", "o_orderpriority",
@@ -410,9 +439,12 @@ def shipping_priority(
         .groupBy("l_orderkey")
         .agg(F.sum(disc_pc).alias("rev_pc"))
     )
-    j = ords.join(cust, ords["o_custkey"] == cust["c_custkey"]).join(
-        li, ords["o_orderkey"] == li["l_orderkey"]
-    )
+    by_cust = ords["o_custkey"] == cust["c_custkey"]
+    by_order = ords["o_orderkey"] == li["l_orderkey"]
+    if bucketed:
+        j = ords.join(li, by_order).join(cust, by_cust)
+    else:
+        j = ords.join(cust, by_cust).join(li, by_order)
     return (
         j.select(
             "l_orderkey",
@@ -543,7 +575,22 @@ def local_supplier_revenue(
     (forcing it would still die at 100x). The customer-supplier
     co-nationality predicate rides ON the supplier join
     (c_nationkey = s_nationkey), not as a post-filter.
+
+    Over the orderkey layout (sources/bucketing.py:write_q5_layout) the
+    facts join FIRST. The selectivity-first order puts a custkey shuffle
+    on orders before the fact join, and Catalyst then disables the
+    bucketed scan ("Bucketed: false, disabled by query planner").
+    Fact-first, the orderkey join is single-key, bucket-local and
+    sorted: zero Exchange and zero Sort on either fact. When the
+    region's customer KEY slice fits the gate it semi-joins into orders
+    before the merge and broadcasts into the pair join. sf100 warm
+    fresh-JVM on the layout: 16.08 s (wide-slice join) -> 7.70 s.
     """
+    from pyspark import StorageLevel
+
+    bucketed = bucketed_on(orders, "o_orderkey") and bucketed_on(
+        lineitem, "l_orderkey"
+    )
     disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
     # one bounded broadcast dim: nations of the target region (≤25 rows)
     nat = (
@@ -553,85 +600,10 @@ def local_supplier_revenue(
         )
         .select("n_nationkey", "n_name")
     )
-    # The region-filtered customer slice rides the cardinality gate
-    # (plans/broadcast_gate.py, r14): ~1/|regions| of customer fits the
-    # budget through sf10 (sf10: ~300k rows, ~26 MB est), which removes
-    # the o_custkey shuffle of ORDERS entirely; at sf100 the ~3M-row
-    # slice (~264 MB est) exceeds the 256 MiB budget and the plan falls
-    # back to exactly the r13 keyed-shuffle form. The gate never forces
-    # a data-scaled broadcast (the 100x failure the module docstring
-    # prices); A/B in BASELINE.md r14.
-    # r16 optimization round: the wide slice is referenced twice per
-    # run (the gate's count action + the join broadcast) and each
-    # reference re-ran the customer scan + dim chain; persist it so the
-    # gate's count doubles as the cache-warmer (guide §5). Bounded: the
-    # 1-of-|regions| slice is exactly what the broadcast budget admits;
-    # lives inside one query evaluation (ContextCleaner reclaims it).
-    from pyspark import StorageLevel
 
-    cust_wide = customer.join(
-        F.broadcast(nat), customer["c_nationkey"] == nat["n_nationkey"]
-    ).select("c_custkey", "c_nationkey", "n_name").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # r15: when the WIDE slice exceeds the budget, the two-bigint KEY
-    # projection usually still fits (~40 B/row vs ~88; sf100 ~120 MB) —
-    # the layout form's composition, minus the layout: broadcast the
-    # keys, group by the bounded s_nationkey, attach n_name after the
-    # aggregate (1:1 on nationkey). This removes BOTH fact shuffles the
-    # r13 fallback paid (orders on custkey, then oc+li on orderkey
-    # becomes one orderkey join of pre-filtered sides). Only when even
-    # the key slice is declined does the keyed-shuffle form run.
-    cust_keys = customer.join(
-        F.broadcast(nat), customer["c_nationkey"] == nat["n_nationkey"]
-    ).select("c_custkey", "c_nationkey")
-    wide_fits = fits(cust_wide)
-    cust = F.broadcast(cust_wide) if wide_fits else cust_wide
-    # r15: the r13 form joined the RAW 2-column supplier scan (honest
-    # file estimate; the supplier⋈nation subtree's product-inflated
-    # estimate forced a pointless SMJ pair) — but past sf10 the raw
-    # scan exceeds the static broadcast threshold too, and the
-    # lineitem side shuffled all 600M rows into that join (measured
-    # 41-44 s warm at sf100 regardless of the customer-side plan). The
-    # cardinality gate resolves the same estimate problem by COUNTING:
-    # the REGION-filtered supplier slice (~1/|regions|, single-digit
-    # MB at sf100) broadcasts, which both kills the supplier shuffle
-    # and prunes lineitem to the region's lines map-side before its
-    # one orderkey shuffle. Region-filtering supplier early is
-    # semantics-preserving: the final c_nationkey = s_nationkey pair
-    # condition already constrains suppliers to the region's nations.
-    supp = supplier.join(
-        F.broadcast(nat.select("n_nationkey")),
-        supplier["s_nationkey"] == nat["n_nationkey"],
-    ).select("s_suppkey", "s_nationkey")
-    li = lineitem.join(
-        broadcast_if_fits(supp), lineitem["l_suppkey"] == supp["s_suppkey"]
-    ).select("l_orderkey", "l_extendedprice", "l_discount", "s_nationkey")
-    # SHUFFLE_HASH on the region-filtered orders side of the fact join
-    # (r13): the SMJ here sorted all of lineitem just to merge; hashing
-    # the ~1/R orders slice instead skips both Sorts. A/B (value-equal
-    # asserted): sf1 1.21->1.12 s, sf10 5.0->3.6 s. Scale-safe: the
-    # build side shuffles on orderkey across autoscale_shuffle's
-    # input-sized partition count, so per-task build state is bounded by
-    # BYTES_PER_SHUFFLE_PARTITION at any input volume, and AQE skew
-    # splitting applies to SHJ as it does to SMJ.
-    if not wide_fits and fits(cust_keys):
-        # the wide slice is over budget but its two-bigint KEY
-        # projection fits: broadcast the keys, group by the bounded
-        # s_nationkey, attach n_name after the aggregate — the r13
-        # fallback's custkey shuffle of orders vanishes.
-        # r17 (ADVICE r16): this path never references cust_wide again —
-        # release it instead of holding the ~sf100-scale slice until GC
-        # (mirrors the bucketed sibling's declined-path unpersist).
-        cust_wide.unpersist()
-        oc = orders.join(
-            F.broadcast(cust_keys), orders["o_custkey"] == cust_keys["c_custkey"]
-        ).select("o_orderkey", "c_nationkey").hint("shuffle_hash")
-        j = oc.join(
-            li,
-            (oc["o_orderkey"] == li["l_orderkey"])
-            & (oc["c_nationkey"] == li["s_nationkey"]),
-        )
+    def by_nationkey(j: DataFrame) -> DataFrame:
+        # group by the bounded s_nationkey and attach n_name after the
+        # aggregate (1:1 on nationkey, value-identical to grouping by name)
         agg = j.groupBy("s_nationkey").agg(
             (F.sum(disc_pc) / 10000.0).alias("revenue")
         )
@@ -640,6 +612,109 @@ def local_supplier_revenue(
             .select("n_name", "revenue")
             .orderBy(F.desc("revenue"), F.asc("n_name"))
         )
+
+    def by_name(j: DataFrame) -> DataFrame:
+        return (
+            j.groupBy("n_name")
+            .agg((F.sum(disc_pc) / 10000.0).alias("revenue"))
+            .orderBy(F.desc("revenue"), F.asc("n_name"))
+        )
+
+    def region_customers(*cols: str) -> DataFrame:
+        return customer.join(
+            F.broadcast(nat), customer["c_nationkey"] == nat["n_nationkey"]
+        ).select(*cols)
+
+    # The region-filtered supplier slice (~1/|regions|, single-digit MB
+    # at sf100) rides the cardinality gate: broadcast, it kills the
+    # supplier shuffle and prunes lineitem to the region's lines
+    # map-side before its one orderkey join (the raw supplier scan
+    # exceeds the static threshold past sf10, and lineitem then shuffled
+    # all 600M rows into that join: 41-44 s warm at sf100).
+    # Region-filtering supplier early is semantics-preserving: the final
+    # c_nationkey = s_nationkey pair condition already constrains
+    # suppliers to the region's nations.
+    supp = supplier.join(
+        F.broadcast(nat.select("n_nationkey")),
+        supplier["s_nationkey"] == nat["n_nationkey"],
+    ).select("s_suppkey", "s_nationkey")
+    li = lineitem.join(
+        broadcast_if_fits(supp), lineitem["l_suppkey"] == supp["s_suppkey"]
+    ).select("l_orderkey", "l_extendedprice", "l_discount", "s_nationkey")
+
+    if bucketed:
+        # the key slice is referenced three times per run (the gate's
+        # count, the orders semi, the pair join): persist it so the
+        # count warms the cache both broadcasts read
+        cust_keys = region_customers("c_custkey", "c_nationkey").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        if fits(cust_keys):
+            ords = orders.join(
+                F.broadcast(cust_keys.select("c_custkey")),
+                orders["o_custkey"] == F.col("c_custkey"),
+                "left_semi",
+            )
+            facts = ords.join(
+                li, ords["o_orderkey"] == li["l_orderkey"]
+            ).select("o_custkey", "s_nationkey", "l_extendedprice", "l_discount")
+            j = facts.join(
+                F.broadcast(cust_keys),
+                (facts["o_custkey"] == cust_keys["c_custkey"])
+                & (facts["s_nationkey"] == cust_keys["c_nationkey"]),
+            )
+            return defer_release(by_nationkey(j), cust_keys)
+        cust_keys.unpersist()
+        facts = orders.join(
+            li, orders["o_orderkey"] == li["l_orderkey"]
+        ).select("o_custkey", "s_nationkey", "l_extendedprice", "l_discount")
+        cust = region_customers("c_custkey", "c_nationkey", "n_name")
+        return by_name(
+            facts.join(
+                cust,
+                (facts["o_custkey"] == cust["c_custkey"])
+                & (facts["s_nationkey"] == cust["c_nationkey"]),
+            )
+        )
+
+    # The region-filtered customer slice rides the cardinality gate
+    # (plans/broadcast_gate.py): ~1/|regions| of customer fits the
+    # budget through sf10 (~300k rows, ~26 MB est), which removes the
+    # o_custkey shuffle of ORDERS entirely; at sf100 the ~3M-row slice
+    # (~264 MB est) exceeds the 256 MiB budget. It is referenced twice
+    # per run (the gate's count + the join broadcast), so it is
+    # persisted and the count doubles as the cache-warmer. Bounded: the
+    # 1-of-|regions| slice is what the broadcast budget admits.
+    cust_wide = region_customers("c_custkey", "c_nationkey", "n_name").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    wide_fits = fits(cust_wide)
+    # SHUFFLE_HASH on the region-filtered orders side of the fact join:
+    # the SMJ here sorted all of lineitem just to merge; hashing the
+    # ~1/R orders slice instead skips both Sorts. A/B (value-equal
+    # asserted): sf1 1.21->1.12 s, sf10 5.0->3.6 s. Scale-safe: the
+    # build side shuffles on orderkey across autoscale_shuffle's
+    # input-sized partition count, so per-task build state is bounded by
+    # BYTES_PER_SHUFFLE_PARTITION at any input volume, and AQE skew
+    # splitting applies to SHJ as it does to SMJ.
+    cust_keys = region_customers("c_custkey", "c_nationkey")
+    if not wide_fits and fits(cust_keys):
+        # the wide slice is over budget but its two-bigint KEY projection
+        # (~40 B/row vs ~88; sf100 ~120 MB) fits: broadcast the keys —
+        # the custkey shuffle of orders vanishes. This path never reads
+        # the wide slice, so release it now.
+        cust_wide.unpersist()
+        oc = orders.join(
+            F.broadcast(cust_keys), orders["o_custkey"] == cust_keys["c_custkey"]
+        ).select("o_orderkey", "c_nationkey").hint("shuffle_hash")
+        return by_nationkey(
+            oc.join(
+                li,
+                (oc["o_orderkey"] == li["l_orderkey"])
+                & (oc["c_nationkey"] == li["s_nationkey"]),
+            )
+        )
+    cust = F.broadcast(cust_wide) if wide_fits else cust_wide
     oc = orders.join(cust, orders["o_custkey"] == cust["c_custkey"]).hint(
         "shuffle_hash"
     )
@@ -649,440 +724,8 @@ def local_supplier_revenue(
         & (oc["c_nationkey"] == li["s_nationkey"]),
     )
     # the returned plan reads the cached slice — tag it for deterministic
-    # release by the caller after its action (r17, VERDICT r16 #3)
-    return defer_release(
-        j.groupBy("n_name")
-        .agg((F.sum(disc_pc) / 10000.0).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("n_name")),
-        cust_wide,
-    )
-
-
-def local_supplier_revenue_bucketed(
-    spark,
-    orders_table: str,
-    lineitem_table: str,
-    region: DataFrame,
-    nation: DataFrame,
-    customer: DataFrame,
-    supplier: DataFrame,
-    region_name: str = "ASIA",
-) -> DataFrame:
-    """:func:`local_supplier_revenue` on a pre-bucketed fact LAYOUT — the
-    storage-side answer to Q5's residual gap (VERDICT r7 #4: join order is
-    already optimal, the remaining 10.8x at sf10 was the orderkey shuffle
-    of both facts).
-
-    ``orders_table`` / ``lineitem_table`` are catalog tables written by
-    :func:`compute_histogram_spark.sources.bucketing.write_q5_layout`:
-    same bucket count on o_orderkey / l_orderkey, sortBy the key, one file
-    per bucket.
-
-    The join ORDER deliberately differs from the raw-parquet plan: facts
-    join FIRST. Putting the customer dim-join before the fact join (the
-    raw plan's selectivity-first order) makes the custkey shuffle land on
-    orders BEFORE its bucketing can pay off — Catalyst even disables the
-    bucketed scan outright ("Bucketed: false, disabled by query planner")
-    because no operator between the scan and that shuffle uses it. Fact-
-    first, the orderkey join is single-key, bucket-local and sorted: ZERO
-    Exchange, ZERO Sort on either fact (plan-asserted in
-    tests/test_bucketing.py). What shuffles afterwards is the join OUTPUT
-    projected to four narrow columns (custkey, s_nationkey, price,
-    discount) — strictly fewer bytes than the raw plan's two fact
-    shuffles — and AQE still broadcasts the region-filtered customer when
-    it fits. At 100 TB this is the layout fact tables live in anyway;
-    the write-once pre-shuffle amortizes over every downstream
-    orderkey-equi-join and orderkey-groupBy. Results are value-identical
-    to the raw-parquet plan (same oracle).
-    """
-    disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    nat = (
-        nation.join(
-            F.broadcast(region.where(F.col("r_name") == region_name)),
-            nation["n_regionkey"] == region["r_regionkey"],
-        )
-        .select("n_nationkey", "n_name")
-    )
-    # region selectivity rides the SUPPLIER dim here (co-nationality
-    # forces s_nationkey into the region), so the 1-of-R filter reaches
-    # lineitem map-side BEFORE the fact join — the fact-first order keeps
-    # the bucketing AND the selectivity-first lesson
-    supp = supplier.join(
-        F.broadcast(nat.select("n_nationkey")),
-        supplier["s_nationkey"] == nat["n_nationkey"],
-    ).select("s_suppkey", "s_nationkey")
-    li = lineitem.join(
-        F.broadcast(supp), lineitem["l_suppkey"] == supp["s_suppkey"]
-    ).select("l_orderkey", "l_extendedprice", "l_discount", "s_nationkey")
-    # the bucket-local fact join: single key, co-bucketed, co-sorted
-    # r15, GATE + LAYOUT COMPOSITION: the region's customer slice with
-    # n_name attached is ~88 B/row and legitimately exceeds the 256 MiB
-    # gate budget at sf100 (r14 adjudication) — but the JOIN only needs
-    # the two bigint KEYS (~40 B/row, ~120 MB at sf100). Gate the
-    # narrow key slice; when it fits:
-    #  - its custkey projection SEMI-joins into orders BEFORE the
-    #    bucket-local merge (broadcast semi preserves the bucketing),
-    #    so the merge emits only region-customer orders (~1/|regions|)
-    #    and the pair join downstream probes ~24M rows, not ~120M;
-    #  - the custkey pair join is a map-side broadcast;
-    #  - the aggregate groups by the bounded s_nationkey and n_name
-    #    attaches AFTER the agg from the broadcast nation slice (1:1
-    #    on nationkey — value-identical to grouping by name).
-    # Measured warm fresh-JVM at sf100: 16.08 (r14 layout form) ->
-    # 13.12 (keys broadcast alone) -> 7.70 s (plus orders semi,
-    # 1.65x the comparator). Gate declined -> the r13 shape: AQE
-    # picks the strategy for the wide slice join.
-    # r16 optimization round: the key slice is referenced THREE times
-    # per run (the gate's count action, the orders semi broadcast, the
-    # pair-join broadcast) and each reference re-ran the customer scan
-    # + dim chain. Persist it (guide §5 cache-when-reused): the gate's
-    # count becomes the cache-warmer and both broadcasts read the
-    # cached rows. Bounded: the 1-of-|regions| key projection is the
-    # same ~40 B/row slice the broadcast budget already admits
-    # (~120 MB at sf100); lives inside one query evaluation, the
-    # ContextCleaner drops it with the DataFrame. sf10 solo probe
-    # (fresh JVM, warm-min of 4): layout form 1.04 -> 0.96 s, plain
-    # form 1.41 -> 1.24 s.
-    from pyspark import StorageLevel
-
-    cust_keys = customer.join(
-        F.broadcast(nat), customer["c_nationkey"] == nat["n_nationkey"]
-    ).select("c_custkey", "c_nationkey").persist(StorageLevel.MEMORY_AND_DISK)
-    if fits(cust_keys):
-        ords = orders.join(
-            F.broadcast(cust_keys.select("c_custkey")),
-            orders["o_custkey"] == F.col("c_custkey"),
-            "left_semi",
-        )
-        facts = ords.join(
-            li, ords["o_orderkey"] == li["l_orderkey"]
-        ).select("o_custkey", "s_nationkey", "l_extendedprice", "l_discount")
-        agg = (
-            facts.join(
-                F.broadcast(cust_keys),
-                (facts["o_custkey"] == cust_keys["c_custkey"])
-                & (facts["s_nationkey"] == cust_keys["c_nationkey"]),
-            )
-            .groupBy("s_nationkey")
-            .agg((F.sum(disc_pc) / 10000.0).alias("revenue"))
-        )
-        # tag the cached key slice for deterministic release by the
-        # caller after its action (r17, VERDICT r16 #3)
-        return defer_release(
-            agg.join(F.broadcast(nat), agg["s_nationkey"] == nat["n_nationkey"])
-            .select("n_name", "revenue")
-            .orderBy(F.desc("revenue"), F.asc("n_name")),
-            cust_keys,
-        )
-    # gate declined: the cached key slice is not used on this path —
-    # release it rather than hold ~sf100-scale rows for nothing
-    cust_keys.unpersist()
-    facts = orders.join(
-        li, orders["o_orderkey"] == li["l_orderkey"]
-    ).select("o_custkey", "s_nationkey", "l_extendedprice", "l_discount")
-    cust = customer.join(
-        F.broadcast(nat), customer["c_nationkey"] == nat["n_nationkey"]
-    ).select("c_custkey", "c_nationkey", "n_name")
-    j = facts.join(
-        cust,
-        (facts["o_custkey"] == cust["c_custkey"])
-        & (facts["s_nationkey"] == cust["c_nationkey"]),
-    )
-    return (
-        j.groupBy("n_name")
-        .agg((F.sum(disc_pc) / 10000.0).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
-    )
-
-
-def _region_star_bucketed(spark, orders_table, customer_table, region, nation):
-    """Shared prefix of the custkey-layout star aggs (r12, the layout
-    attack on the sf10 orders-star weak class — VERDICT r11 #2): orders
-    and customer co-bucketed on custkey (sources/bucketing.py:
-    write_custkey_layout) make BOTH the per-customer pre-aggregation and
-    the customer join bucket-local — zero fact-side Exchange; the only
-    shuffle left is the bounded post-dim aggregate (≤ |nations| groups).
-    Value-identical to the raw-parquet plans (same oracles)."""
-    orders = spark.table(orders_table)
-    customer = spark.table(customer_table)
-    # r14: layouts written with the derived tp_c column aggregate the
-    # STORED cents (same round(x*100) bigints the expression derives —
-    # value-exact by construction); older layouts keep the expression
-    per_cust = (
-        orders.groupBy("o_custkey").agg(
-            F.sum("tp_c").alias("rev_c"), F.count(F.lit(1)).alias("n_o")
-        )
-        if "tp_c" in orders.columns
-        else _orders_per_customer(orders)
-    )
-    return (
-        per_cust
-        .join(customer, F.col("o_custkey") == customer["c_custkey"])
-        .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-    )
-
-
-def region_revenue_bucketed(
-    spark, orders_table: str, customer_table: str,
-    region: DataFrame, nation: DataFrame,
-) -> DataFrame:
-    """:func:`region_revenue` on the write-once custkey fact layout."""
-    return (
-        _region_star_bucketed(spark, orders_table, customer_table, region, nation)
-        .groupBy("r_name", "n_name")
-        .agg(
-            (F.sum("rev_c") / 100.0).alias("revenue"),
-            F.sum("n_o").alias("n_orders"),
-        )
-        .orderBy("r_name", "n_name")
-    )
-
-
-def rollup_revenue_bucketed(
-    spark, orders_table: str, customer_table: str,
-    region: DataFrame, nation: DataFrame,
-) -> DataFrame:
-    """:func:`rollup_revenue` on the write-once custkey fact layout."""
-    return (
-        _region_star_bucketed(spark, orders_table, customer_table, region, nation)
-        .rollup("r_name", "n_name")
-        .agg(
-            (F.sum("rev_c") / 100.0).alias("revenue"),
-            F.sum("n_o").alias("n_orders"),
-        )
-        .select(
-            F.coalesce("r_name", F.lit("ALL")).alias("r_name"),
-            F.coalesce("n_name", F.lit("ALL")).alias("n_name"),
-            "revenue",
-            "n_orders",
-        )
-        .orderBy("r_name", "n_name")
-    )
-
-
-def shipping_priority_bucketed(
-    spark,
-    orders_table: str,
-    lineitem_table: str,
-    customer: DataFrame,
-    segment: str = "BUILDING",
-    cutoff: str = "1998-01-01",
-    k: int = 10,
-) -> DataFrame:
-    """:func:`shipping_priority` on the orderkey fact layout (the SAME
-    write-once tables Q5 uses — write_q5_layout): the lineitem revenue
-    pre-aggregation (groupBy l_orderkey) runs bucket-local and the
-    orders⋈lineitem join is co-bucketed and co-sorted — zero orderkey
-    Exchange (plan-asserted in tests/test_bucketing.py; top-k is
-    TakeOrdered, no sort shuffle).
-
-    r15, GATE + LAYOUT COMPOSITION, JOIN-FIRST (the composition that
-    took Q7 to 0.90x in r14, plus a measured inversion of the r13
-    pre-aggregation): the segment slice is a single-bigint-column
-    projection of customer (~1/|segments| of the dim; sf100 ~3M rows,
-    ~72 MB est), so it rides the cardinality gate and broadcasts as a
-    SEMI join into orders BEFORE the fact join — broadcast semi
-    preserves orders' bucketed distribution, so zero orderkey Exchange.
-
-    The r13 lineitem pre-aggregation is DROPPED on this path, by sf100
-    measurement: Q3's shipdate filter keeps ~150M of 600M lines but
-    ~134M distinct orderkeys — compression ~1.1x, so the 134M-group
-    hash table was pure overhead AND aggregated lines for every
-    orderkey when only ~10% survive the segment+date semi-join.
-    Joining first, the bucket-local merge emits ~13M rows and the
-    aggregate hashes those alone: 15.4 -> 13.7 s (composition only)
-    -> 7.65 s (join-first), warm fresh-JVM. Pre-aggregation stays
-    correct for HIGH-compression shapes (Q4/Q18's full-table
-    per-order aggs); this records that it is filter-selectivity-,
-    not shape-, driven. Gate declined (the slice is data-scaled) ->
-    the r13 pre-agg form: without the broadcast, a custkey exchange
-    would land on orders before the bucketing pays off."""
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    cust = customer.where(F.col("c_mktsegment") == segment).select("c_custkey")
-    disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    ords = orders.where(F.col("o_orderdate") < F.lit(cutoff).cast("timestamp"))
-    if fits(cust):
-        ords = ords.join(
-            F.broadcast(cust), ords["o_custkey"] == cust["c_custkey"],
-            "left_semi",
-        )
-        li = lineitem.where(
-            F.col("l_shipdate") > F.lit(cutoff).cast("timestamp")
-        ).select("l_orderkey", "l_extendedprice", "l_discount")
-        j = ords.join(li, ords["o_orderkey"] == li["l_orderkey"]).select(
-            "l_orderkey", "o_orderdate", "o_orderpriority",
-            disc_pc.alias("pc"),
-        )
-        return (
-            j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg((F.sum("pc") / 10000.0).alias("revenue"))
-            .select(
-                "l_orderkey", "o_orderdate", "o_orderpriority", "revenue"
-            )
-            .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-            .limit(k)
-        )
-    li = (
-        lineitem.where(F.col("l_shipdate") > F.lit(cutoff).cast("timestamp"))
-        .groupBy("l_orderkey")
-        .agg(F.sum(disc_pc).alias("rev_pc"))
-    )
-    facts = ords.join(li, ords["o_orderkey"] == li["l_orderkey"]).select(
-        "l_orderkey", "o_orderdate", "o_orderpriority", "o_custkey", "rev_pc"
-    )
-    j = facts.join(cust, facts["o_custkey"] == cust["c_custkey"])
-    return (
-        j.select(
-            "l_orderkey",
-            "o_orderdate",
-            "o_orderpriority",
-            (F.col("rev_pc") / 10000.0).alias("revenue"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(k)
-    )
-
-
-def late_order_priority_bucketed(
-    spark, orders_table: str, lineitem_table: str
-) -> DataFrame:
-    """:func:`late_order_priority` on the orderkey fact layout: the
-    max-shipdate pre-aggregation and the equi-join are both bucket-local
-    — the only Exchange left is the final |priorities|-group aggregate."""
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    last_ship = lineitem.groupBy("l_orderkey").agg(
-        F.max("l_shipdate").alias("max_ship")
-    )
-    j = orders.join(last_ship, orders["o_orderkey"] == last_ship["l_orderkey"])
-    return (
-        j.where(F.col("max_ship") > F.col("o_orderdate"))
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def waiting_suppliers_bucketed(
-    spark, orders_table: str, lineitem_table: str, supplier: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """:func:`waiting_suppliers` (Q21) on the SAME write-once orderkey
-    layout as Q3/Q4/Q5 — its seventh member, and the one whose plan the
-    layout collapses the furthest: the fact-fact join is co-bucketed,
-    and every downstream step clusters on an orderkey SUPERSET —
-    groupBy(l_orderkey, l_suppkey), the per-order window and the
-    qualifying filter are all satisfied by HashPartitioning(orderkey)
-    (the same subset-key-clustering rule the user_id events layout
-    exploits) — so the ONLY data-scaled Exchange left in Q21 is the
-    final supplier-bounded numwait count.
-
-    r16 optimization round: same diamond collapse as the plain form —
-    the per-order stats are an unordered window over ``per`` instead of
-    a second aggregation + semi-join-back, so the co-bucketed join and
-    the (orderkey, suppkey) aggregate execute ONCE instead of twice
-    (the before-plan scanned both layout tables twice)."""
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    lo = lineitem.join(
-        orders.select("o_orderkey", "o_orderdate"),
-        lineitem["l_orderkey"] == orders["o_orderkey"],
-    )
-    per = lo.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("l_shipdate").alias("ms"),
-        F.max("o_orderdate").alias("od"),
-    ).withColumn("late", (F.col("ms") > F.col("od")).cast("int"))
-    w = Window.partitionBy("l_orderkey")
-    qual = (
-        per.withColumn("n_supp", F.count(F.lit(1)).over(w))
-        .withColumn("n_late", F.sum("late").over(w))
-        .where(
-            (F.col("late") == 1)
-            & (F.col("n_supp") >= 2)
-            & (F.col("n_late") == 1)
-        )
-    )
-    counts = qual.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).alias("numwait")
-    )
-    return (
-        counts.join(supplier, counts["l_suppkey"] == supplier["s_suppkey"])
-        .select("s_name", "numwait")
-        .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(k)
-    )
-
-
-def large_volume_customers_bucketed(
-    spark, orders_table: str, lineitem_table: str, customer: DataFrame,
-    min_qty: int = 300, k: int = 10,
-) -> DataFrame:
-    """:func:`large_volume_customers` (Q18) on the shared write-once
-    orderkey layout — eighth member of the family (VERDICT r13 #5). Both
-    orderkey steps ride the layout: the HAVING pre-aggregate
-    groupBy(l_orderkey) clusters on the bucket key (no Exchange) and the
-    orders⋈big join is co-bucketed (no Exchange), so the only data-
-    scaled movement left is the customer join against the tiny HAVING
-    survivors (AQE broadcasts them)."""
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    big = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.sum(cents("l_quantity")).alias("qty_c"))
-        .where(F.col("qty_c") > min_qty * 100)
-    )
-    j = orders.join(big, orders["o_orderkey"] == big["l_orderkey"]).join(
-        customer, orders["o_custkey"] == customer["c_custkey"]
-    )
-    return (
-        j.select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            (cents("o_totalprice") / 100.0).alias("o_totalprice"),
-            (F.col("qty_c") / 100.0).alias("total_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(k)
-    )
-
-
-def returned_item_customers_bucketed(
-    spark, orders_table: str, lineitem_table: str,
-    customer: DataFrame, nation: DataFrame,
-    start: str = "1997-01-01", end: str = "1998-01-01", k: int = 20,
-) -> DataFrame:
-    """:func:`returned_item_customers` (Q10) on the shared write-once
-    orderkey layout — ninth member of the family (VERDICT r13 #5). The
-    returns/date filters push into the bucketed scans and the fact-fact
-    orderkey join is co-bucketed (zero fact Exchange); after the
-    customer join the rows are already clustered on custkey, so the
-    final groupBy(c_custkey, ...) clusters on a superset of that key
-    and the only shuffle is whatever the customer join itself needs."""
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    ords = orders.where(
-        (F.col("o_orderdate") >= F.lit(start).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(end).cast("timestamp"))
-    )
-    li = lineitem.where(F.col("l_returnflag") == "R")
-    disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    j = (
-        li.join(ords, li["l_orderkey"] == ords["o_orderkey"])
-        .join(customer, ords["o_custkey"] == customer["c_custkey"])
-        .join(F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"])
-    )
-    return (
-        j.groupBy("c_custkey", "c_name", "n_name")
-        .agg((F.sum(disc_pc) / 10000.0).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(k)
-    )
+    # release by the caller after its action
+    return defer_release(by_name(j), cust_wide)
 
 
 def promo_revenue_share(
@@ -1097,47 +740,23 @@ def promo_revenue_share(
     numerator and denominator in a single pass, no second scan. The share
     divides two exact integer cents*1e2 sums, so the double is identical
     cross-engine.
+
+    Over the partkey layout (sources/bucketing.py:write_partkey_layout)
+    part is NOT force-broadcast: |part| grows with the fact (2M rows at
+    sf10), and co-bucketed on partkey the join is a bucket-local merge
+    with no hash-table build and no exchange. sf10 A/B (value-equal
+    asserted): warm 1.21 -> 1.08 s.
     """
+    co_bucketed = bucketed_on(lineitem, "l_partkey") and bucketed_on(
+        part, "p_partkey"
+    )
     li = lineitem.where(
         (F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
         & (F.col("l_shipdate") < F.lit(end).cast("timestamp"))
     )
     disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    j = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-    return j.agg(
-        (
-            F.sum(F.when(F.col("p_type") == "PROMO", disc_pc).otherwise(F.lit(0)))
-            * 100.0
-            / F.sum(disc_pc)
-        ).alias("promo_pct"),
-        (F.sum(disc_pc) / 10000.0).alias("total_revenue"),
-    )
-
-
-def promo_revenue_share_bucketed(
-    spark,
-    lineitem_table: str,
-    part_table: str,
-    start: str = "1997-01-01",
-    end: str = "1997-04-01",
-) -> DataFrame:
-    """:func:`promo_revenue_share` (Q14) on the write-once PARTKEY
-    layout — its fourth member (r16 optimization round). The plain form
-    force-broadcasts the FULL part dimension (|part| grows with the
-    fact: 2M rows / ~60 MB pruned at sf10, 20M at sf100 — a per-run
-    hash-table build that dominates the 3-month fact slice it probes).
-    Co-bucketed on partkey the join is bucket-local sort-merge: no
-    broadcast build, no exchange, and the single-row aggregate is the
-    only post-join step. sf10 A/B (value-equal asserted): warm
-    1.21 -> 1.08 s (-11%); the win grows with |part| by construction."""
-    lineitem = spark.table(lineitem_table)
-    part = spark.table(part_table)
-    li = lineitem.where(
-        (F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(end).cast("timestamp"))
-    )
-    disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    j = li.join(part, li["l_partkey"] == part["p_partkey"])
+    dim = part if co_bucketed else F.broadcast(part)
+    j = li.join(dim, li["l_partkey"] == part["p_partkey"])
     return j.agg(
         (
             F.sum(F.when(F.col("p_type") == "PROMO", disc_pc).otherwise(F.lit(0)))
@@ -1707,6 +1326,11 @@ def market_share(
     without it BOTH fact joins shuffle 600M rows at sf100 (92.9 s,
     tools/tpch_sweep_sf100.json). The orders semi-join stays a keyed
     shuffle on purpose: it is data-scaled (~1/|regions| of orders).
+
+    Over the orderkey layout the lineitem-orders join, the one
+    data-scaled exchange left once every slice is gated, is a
+    bucket-local merge. sf100 warm fresh-JVM: 17.05 s (gated plain) ->
+    12.38 s on the layout.
     """
     p = broadcast_if_fits(
         part.where(F.col("p_type") == p_type).select("p_partkey")
@@ -1723,7 +1347,7 @@ def market_share(
     # The market-region customer key slice rides the gate too (sf100:
     # ~3M single-key rows, ~72 MB est): broadcasting it makes the
     # orders semi-join map-side, so orders is never shuffled on custkey.
-    mkt_c = broadcast_if_fits(
+    mkt_slice = (
         customer.join(
             F.broadcast(nation),
             customer["c_nationkey"] == nation["n_nationkey"],
@@ -1732,6 +1356,7 @@ def market_share(
         .where(F.col("r_name") == market_region)
         .select("c_custkey")
     )
+    mkt_c = broadcast_if_fits(mkt_slice)
     # The fact join keeps an explicit hint: without one the static
     # estimator broadcasts the (orders ⋈ market-customers) subtree — a
     # DATA-SCALED intermediate (≈1/|regions| of orders) hiding a
@@ -1740,14 +1365,23 @@ def market_share(
     # shuffle on orderkey, but the ~1/R orders slice hash-builds
     # instead of BOTH sides sorting — per-task build state is bounded
     # by the input-scaled partition count, and AQE skew-splitting
-    # applies to SHJ as to SMJ.
+    # applies to SHJ as to SMJ. Over the orderkey layout the merge is
+    # bucket-local and needs no hint while the slice broadcasts (the
+    # semi join then keeps the buckets); when the gate declines it, a
+    # MERGE hint pins the bucket-local sort-merge against that misplan.
     o = orders.join(
         mkt_c, orders["o_custkey"] == mkt_c["c_custkey"], "left_semi"
     ).select("o_orderkey", "o_orderdate")
+    if not (
+        bucketed_on(orders, "o_orderkey") and bucketed_on(lineitem, "l_orderkey")
+    ):
+        o = o.hint("shuffle_hash")
+    elif not fits(mkt_slice):
+        o = o.hint("merge")
     j = (
         lineitem.join(p, lineitem["l_partkey"] == p["p_partkey"])
         .join(geo_s, lineitem["l_suppkey"] == geo_s["s_suppkey"])
-        .join(o.hint("shuffle_hash"), lineitem["l_orderkey"] == o["o_orderkey"])
+        .join(o, lineitem["l_orderkey"] == o["o_orderkey"])
     )
     disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
     num = F.sum(
@@ -2065,6 +1699,12 @@ def supplier_part_counts(
     brand<>-filtered dim is ~80 MB at sf10) skips both SMJ sorts:
     9.98 -> 7.22 s (-28%); class_id without the hint 8.50 s, hint
     without class_id a wash (10.02) — both levers carry.
+
+    Over the partkey layout the part join is a bucket-local merge: both
+    broadcast prunes keep the fact's bucketing and sort order, so the
+    scan-to-join pipeline has zero Exchange and zero Sort, and the hint
+    (which exists to skip SMJ sorts) is dropped. The one shuffle left
+    is the distinct (class_id, suppkey) pair exchange.
     """
     # the excluded-supplier key slice rides the cardinality gate (r14):
     # the anti join otherwise plans against the pre-filter supplier file
@@ -2100,59 +1740,10 @@ def supplier_part_counts(
     p_id = p.join(F.broadcast(classes), ["p_brand", "p_type", "p_size"]).select(
         "p_partkey", "class_id"
     )
-    j = lineitem.select("l_partkey", "l_suppkey").join(
-        bad, lineitem["l_suppkey"] == bad["s_suppkey"], "left_anti"
-    ).join(p_id.hint("SHUFFLE_HASH"), F.col("l_partkey") == p_id["p_partkey"])
-    counts = j.groupBy("class_id").agg(
-        F.countDistinct("l_suppkey").alias("supplier_cnt")
-    )
-    return (
-        counts.join(F.broadcast(classes), "class_id")
-        .select("p_brand", "p_type", "p_size", "supplier_cnt")
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
-
-
-def supplier_part_counts_bucketed(
-    spark,
-    lineitem_table: str,
-    part_table: str,
-    supplier: DataFrame,
-    excluded_brand: str = "Brand#1",
-    min_acctbal: float = 1000.0,
-) -> DataFrame:
-    """:func:`supplier_part_counts` (Q16) on the PARTKEY fact layout
-    (sources/bucketing.py:write_partkey_layout, r15 — VERDICT r14 #4):
-    the one data-scaled exchange in the plain plan is the 600M-row
-    lineitem shuffle into the part join (sf100: 93.9 s warm, the
-    largest remaining row). Co-bucketed on partkey, that join is
-    bucket-local sort-merge — both broadcast prunes (the acctbal anti
-    join, the class-id attach) preserve the streamed side's bucketing
-    and sort order, so the scan-to-join pipeline carries ZERO Exchange
-    and ZERO Sort (plan-asserted in tests/test_bucketing.py). The only
-    shuffle left is the distinct (class_id, suppkey) pair exchange —
-    Q16's structural floor (~59M two-int rows at sf100). No
-    SHUFFLE_HASH hint here: the hint exists in the plain form to skip
-    SMJ sorts that the layout's sortBy already provides."""
-    lineitem = spark.table(lineitem_table)
-    part = spark.table(part_table)
-    bad = broadcast_if_fits(
-        supplier.where(F.col("s_acctbal") < min_acctbal).select("s_suppkey")
-    )
-    p = part.where(F.col("p_brand") != excluded_brand).select(
-        "p_partkey", "p_brand", "p_type", "p_size"
-    )
-    classes = (
-        p.select("p_brand", "p_type", "p_size")
-        .distinct()
-        .withColumn(
-            "class_id",
-            F.row_number().over(Window.orderBy("p_brand", "p_type", "p_size")),
-        )
-    )
-    p_id = p.join(F.broadcast(classes), ["p_brand", "p_type", "p_size"]).select(
-        "p_partkey", "class_id"
-    )
+    if not (
+        bucketed_on(lineitem, "l_partkey") and bucketed_on(part, "p_partkey")
+    ):
+        p_id = p_id.hint("SHUFFLE_HASH")
     j = lineitem.select("l_partkey", "l_suppkey").join(
         bad, lineitem["l_suppkey"] == bad["s_suppkey"], "left_anti"
     ).join(p_id, F.col("l_partkey") == p_id["p_partkey"])
@@ -2219,96 +1810,6 @@ def small_quantity_revenue(
     )
 
 
-def small_quantity_revenue_bucketed(
-    spark,
-    lineitem_table: str,
-    part: DataFrame,
-    brand: str = "Brand#2",
-    fraction_denom: int = 5,
-) -> DataFrame:
-    """:func:`small_quantity_revenue` (q17) on the PARTKEY layout (r15):
-    the broadcast semi preserves the bucketing AND the sortBy order, so
-    the per-part window runs with ZERO exchange and ZERO sort — the
-    plain form's one shuffle (the ~4% brand slice) disappears; what
-    remains is the scan + broadcast probe + streaming window."""
-    lineitem = spark.table(lineitem_table)
-    p = part.where(F.col("p_brand") == brand).select("p_partkey")
-    p = broadcast_if_fits(p, known_rows=counted_rows(p))
-    li = lineitem.join(
-        p, lineitem["l_partkey"] == p["p_partkey"], "left_semi"
-    ).select(
-        "l_partkey",
-        cents("l_quantity").alias("qty_c"),
-        cents("l_extendedprice").alias("price_c"),
-    )
-    w = Window.partitionBy("l_partkey")
-    j = li.withColumn("sum_qty_c", F.sum("qty_c").over(w)).withColumn(
-        "n_items", F.count(F.lit(1)).over(w)
-    )
-    small = (
-        F.col("qty_c") * F.lit(fraction_denom) * F.col("n_items")
-        < F.col("sum_qty_c")
-    )
-    return j.where(small).agg(
-        (F.sum("price_c") / 100.0 / 7.0).alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n_small"),
-    )
-
-
-def promotion_suppliers_bucketed(
-    spark,
-    lineitem_table: str,
-    supplier: DataFrame,
-    part: DataFrame,
-    name_token: str = "widget",
-    start: str = "1996-01-01",
-    end: str = "1997-01-01",
-    multiple: int = 2,
-) -> DataFrame:
-    """:func:`promotion_suppliers` (q20) on the PARTKEY layout (r15):
-    the plain form's one partkey repartition of the filtered slice is
-    the bucketing itself here — the pair aggregate and the per-part
-    window cluster on a superset of the bucket key, so the whole
-    pyramid down to the distinct supplier keys runs exchange-free."""
-    lineitem = spark.table(lineitem_table)
-    p = broadcast_if_fits(
-        part.where(F.col("p_name").contains(name_token)).select("p_partkey")
-    )
-    fil = (
-        lineitem.where(
-            (F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(end).cast("timestamp"))
-        )
-        .join(p, lineitem["l_partkey"] == p["p_partkey"], "left_semi")
-        .select(
-            "l_partkey", "l_suppkey", cents("l_quantity").alias("qc")
-        )
-    )
-    sq = fil.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum("qc").alias("q_c")
-    )
-    w = Window.partitionBy("l_partkey")
-    qual = (
-        sq.withColumn("total_c", F.sum("q_c").over(w))
-        .withColumn("n_supp", F.count(F.lit(1)).over(w))
-        .where(
-            F.col("q_c") * F.col("n_supp")
-            > F.col("total_c") * F.lit(multiple)
-        )
-        .select("l_suppkey")
-        .distinct()
-    )
-    return (
-        supplier.join(
-            qual.hint("merge"),
-            supplier["s_suppkey"] == qual["l_suppkey"],
-            "left_semi",
-        )
-        .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
-    )
-
-
 def promotion_suppliers(
     lineitem: DataFrame,
     supplier: DataFrame,
@@ -2339,7 +1840,9 @@ def promotion_suppliers(
     exchange-free on that one shuffle, replacing the r14 chain's
     pair-keyed exchange + per-part aggregate + merge-hinted join-back:
     9.44 -> 5.16 s (1.75x the comparator). Per-partkey window state is
-    bounded by suppliers-per-part, skew-free.
+    bounded by suppliers-per-part, skew-free. Over the partkey layout
+    the bucketing IS that clustering, so the repartition is skipped and
+    the pyramid down to the distinct supplier keys runs exchange-free.
     """
     # the name-slice semi join rides the cardinality gate (r14):
     # sf100 ~2.5M single-key rows, ~60 MB est — map-side semi instead
@@ -2356,8 +1859,9 @@ def promotion_suppliers(
         .select(
             "l_partkey", "l_suppkey", cents("l_quantity").alias("qc")
         )
-        .repartition("l_partkey")
     )
+    if not bucketed_on(lineitem, "l_partkey"):
+        fil = fil.repartition("l_partkey")
     sq = fil.groupBy("l_partkey", "l_suppkey").agg(
         F.sum("qc").alias("q_c")
     )
@@ -2386,280 +1890,3 @@ def promotion_suppliers(
         .orderBy("s_suppkey")
     )
 
-
-def latency_mode_priority_bucketed(
-    spark,
-    orders_table: str,
-    lineitem_table: str,
-    slow_days: int = 75,
-    start: str = "1996-01-01",
-    end: str = "1998-01-01",
-) -> DataFrame:
-    """:func:`latency_mode_priority` (the Q12 shape) on the same
-    write-once orderkey fact layout Q3/Q4/Q5 share: the fact-fact
-    equi-join is bucket-local, so the ONLY Exchange left is the final
-    2-group aggregate — this was the heaviest shuffle of the plain
-    form (an unfiltered orders side shuffling ~|orders| rows with a
-    priority string each; at sf100 the plain form is also the one
-    whose warm re-run the 8 GB harness cannot hold)."""
-    li = spark.table(lineitem_table).where(
-        (F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(end).cast("timestamp"))
-    ).select("l_orderkey", "l_shipdate")
-    orders = spark.table(orders_table).select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-    mode = F.when(
-        F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) > slow_days,
-        F.lit("SLOW"),
-    ).otherwise(F.lit("FAST"))
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        j.select(mode.alias("ship_class"), high.alias("is_high"))
-        .groupBy("ship_class")
-        .agg(
-            F.sum(F.when(F.col("is_high"), 1).otherwise(0)).alias(
-                "high_line_count"
-            ),
-            F.sum(F.when(F.col("is_high"), 0).otherwise(1)).alias(
-                "low_line_count"
-            ),
-        )
-        .orderBy("ship_class")
-    )
-
-
-def sales_opportunity_bucketed(
-    spark,
-    orders_table: str,
-    customer_table: str,
-    since: str = "2000-01-01",
-    n_groups: int = 5,
-) -> DataFrame:
-    """:func:`sales_opportunity` (the Q22 shape) on the write-once
-    custkey layout (orders + customer co-bucketed on custkey, r12):
-    the anti join — the plain plan's only data-scaled shuffle, both
-    sides keyed on custkey — goes bucket-local, so the fact sides
-    carry ZERO Exchange; only the one-row balance scalar (broadcast)
-    and the ``n_groups``-row final aggregate move. r16, the VERDICT
-    r15 #3 adjudication of the last un-probed >2x sweep rows."""
-    customer = spark.table(customer_table)
-    recent = (
-        spark.table(orders_table)
-        .where(F.col("o_orderdate") >= F.lit(since).cast("timestamp"))
-        .select("o_custkey")
-    )
-    avg_bal = customer.where(F.col("c_acctbal") > 0).agg(
-        (F.sum(cents("c_acctbal")) / F.count(F.lit(1))).alias("avg_bal_c")
-    )
-    return (
-        customer.join(F.broadcast(avg_bal))
-        .where(cents("c_acctbal") > F.col("avg_bal_c"))
-        .join(recent, customer["c_custkey"] == recent["o_custkey"], "left_anti")
-        .select(
-            (F.col("c_nationkey") % n_groups).alias("cntrycode"),
-            cents("c_acctbal").alias("bal_c"),
-        )
-        .groupBy("cntrycode")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            (F.sum("bal_c") / 100.0).alias("totacctbal"),
-        )
-        .orderBy("cntrycode")
-    )
-
-
-def volume_shipping_bucketed(
-    spark,
-    orders_table: str,
-    lineitem_table: str,
-    customer: DataFrame,
-    supplier: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-    region_a: str = "ASIA",
-    region_b: str = "EUROPE",
-    start: str = "1996-01-01",
-    end: str = "1998-01-01",
-) -> DataFrame:
-    """:func:`volume_shipping` (Q7) on the shared write-once orderkey
-    layout: the lineitem-orders join — the only data-scaled shuffle in
-    the plain plan — goes bucket-local; the two geography chains ride
-    the same cardinality gate as the plain form (r14).
-
-    r16 optimization round: ADOPTED as the tpch_q07 row of record
-    (bench.py _TPCH_ADOPTED) — the form existed since r12 but the sweep
-    still benched the plain plan. sf10 A/B on the shared layout
-    (value-equal asserted): warm 1.79 -> 1.00 s (-44%)."""
-    geo_s = broadcast_if_fits(
-        supplier.join(
-            F.broadcast(nation), supplier["s_nationkey"] == nation["n_nationkey"]
-        )
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .where(F.col("r_name").isin(region_a, region_b))
-        .select("s_suppkey", F.col("r_name").alias("supp_region"))
-    )
-    geo_c = broadcast_if_fits(
-        customer.join(
-            F.broadcast(nation), customer["c_nationkey"] == nation["n_nationkey"]
-        )
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .where(F.col("r_name").isin(region_a, region_b))
-        .select("c_custkey", F.col("r_name").alias("cust_region"))
-    )
-    li = spark.table(lineitem_table).where(
-        (F.col("l_shipdate") >= F.lit(start).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(end).cast("timestamp"))
-    )
-    orders = spark.table(orders_table)
-    j = (
-        li.join(geo_s, li["l_suppkey"] == geo_s["s_suppkey"])
-        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(geo_c, orders["o_custkey"] == geo_c["c_custkey"])
-        .where(
-            (
-                (F.col("supp_region") == region_a)
-                & (F.col("cust_region") == region_b)
-            )
-            | (
-                (F.col("supp_region") == region_b)
-                & (F.col("cust_region") == region_a)
-            )
-        )
-    )
-    disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    return (
-        j.groupBy(
-            "supp_region", "cust_region", F.year("l_shipdate").alias("l_year")
-        )
-        .agg((F.sum(disc_pc) / 10000.0).alias("revenue"))
-        .orderBy("supp_region", "cust_region", "l_year")
-    )
-
-
-def market_share_bucketed(
-    spark,
-    orders_table: str,
-    lineitem_table: str,
-    customer: DataFrame,
-    supplier: DataFrame,
-    part: DataFrame,
-    nation: DataFrame,
-    region: DataFrame,
-    supp_region: str = "ASIA",
-    market_region: str = "EUROPE",
-    p_type: str = "STANDARD",
-) -> DataFrame:
-    """:func:`market_share` (Q8) on the shared write-once orderkey
-    layout (r14, 10th member): with the part slice, the supplier
-    geography map and the market-customer key slice all riding the
-    cardinality gate, the ONLY data-scaled exchange left in the plain
-    plan is the lineitem-orders orderkey join — exactly what the
-    co-bucketed layout removes. The composed plan is map-side joins
-    over a bucket-local merge plus the bounded per-year aggregate."""
-    orders = spark.table(orders_table)
-    lineitem = spark.table(lineitem_table)
-    p = broadcast_if_fits(
-        part.where(F.col("p_type") == p_type).select("p_partkey")
-    )
-    geo_s = broadcast_if_fits(
-        supplier.join(
-            F.broadcast(nation),
-            supplier["s_nationkey"] == nation["n_nationkey"],
-        )
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .select("s_suppkey", F.col("r_name").alias("supp_region"))
-    )
-    mkt_c_raw = (
-        customer.join(
-            F.broadcast(nation),
-            customer["c_nationkey"] == nation["n_nationkey"],
-        )
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .where(F.col("r_name") == market_region)
-        .select("c_custkey")
-    )
-    mkt_fits = fits(mkt_c_raw)
-    mkt_c = F.broadcast(mkt_c_raw) if mkt_fits else mkt_c_raw
-    o = orders.join(
-        mkt_c, orders["o_custkey"] == mkt_c["c_custkey"], "left_semi"
-    ).select("o_orderkey", "o_orderdate")
-    if not mkt_fits:
-        # ADVICE r14: when the gate declines the customer slice, o is a
-        # data-scaled intermediate whose static estimate the planner can
-        # misjudge small enough to broadcast (the misplan class
-        # tools/plan_audit.py catches). Pin the fact join to the
-        # bucket-local sort-merge the layout exists for.
-        o = o.hint("merge")
-    j = (
-        lineitem.join(p, lineitem["l_partkey"] == p["p_partkey"])
-        .join(geo_s, lineitem["l_suppkey"] == geo_s["s_suppkey"])
-        .join(o, lineitem["l_orderkey"] == o["o_orderkey"])
-    )
-    disc_pc = cents("l_extendedprice") * (100 - cents("l_discount"))
-    num = F.sum(
-        F.when(F.col("supp_region") == supp_region, disc_pc).otherwise(F.lit(0))
-    )
-    den = F.sum(disc_pc)
-    return (
-        j.groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            (num / den).alias("mkt_share"),
-            (den / 10000.0).alias("total_volume"),
-        )
-        .orderBy("o_year")
-    )
-
-
-def product_type_profit_orderkey(
-    spark,
-    orders_table: str,
-    lineitem_table: str,
-    supplier: DataFrame,
-    part: DataFrame,
-    nation: DataFrame,
-    name_token: str = "widget",
-) -> DataFrame:
-    """:func:`product_type_profit` (Q9) on the ORDERKEY layout — the
-    right layout key for this star, unlike the partkey family
-    (measured-and-rejected above): Q9's part and supplier sides arrive
-    filtered/bounded and BROADCAST in the plain plan, so the one
-    data-scaled shuffle is the unfiltered lineitem-orders join the
-    orderkey buckets remove."""
-    # both slices ride the cardinality gate (r14): the name slice is
-    # ~1/8 of part (sf100 ~2.5M rows, ~100 MB est) and the supplier
-    # geography map is dimension-bounded (~1M rows, ~72 MB est) — their
-    # static estimates (pre-filter file size / join output) blocked the
-    # broadcasts and both of these fact joins shuffled 600M rows at
-    # sf100.
-    p = broadcast_if_fits(
-        part.where(F.col("p_name").contains(name_token)).select(
-            "p_partkey", "p_retailprice"
-        )
-    )
-    sn = broadcast_if_fits(
-        supplier.join(
-            F.broadcast(nation), supplier["s_nationkey"] == nation["n_nationkey"]
-        ).select("s_suppkey", "n_name")
-    )
-    li = spark.table(lineitem_table)
-    orders = spark.table(orders_table).select("o_orderkey", "o_orderdate")
-    amount_e4 = cents("l_extendedprice") * (100 - cents("l_discount")) - cents(
-        "p_retailprice"
-    ) * cents("l_quantity")
-    j = (
-        li.join(p, li["l_partkey"] == p["p_partkey"])
-        .join(sn, li["l_suppkey"] == sn["s_suppkey"])
-        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
-    )
-    return (
-        j.select(
-            F.col("n_name").alias("nation"),
-            F.year("o_orderdate").alias("o_year"),
-            amount_e4.alias("amount_e4"),
-        )
-        .groupBy("nation", "o_year")
-        .agg((F.sum("amount_e4") / 10000.0).alias("sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
-    )

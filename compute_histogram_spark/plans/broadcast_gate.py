@@ -105,11 +105,10 @@ def fits(
     known_rows: int | None = None,
 ) -> bool:
     """The gate's decision alone — for callers that must also adjust a
-    DOWNSTREAM join hint when the slice is declined (ADVICE r14:
-    market_share_bucketed needs the plain form's shuffle-hash/merge
-    fallback on the orders intermediate when mkt_c doesn't broadcast,
-    or the static estimator can re-introduce the misplan the gate
-    exists to prevent)."""
+    DOWNSTREAM join hint when the slice is declined (market_share over
+    the orderkey layout pins a merge join on the orders intermediate
+    when its customer slice doesn't broadcast, or the static estimator
+    can re-introduce the misplan the gate exists to prevent)."""
     budget = gate_budget_bytes() if budget_bytes is None else budget_bytes
     n = counted_rows(df) if known_rows is None else known_rows
     return n * est_row_bytes(df) <= budget

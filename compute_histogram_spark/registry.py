@@ -134,7 +134,13 @@ def q_histogram_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = H.histogram(load(spark, sf_dir, "events"), "value", "log")
     # labels go through exp(); round to the reference's 2-decimal CSV
     # precision (main.py:124 "%1.2f") so JVM-vs-C libm ulp noise cancels.
-    return out.withColumn("value", F.round("value", 2))
+    # Spark's round gives +0.0 for a label in (-0.005, 0); DuckDB's round
+    # and the reference's "%1.2f" ("-0.00") keep the sign, so restore it
+    # from the unrounded label.
+    r = F.round("value", 2)
+    return out.withColumn(
+        "value", F.when((r == 0) & (F.col("value") < 0), -r).otherwise(r)
+    )
 
 
 @register("histogram_incremental", _histo_linear_sql("events"))
@@ -190,7 +196,7 @@ ORDER BY min_value
 @register("histogram_deciles", _DECILES_ORACLE)
 def q_histogram_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     histo = H.histogram(load(spark, sf_dir, "events"), "value", "linear")
-    return D.deciles_sql(histo)
+    return D.deciles(histo)
 
 
 # ---------------------------------------------------------------------------

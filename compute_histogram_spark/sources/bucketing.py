@@ -22,6 +22,13 @@ Guidance: partition on columns queries FILTER by (low cardinality, stable);
 bucket on columns queries JOIN/GROUP by (high cardinality keys). Don't
 partition on high-cardinality keys — millions of tiny directories kill the
 listing step and the small-files problem eats the gain.
+
+A layout is an INPUT, not a second copy of a query: the writers below
+return catalog table names, and a caller passes ``spark.table(name)`` to
+the same relational operator it would give plain parquet. Where the
+best plan over a bucketed input differs (a join hint or join order that
+only pays without co-bucketing), the operator decides by asking
+:func:`bucketed_on` about the DataFrames it was handed.
 """
 
 from __future__ import annotations
@@ -47,6 +54,16 @@ def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key_l:
     """Equi-join two same-bucketed tables — plans with zero Exchange."""
     lt, rt = spark.table(left_table), spark.table(right_table)
     return lt.join(rt, lt[key_l] == rt[key_r])
+
+
+def bucketed_on(df: DataFrame, key: str) -> bool:
+    """True when ``df`` reads a table bucketed on ``key`` alone, so a
+    join or aggregate on ``key`` needs no Exchange on its side. Read
+    from the planned output partitioning of ``df`` (filters and
+    projections keep it); plain parquet plans as UnknownPartitioning.
+    Plans only — no job runs."""
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    return part.toString().startswith(f"hashpartitioning({key}#")
 
 
 def write_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:

@@ -67,8 +67,8 @@ def test_market_share_layout_reuses_fact_subtree(spark, sf_dir, tmp_path):
     spark.catalog.setCurrentDatabase("aqewh1")
     try:
         ot, lt = B.write_q5_layout(spark, sf_dir, buckets=8)
-        df = R.market_share_bucketed(
-            spark, ot, lt, load(spark, sf_dir, "customer"),
+        df = R.market_share(
+            spark.table(lt), spark.table(ot), load(spark, sf_dir, "customer"),
             load(spark, sf_dir, "supplier"), load(spark, sf_dir, "part"),
             load(spark, sf_dir, "nation"), load(spark, sf_dir, "region"),
         )
@@ -91,8 +91,8 @@ def test_supplier_part_counts_layout_reuses_fact_subtree(
     spark.catalog.setCurrentDatabase("aqewh2")
     try:
         lt, pt = B.write_partkey_layout(spark, sf_dir, buckets=8)
-        df = R.supplier_part_counts_bucketed(
-            spark, lt, pt, load(spark, sf_dir, "supplier")
+        df = R.supplier_part_counts(
+            spark.table(lt), load(spark, sf_dir, "supplier"), spark.table(pt)
         )
         assert "ReusedExchange" in _final_plan(df)
     finally:

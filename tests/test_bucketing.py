@@ -112,9 +112,9 @@ def test_q5_on_bucketed_layout_plan_and_values(spark, sf_dir, tmp_path):
             t: load(spark, sf_dir, t)
             for t in ("region", "nation", "customer", "supplier")
         }
-        bucketed = R.local_supplier_revenue_bucketed(
-            spark, ot, lt, dims["region"], dims["nation"],
-            dims["customer"], dims["supplier"],
+        bucketed = R.local_supplier_revenue(
+            dims["region"], dims["nation"], dims["customer"],
+            dims["supplier"], spark.table(ot), spark.table(lt),
         )
         raw = R.local_supplier_revenue(
             dims["region"], dims["nation"], dims["customer"],
@@ -217,17 +217,18 @@ def test_custkey_layout_star_aggs_plan_and_values(spark, sf_dir, tmp_path):
         assert B.write_custkey_layout(spark, sf_dir, buckets=8) == (ot, ct)
         region = load(spark, sf_dir, "region")
         nation = load(spark, sf_dir, "nation")
+        o_bk, c_bk = spark.table(ot), spark.table(ct)
 
         for bucketed, raw in (
             (
-                R.region_revenue_bucketed(spark, ot, ct, region, nation),
+                R.region_revenue(region, nation, c_bk, o_bk),
                 R.region_revenue(
                     region, nation, load(spark, sf_dir, "customer"),
                     load(spark, sf_dir, "orders"),
                 ),
             ),
             (
-                R.rollup_revenue_bucketed(spark, ot, ct, region, nation),
+                R.rollup_revenue(region, nation, c_bk, o_bk),
                 R.rollup_revenue(
                     region, nation, load(spark, sf_dir, "customer"),
                     load(spark, sf_dir, "orders"),
@@ -264,11 +265,12 @@ def test_orderkey_layout_q3_q4_plan_and_values(spark, sf_dir, tmp_path):
         orders = load(spark, sf_dir, "orders")
         lineitem = load(spark, sf_dir, "lineitem")
 
-        b3 = R.shipping_priority_bucketed(spark, ot, lt, customer)
+        o_bk, l_bk = spark.table(ot), spark.table(lt)
+        b3 = R.shipping_priority(customer, o_bk, l_bk)
         r3 = R.shipping_priority(customer, orders, lineitem)
         assert b3.collect() == r3.collect()
 
-        b4 = R.late_order_priority_bucketed(spark, ot, lt)
+        b4 = R.late_order_priority(o_bk, l_bk)
         r4 = R.late_order_priority(orders, lineitem)
         assert b4.collect() == r4.collect()
 
@@ -300,7 +302,7 @@ def test_orderkey_layout_q12_plan_and_values(spark, sf_dir, tmp_path):
         orders = load(spark, sf_dir, "orders")
         lineitem = load(spark, sf_dir, "lineitem")
 
-        b12 = R.latency_mode_priority_bucketed(spark, ot, lt)
+        b12 = R.latency_mode_priority(spark.table(ot), spark.table(lt))
         r12 = R.latency_mode_priority(orders, lineitem)
         assert b12.collect() == r12.collect()
 
@@ -331,7 +333,7 @@ def test_custkey_layout_q22_plan_and_values(spark, sf_dir, tmp_path):
         orders = load(spark, sf_dir, "orders")
         customer = load(spark, sf_dir, "customer")
 
-        b22 = R.sales_opportunity_bucketed(spark, ot, ct)
+        b22 = R.sales_opportunity(spark.table(ct), spark.table(ot))
         r22 = R.sales_opportunity(customer, orders)
         assert b22.collect() == r22.collect()
 
@@ -362,10 +364,11 @@ def test_orderkey_layout_q7_q9_plan_and_values(spark, sf_dir, tmp_path):
                       "lineitem", "part")
         ]
 
-        b7 = R.volume_shipping_bucketed(spark, ot, lt, c, s, n, r)
+        o_bk, l_bk = spark.table(ot), spark.table(lt)
+        b7 = R.volume_shipping(l_bk, o_bk, c, s, n, r)
         assert b7.collect() == R.volume_shipping(li, o, c, s, n, r).collect()
 
-        b9 = R.product_type_profit_orderkey(spark, ot, lt, s, p, n)
+        b9 = R.product_type_profit(l_bk, o_bk, s, p, n)
         assert b9.collect() == R.product_type_profit(li, o, s, p, n).collect()
 
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -429,7 +432,7 @@ def test_orderkey_layout_q21_plan_and_values(spark, sf_dir, tmp_path):
         orders = load(spark, sf_dir, "orders")
         lineitem = load(spark, sf_dir, "lineitem")
 
-        b = R.waiting_suppliers_bucketed(spark, ot, lt, supplier)
+        b = R.waiting_suppliers(spark.table(ot), spark.table(lt), supplier)
         r = R.waiting_suppliers(orders, lineitem, supplier)
         assert b.collect() == r.collect()
 
@@ -465,13 +468,12 @@ def test_orderkey_layout_q18_q10_plan_and_values(spark, sf_dir, tmp_path):
         orders = load(spark, sf_dir, "orders")
         lineitem = load(spark, sf_dir, "lineitem")
 
-        b18 = R.large_volume_customers_bucketed(spark, ot, lt, customer)
+        o_bk, l_bk = spark.table(ot), spark.table(lt)
+        b18 = R.large_volume_customers(customer, o_bk, l_bk)
         r18 = R.large_volume_customers(customer, orders, lineitem)
         assert b18.collect() == r18.collect()
 
-        b10 = R.returned_item_customers_bucketed(
-            spark, ot, lt, customer, nation
-        )
+        b10 = R.returned_item_customers(customer, nation, o_bk, l_bk)
         r10 = R.returned_item_customers(customer, nation, orders, lineitem)
         assert b10.collect() == r10.collect()
 
@@ -521,9 +523,9 @@ def test_orderkey_layout_q8_plan_and_values(spark, sf_dir, tmp_path):
         ot, lt = B.write_q5_layout(spark, sf_dir, buckets=8)
         dims = {t: load(spark, sf_dir, t)
                 for t in ("customer", "supplier", "part", "nation", "region")}
-        b = R.market_share_bucketed(
-            spark, ot, lt, dims["customer"], dims["supplier"],
-            dims["part"], dims["nation"], dims["region"],
+        b = R.market_share(
+            spark.table(lt), spark.table(ot), dims["customer"],
+            dims["supplier"], dims["part"], dims["nation"], dims["region"],
         )
         r = R.market_share(
             load(spark, sf_dir, "lineitem"), load(spark, sf_dir, "orders"),
@@ -556,10 +558,62 @@ def test_partkey_layout_q14_plan_and_values(spark, sf_dir, tmp_path):
         plain = R.promo_revenue_share(
             load(spark, sf_dir, "part"), load(spark, sf_dir, "lineitem")
         )
-        bucketed = R.promo_revenue_share_bucketed(spark, lt, pt)
+        bucketed = R.promo_revenue_share(spark.table(pt), spark.table(lt))
         assert bucketed.collect() == plain.collect()
         plan = _plan(bucketed)
         assert "Exchange hashpartitioning(l_partkey" not in plan, plan
         assert "Exchange hashpartitioning(p_partkey" not in plan, plan
+    finally:
+        spark.catalog.setCurrentDatabase("default")
+
+
+def test_partkey_layout_q16_q17_q20_plan_and_values(spark, sf_dir, tmp_path):
+    """bucketed_on sees the partkey layout; supplier_part_counts (Q16),
+    small_quantity_revenue (q17) and promotion_suppliers (q20) over it
+    are value-exact vs plain parquet with no partkey Exchange — Q16's
+    part join is a bucket-local merge (no SHUFFLE_HASH), q17's per-part
+    window and q20's pair aggregate + window cluster on the bucket key
+    (q20's repartition is skipped)."""
+    from compute_histogram_spark.operators import relational as R
+
+    spark.sql(
+        f"CREATE DATABASE IF NOT EXISTS pk1620 LOCATION '{tmp_path / 'wh'}'"
+    )
+    spark.catalog.setCurrentDatabase("pk1620")
+    try:
+        # a bucket count unlike the session's shuffle partitions: with
+        # equal counts Spark drops a user repartition on the bucket key
+        # by itself, which would hide q20's guard
+        lt, pt = B.write_partkey_layout(spark, sf_dir, buckets=4)
+        l_bk, p_bk = spark.table(lt), spark.table(pt)
+        li, part, supplier = (
+            load(spark, sf_dir, t) for t in ("lineitem", "part", "supplier")
+        )
+        # what the operators observe: the bucket key, through filters and
+        # projections, and nothing for other keys or plain parquet
+        assert B.bucketed_on(l_bk, "l_partkey")
+        assert B.bucketed_on(
+            l_bk.where(F.col("l_quantity") > 3).select("l_partkey"), "l_partkey"
+        )
+        assert not B.bucketed_on(l_bk, "l_orderkey")
+        assert not B.bucketed_on(l_bk, "l_part")
+        assert not B.bucketed_on(li, "l_partkey")
+        for bucketed, raw in (
+            (R.supplier_part_counts(l_bk, supplier, p_bk),
+             R.supplier_part_counts(li, supplier, part)),
+            (R.small_quantity_revenue(l_bk, part),
+             R.small_quantity_revenue(li, part)),
+            (R.promotion_suppliers(l_bk, supplier, part),
+             R.promotion_suppliers(li, supplier, part)),
+        ):
+            assert bucketed.collect() == raw.collect()
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            try:
+                plan = _plan(bucketed)
+            finally:
+                spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+            assert "Exchange hashpartitioning(l_partkey" not in plan, plan
+            assert "Exchange hashpartitioning(p_partkey" not in plan, plan
+            assert "ShuffledHashJoin" not in plan, plan
     finally:
         spark.catalog.setCurrentDatabase("default")

@@ -98,19 +98,18 @@ def test_approx_count_distinct_within_rsd(spark, sf_dir):
 
 
 def test_fused_form_value_identical(spark, sf_dir):
-    """deciles_fused (the bench plan: one ordered pass, no scalar-agg +
-    crossJoin) is value-identical to the reference-parity forms — on the
-    synthetic histogram (zero bins included) AND the real events
-    histogram at the test SF."""
-    from compute_histogram_spark.operators.deciles import deciles_fused
+    """deciles (one ordered pass, no scalar-agg + crossJoin) is
+    value-identical to the reference-parity SQL form — on the synthetic
+    histogram (zero bins included) AND the real events histogram at the
+    test SF."""
     from compute_histogram_spark.operators.histogram import histogram
     from compute_histogram_spark.sources.tables import load
 
     h = histo_df(spark)
-    assert [tuple(r) for r in deciles_fused(h).collect()] == [
+    assert [tuple(r) for r in deciles(h).collect()] == [
         tuple(r) for r in deciles_sql(h).collect()
     ]
     hr = histogram(load(spark, sf_dir, "events"), "value", "linear")
-    assert [tuple(r) for r in deciles_fused(hr).collect()] == [
+    assert [tuple(r) for r in deciles(hr).collect()] == [
         tuple(r) for r in deciles_sql(hr).collect()
     ]

@@ -445,3 +445,31 @@ def test_minhash_candidates_signature_subtree_computed_once(spark, sf_dir):
     final = plan.split("== Initial Plan ==")[0]
     assert "== Final Plan ==" in final, final[:500]
     assert "ReusedExchange" in final, final
+
+
+def test_texthash_exprs_quote_column_names(spark):
+    """The F.expr-built shingle, MinHash and band expressions take column
+    names with a space or a hyphen and give the same values as under
+    plain names."""
+    from pyspark.sql import functions as F
+
+    from compute_histogram_spark.functions.texthash import (
+        band_hashes,
+        minhash_aggs,
+        word_shingles,
+    )
+
+    docs = spark.createDataFrame([("a b c d e",)], ["text"])
+
+    def signature(tok_col, sh_col):
+        toks = docs.select(F.split("text", " ").alias(tok_col))
+        sh = toks.select(word_shingles(tok_col, 2).alias(sh_col))
+        grams = sh.first()[sh_col]
+        sig = sh.select(F.explode(F.col(f"`{sh_col}`")).alias(sh_col)).agg(
+            *minhash_aggs(sh_col, 4)
+        )
+        return grams, tuple(sig.select(*band_hashes(4, 2)).first())
+
+    grams, bands = signature("my toks", "sh-col")
+    assert grams == ["a b", "b c", "c d", "d e"]
+    assert (grams, bands) == signature("toks", "s")

@@ -177,3 +177,45 @@ def test_log_histogram_constant_column_fails_loudly(spark):
     df = spark.createDataFrame([Row(value=5.0)] * 4)
     with pytest.raises(ValueError, match="degenerate bin scheme"):
         histogram(df, "value", "log")
+
+
+def test_histogram_log_keeps_sign_of_negative_zero_label(spark, tmp_path):
+    """A log-bin label in (-0.005, 0) prints as "-0.00" in the reference
+    and rounds to -0.0 in the DuckDB oracle; the declared row must keep
+    that sign bit (the oracle comparison tells -0.0 from +0.0). With
+    min -1.0 the offset is 2.0, so bins 691..693 carry labels
+    exp(k/1000) - 2 in (-0.005, 0)."""
+    import os
+    import sys
+
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from compute_histogram_spark import registry
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    import check_oracle
+
+    values = [-1.0, -0.75, -0.5, -0.25, 0.0, 0.25, 0.5]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(len(values)), pa.int64()),
+            "value": pa.array(values, pa.float64()),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    sdf = registry.QUERIES["histogram_log"](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'"
+    )
+    odf = con.execute(registry.ORACLES["histogram_log"]).df()
+
+    near_zero = sdf[(sdf["bin"] >= 691) & (sdf["bin"] <= 693)]["value"]
+    assert len(near_zero) == 3
+    assert (near_zero == 0).all() and np.signbit(near_zero).all()
+    assert check_oracle.compare("histogram_log", sdf, odf) == []

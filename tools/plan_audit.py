@@ -27,16 +27,13 @@ import __spark_entry__ as entrymod
 
 # queries where a nested-loop join is the intended physical strategy:
 # - range_band_join: non-equi band predicate over a broadcast 4-row dim
-# - histogram_deciles: scalar-total cross join, the reference's own query
-#   shape (compute_histogram.sql:2 "FROM histo, s"); broadcast side is ONE row
 # - similarity_topk: deliberate brute-force baseline — broadcast the tiny
 #   query set against every vector (the IVF variant is the scale path and
 #   equi-joins on the centroid label)
 # - equi_depth_histogram_approx: broadcast of the ONE-row approx_percentile
 #   cut-point aggregate against the scan (the no-global-sort design)
 # - bm25_topk: crossJoin(broadcast(scal)) — the ONE-row (N, sum_dl) corpus
-#   scalar aggregate broadcast onto the |q|-term postings (text.py:bm25_topk);
-#   the same scalar-broadcast shape as histogram_deciles
+#   scalar aggregate broadcast onto the |q|-term postings (text.py:bm25_topk)
 # - token_pmi: crossJoin(broadcast(tot)) — the ONE-row pair-total scalar
 #   aggregate broadcast onto the vocab-bounded pair counts (text.py:token_pmi)
 # - distribution_drift: crossJoin(broadcast(t)) — the ONE-row
@@ -48,7 +45,6 @@ import __spark_entry__ as entrymod
 #   bigram/trigram stream (operators/lm.py)
 NLJ_ALLOWED = {
     "range_band_join",
-    "histogram_deciles",
     "similarity_topk",
     # same deliberate brute-force shape as similarity_topk: the broadcast
     # side is the tiny filtered QUERY set (vec_id < 10) against the int8
@@ -66,7 +62,7 @@ NLJ_ALLOWED = {
     "doc_perplexity_backoff",
     # pr_curve: crossJoin(broadcast(thresholds)) — the n_thresholds-row
     # (default 10) threshold spine against the per-doc score table; the
-    # same bounded scalar-broadcast shape as histogram_deciles/bm25_topk
+    # same bounded scalar-broadcast shape as bm25_topk
     "pr_curve",
     # doc_length_quantiles (r16, wave-13 bank): crossJoin(broadcast(ps))
     # — the 4-row rational-percentile spine against the (group, length)
