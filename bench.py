@@ -11,7 +11,6 @@ large relative to sub-second queries at this scale). `value` is the sum.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -24,326 +23,13 @@ from pyspark.sql import functions as _F
 
 from compute_histogram_spark.session import get_session, release_persists
 from compute_histogram_spark import registry
-from compute_histogram_spark.operators import behavior as BH
-from compute_histogram_spark.operators import dedup as DD
-from compute_histogram_spark.operators import relational as R
-from compute_histogram_spark.operators import text as TX
 from compute_histogram_spark.sources.tables import load
 
 
-# Registry fallbacks for headline queries: the registry is capped at 50
-# entries (the driver checks exactly that many), and rotation moves names
-# in and out of it across rounds — benching always prefers the registry
-# entry and falls back here, so the 26-query headline set stays runnable
-# (and r01-comparable) regardless of the current window composition.
-# late_order_priority and rollup_revenue re-entered the registry in r6;
-# their copies below are harmless fallbacks for a future rotation.
-LOCAL_QUERIES = {
-    "top_customers": lambda spark, d: R.top_customers(
-        load(spark, d, "customer"), load(spark, d, "orders")
-    ),
-    "region_revenue": lambda spark, d: R.region_revenue(
-        load(spark, d, "region"),
-        load(spark, d, "nation"),
-        load(spark, d, "customer"),
-        load(spark, d, "orders"),
-    ),
-    "late_order_priority": lambda spark, d: R.late_order_priority(
-        load(spark, d, "orders"), load(spark, d, "lineitem")
-    ),
-    "rollup_revenue": lambda spark, d: R.rollup_revenue(
-        load(spark, d, "region"),
-        load(spark, d, "nation"),
-        load(spark, d, "customer"),
-        load(spark, d, "orders"),
-    ),
-    # rotated out of the registry window in r6 (tests/test_rotated_out.py
-    # keeps the oracle); stays here for BENCH r01->r06 comparability.
-    "cohort_retention": lambda spark, d: BH.cohort_retention(
-        load(spark, d, "events")
-    ),
-    # rotated out in r7 (fourth wave); headline comparability fallbacks.
-    "event_transitions": lambda spark, d: BH.event_transitions(
-        load(spark, d, "events")
-    ),
-    # r10: the vectorized Arrow kernel (text.py:doc_fingerprint_arrow) —
-    # same operator contract (min uniform 64-bit gram hash + EXACT
-    # distinct-gram count; splitmix64 spec + n_grams equality pinned in
-    # tests/test_text.py). Interleaved A/B: sf1 0.70 vs 1.67 s JVM,
-    # sf10 2.07 vs 15.63 s (and vs DuckDB 4.98 s — a Spark win); the
-    # ~+0.11 s Python-worker overhead at sf0.1 is the documented trade.
-    "doc_fingerprint": lambda spark, d: TX.doc_fingerprint_arrow(
-        load(spark, d, "documents")
-    ),
-    # r10: the batch-vectorized Arrow text kernel — BIT-exact output
-    # parity with the window's declarative text_profile (pinned in
-    # tests/test_text.py incl. HALF_UP rounding), measured sf1 0.71 vs
-    # 1.00 s, sf10 1.37 vs 2.60 s fresh-JVM (DuckDB 1.54 — a win at the
-    # design scale). The registry window keeps the JVM form; the bench
-    # times each engine's fastest value-identical formulation.
-    "text_stats": lambda spark, d: TX.text_profile_arrow(
-        load(spark, d, "documents")
-    ),
-    # r11: the Arrow pair-kernel form of the exact Jaccard operator —
-    # value-identical to the window's declarative plan (equality pinned
-    # in tests/test_dedup.py at both test SFs and on hub-binding
-    # synthetics). Interleaved sf10 A/B: 22.7 vs 34.6 s declarative
-    # (DuckDB 18.0 s same box/day) — the bench times each engine's
-    # fastest value-identical formulation, as with doc_fingerprint and
-    # text_stats.
-    "dedup_ngram_jaccard": lambda spark, d: DD.ngram_jaccard_pairs_arrow(
-        load(spark, d, "documents"), threshold=0.5,
-        max_df=registry._NGRAM_MAX_DF,
-    ),
-    # rotated out in r11 (seventh wave); headline comparability fallback.
-    "shipping_priority": lambda spark, d: R.shipping_priority(
-        load(spark, d, "customer"),
-        load(spark, d, "orders"),
-        load(spark, d, "lineitem"),
-    ),
-    # r8: Q5 on the bucketed fact layout (defined below; lazy reference)
-    "local_supplier_revenue_layout": lambda spark, d: _q5_layout_served(
-        spark, d
-    ),
-    # r12: the layout attack widened to the rest of the scan-agg weak
-    # class (VERDICT r11 #2) — same write-once amortization claim
-    "region_revenue_layout": lambda spark, d: _custkey_layout_served(
-        spark, d, "region"
-    ),
-    "rollup_revenue_layout": lambda spark, d: _custkey_layout_served(
-        spark, d, "rollup"
-    ),
-    "shipping_priority_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q3"
-    ),
-    "late_order_priority_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q4"
-    ),
-    # r13: the user_id events layout (VERDICT r12 #4 cohort attack)
-    "cohort_retention_layout": lambda spark, d: _userkey_layout_served(
-        spark, d, "cohort"
-    ),
-    "event_transitions_layout": lambda spark, d: _userkey_layout_served(
-        spark, d, "transitions"
-    ),
-    # r13: Q21 joins the orderkey layout family (its 7th member) — every
-    # step of its plan clusters on an orderkey superset, so only the
-    # supplier-bounded final count shuffles. sf10 A/B: 12.96 -> 7.96 s.
-    "waiting_suppliers_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q21"
-    ),
-    # r14: Q18/Q10 join the orderkey layout family (members 8 and 9) —
-    # both orderkey steps exchange-free; sf10 A/B (value-equal asserted):
-    # q18 3.04 -> 1.27 s (-58%), q10 2.15 -> 1.16 s (-46%).
-    "large_volume_customers_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q18"
-    ),
-    "returned_item_customers_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q10"
-    ),
-    # r16: Q12 joins the orderkey family (member 11) — the unfiltered
-    # orders-side shuffle (the plain form's heaviest exchange, and the
-    # one whose warm re-run the 8 GB sf100 harness can't hold) goes
-    # bucket-local; only the 2-group final agg shuffles. Resolves the
-    # VERDICT r15 #2 adoption contradiction: this IS the row of record.
-    "latency_mode_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q12"
-    ),
-    # r16 optimization round: Q7 joins the orderkey family (member 12) —
-    # the lineitem-orders join (the plain plan's only data-scaled
-    # exchange; both geography chains are bounded broadcasts) goes
-    # bucket-local. sf10 A/B (value-equal asserted): 1.79 -> 1.00 s.
-    "volume_shipping_layout": lambda spark, d: _orderkey_layout_served(
-        spark, d, "q7"
-    ),
-    # r16: Q22 joins the custkey family — the anti join (both sides
-    # keyed on custkey) goes bucket-local (VERDICT r15 #3 adjudication).
-    "sales_opportunity_layout": lambda spark, d: _custkey_layout_served(
-        spark, d, "q22"
-    ),
-    # r14: write-once cents PROJECTION for the scan-agg family's Q1 —
-    # the per-run round(x*100) cast chain (measured: half the query at
-    # sf10) amortizes into the layout write. sf10 A/B (value-equal
-    # asserted): 1.52 -> 0.66 s (-56%); sf1 0.48 -> 0.31.
-    "pricing_summary_layout": lambda spark, d: _cents_projection_served(
-        spark, d
-    ),
-    # r15: Q16 on the PARTKEY layout family (write_partkey_layout) —
-    # the orderkey family can't help Q16; partkey co-bucketing removes
-    # the 600M-row fact shuffle into the part join (VERDICT r14 #4).
-    "supplier_part_counts_layout": lambda spark, d: _partkey_layout_served(
-        spark, d
-    ),
-    "small_quantity_revenue_layout": lambda spark, d: _partkey_layout_served(
-        spark, d, "q17"
-    ),
-    "promotion_suppliers_layout": lambda spark, d: _partkey_layout_served(
-        spark, d, "q20"
-    ),
-    # r16 optimization round: Q14 joins the partkey family (member 4) —
-    # the plain form's forced FULL-part broadcast (|part| scales with
-    # the fact) becomes a bucket-local merge join. sf10 A/B (value-equal
-    # asserted): 1.21 -> 1.08 s; the delta grows with |part|.
-    "promo_revenue_share_layout": lambda spark, d: _partkey_layout_served(
-        spark, d, "q14"
-    ),
-}
-
-# DuckDB twins of the four local queries (the r01 registry oracle SQL,
-# verbatim) so tools/bench_compare.py can still time all 26 headline
-# queries on both engines.
-LOCAL_ORACLES = {
-    "top_customers": """
-    SELECT c.c_custkey, c.c_name,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-               AS total_spent,
-           count(*) AS n_orders
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY total_spent DESC, c.c_custkey
-    LIMIT 10
-    """,
-    "region_revenue": """
-    SELECT r.r_name, n.n_name,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-               AS revenue,
-           count(*) AS n_orders
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name, n.n_name
-    ORDER BY r.r_name, n.n_name
-    """,
-    "late_order_priority": """
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
-    WHERE EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate
-    )
-    GROUP BY o_orderpriority
-    ORDER BY o_orderpriority
-    """,
-    "rollup_revenue": """
-    SELECT coalesce(r.r_name, 'ALL') AS r_name,
-           coalesce(n.n_name, 'ALL') AS n_name,
-           CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0
-               AS revenue,
-           count(*) AS n_orders
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY ROLLUP (r.r_name, n.n_name)
-    ORDER BY r_name, n_name
-    """,
-    "cohort_retention": """
-    WITH am AS (
-        SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 // 7 AS wk
-        FROM events
-    ),
-    f AS (SELECT user_id, min(wk) AS cwk FROM am GROUP BY user_id)
-    SELECT cwk * 7 * 86400 AS cohort_week_start_s,
-           CAST(wk - cwk AS INT) AS week_offset,
-           count(DISTINCT a.user_id) AS n_users
-    FROM am a JOIN f USING (user_id)
-    GROUP BY cwk, wk
-    ORDER BY cohort_week_start_s, week_offset
-    """,
-    # r7 rotation fallbacks: the oracle text lives on in registry.py as
-    # module constants (also exercised by tests/test_rotated_out.py).
-    # doc_fingerprint times the throughput-fair pairing: Spark's best
-    # kernel (r10: the Arrow splitmix64 kernel; r8: JVM xxhash64) vs
-    # DuckDB's native hash() over the same grams — each engine's fastest
-    # uniform-hash formulation of the same operator; values stay pinned
-    # via the md5 twin + the splitmix64/XXH64 spec twins in tests
-    "event_transitions": registry.EVENT_TRANSITIONS_ORACLE,
-    "doc_fingerprint": registry.DOC_FINGERPRINT_BENCH_ORACLE,
-    # r11 rotation fallback (oracle text lives on in registry.py and
-    # tests/test_rotated_out.py)
-    "shipping_priority": registry.SHIPPING_PRIORITY_ORACLE,
-    # layout-served Q5 answers the same query: DuckDB twin is Q5's own
-    # oracle (DuckDB reads its best layout — raw parquet — both engines
-    # serve the identical result)
-    "local_supplier_revenue_layout": registry.ORACLES[
-        "local_supplier_revenue"
-    ],
-}
-# r12 layout rows answer the same queries as their raw forms — each
-# DuckDB twin is the base oracle (DuckDB reads ITS best layout, raw
-# parquet; both engines serve the identical result)
-LOCAL_ORACLES["region_revenue_layout"] = LOCAL_ORACLES["region_revenue"]
-LOCAL_ORACLES["rollup_revenue_layout"] = LOCAL_ORACLES["rollup_revenue"]
-LOCAL_ORACLES["shipping_priority_layout"] = registry.SHIPPING_PRIORITY_ORACLE
-LOCAL_ORACLES["late_order_priority_layout"] = LOCAL_ORACLES[
-    "late_order_priority"
-]
-LOCAL_ORACLES["cohort_retention_layout"] = LOCAL_ORACLES["cohort_retention"]
-LOCAL_ORACLES["event_transitions_layout"] = LOCAL_ORACLES["event_transitions"]
-LOCAL_ORACLES["waiting_suppliers_layout"] = registry.WAITING_SUPPLIERS_ORACLE
-LOCAL_ORACLES["large_volume_customers_layout"] = registry.ORACLES[
-    "large_volume_customers"
-]
-LOCAL_ORACLES["returned_item_customers_layout"] = (
-    registry.RETURNED_ITEM_CUSTOMERS_ORACLE
-)
-LOCAL_ORACLES["latency_mode_layout"] = registry.LATENCY_MODE_ORACLE
-LOCAL_ORACLES["sales_opportunity_layout"] = registry.SALES_OPPORTUNITY_ORACLE
-# r16 (VERDICT r15 #7): Arrow-kernel A/B form of corpus_pipeline's
-# per-doc map stage; value-exact vs the declarative plan at both SFs.
-LOCAL_QUERIES["corpus_pipeline_arrow"] = lambda spark, d: __import__(
-    "compute_histogram_spark.operators.pipeline", fromlist=["x"]
-).corpus_pipeline_arrow(load(spark, d, "documents"))
-LOCAL_ORACLES["corpus_pipeline_arrow"] = registry.ORACLES["corpus_pipeline"]
-LOCAL_ORACLES["pricing_summary_layout"] = registry.ORACLES["pricing_summary"]
-LOCAL_ORACLES["supplier_part_counts_layout"] = (
-    registry.SUPPLIER_PART_COUNTS_ORACLE
-)
-LOCAL_ORACLES["small_quantity_revenue_layout"] = registry.SMALL_QUANTITY_ORACLE
-LOCAL_ORACLES["promotion_suppliers_layout"] = (
-    registry.PROMOTION_SUPPLIERS_ORACLE
-)
-
-# r15: the adopted orderkey-layout forms of Q8/Q9 get probe names (the
-# r14 addendum measured them ad-hoc; weakclass/tpch sweeps need stable
-# labels)
-LOCAL_QUERIES["market_share_layout"] = (
-    lambda spark, d: _orderkey_layout_served(spark, d, "q8")
-)
-LOCAL_QUERIES["product_type_profit_layout"] = (
-    lambda spark, d: _orderkey_layout_served(spark, d, "q9")
-)
-LOCAL_ORACLES["market_share_layout"] = registry.MARKET_SHARE_ORACLE
-LOCAL_ORACLES["product_type_profit_layout"] = registry.PRODUCT_PROFIT_ORACLE
-
-# r15 (eleventh rotation): the five rotated-out rows stay in HEADLINE —
-# bench totals remain cross-round comparable; their oracles moved to
-# registry module constants + tests/test_rotated_out.py.
-LOCAL_QUERIES["asof_join"] = registry.q_asof_join
-LOCAL_QUERIES["range_band_join"] = registry.q_range_band_join
-LOCAL_QUERIES["windowed_histogram"] = registry.q_windowed_histogram
-LOCAL_QUERIES["sessionize"] = registry.q_sessionize
-LOCAL_QUERIES["conversion_funnel"] = registry.q_conversion_funnel
-LOCAL_ORACLES["asof_join"] = registry.ASOF_JOIN_ORACLE
-LOCAL_ORACLES["range_band_join"] = registry.RANGE_BAND_JOIN_ORACLE
-LOCAL_ORACLES["windowed_histogram"] = registry.WINDOWED_HISTOGRAM_ORACLE
-LOCAL_ORACLES["sessionize"] = registry.SESSIONIZE_ORACLE
-LOCAL_ORACLES["conversion_funnel"] = registry.CONVERSION_FUNNEL_ORACLE
-
-# r16 (twelfth rotation): same treatment — the five rotated-out rows
-# stay benched (dedup_exact / similarity_topk / text_stats are HEADLINE
-# members); oracles preserved in tests/test_rotated_out.py.
-LOCAL_QUERIES["dedup_exact"] = registry.q_dedup_exact
-LOCAL_QUERIES["similarity_topk"] = registry.q_similarity_topk
-LOCAL_QUERIES["temperature_mix"] = registry.q_temperature_mix
-LOCAL_QUERIES["token_cms"] = registry.q_token_cms
-LOCAL_ORACLES["dedup_exact"] = registry.DEDUP_EXACT_ORACLE
-LOCAL_ORACLES["similarity_topk"] = registry.SIMILARITY_TOPK_ORACLE
-LOCAL_ORACLES["text_stats"] = registry.TEXT_STATS_ORACLE
-LOCAL_ORACLES["temperature_mix"] = registry.TEMPERATURE_MIX_ORACLE
-LOCAL_ORACLES["token_cms"] = registry.TOKEN_CMS_ORACLE
-
+# The headline set: 26 names in registry.CATALOG, fixed so that totals
+# stay comparable from run to run. Each row runs its catalog entry, so
+# doc_fingerprint, text_stats and dedup_ngram_jaccard time their Arrow
+# kernels.
 HEADLINE = [
     "histogram_linear",
     "histogram_log",
@@ -381,270 +67,6 @@ def materialize(df) -> None:
     # so without this a 7-runs-per-query bench holds 7 dead cache
     # generations until the ContextCleaner happens to run.
     release_persists(df)
-
-
-# OPT-IN extended set (SPARK_GRAFT_BENCH_EXT=1): the round-5 operators
-# that are pytest-pinned but outside the 50-entry registry window. Kept
-# out of HEADLINE so the 26-query total stays comparable across rounds;
-# results land under a separate "ext" key. pq/ivfpq deliberately include
-# their codebook TRAINING (that is the operator's real cost shape).
-_IDX_CACHE: dict = {}
-
-
-def _ivf_index_served(s, d):
-    """Serve-time IVF path: the cold (untimed) run trains + persists the
-    cluster-partitioned index under /tmp; warm runs measure ONLY the probe
-    (partition-pruned scan + rerank) — the production amortization claim."""
-    from compute_histogram_spark.operators import clustering as CL
-
-    key = ("ivf", d)
-    if key not in _IDX_CACHE:
-        emb = load(s, d, "embeddings")
-        cent = CL.kmeans(emb, n_clusters=10, iters=3)
-        path = "/tmp/bench_ivf_idx_" + hashlib.md5(d.encode()).hexdigest()[:12]
-        CL.write_ivf_index(emb, cent, path)
-        _IDX_CACHE[key] = (path, cent)
-    path, cent = _IDX_CACHE[key]
-    return CL.cosine_topk_ivf_index(s, path, cent)
-
-
-def _q5_layout_served(s, d):
-    """Q5 on the write-once bucketed fact layout: the cold (untimed) run
-    writes orders+lineitem bucketed/sorted on orderkey into a /tmp-backed
-    database; warm runs measure the query against the layout — the same
-    amortization claim as the served ANN indexes (a 100 TB warehouse keeps
-    its fact tables in join-key buckets; the pre-shuffle is paid once at
-    ingest, not per query)."""
-    from compute_histogram_spark.sources import bucketing as BK
-
-    key = ("q5layout", d)
-    if key not in _IDX_CACHE:
-        db = "bench_q5_" + hashlib.md5(d.encode()).hexdigest()[:10]
-        s.sql(
-            f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '/tmp/{db}_wh'"
-        )
-        _IDX_CACHE[key] = BK.write_q5_layout(
-            s, d, buckets=BK.scaled_buckets(d), database=db
-        )
-    ot, lt = _IDX_CACHE[key]
-    return R.local_supplier_revenue(
-        load(s, d, "region"), load(s, d, "nation"),
-        load(s, d, "customer"), load(s, d, "supplier"),
-        s.table(ot), s.table(lt),
-    )
-
-
-def _custkey_layout_served(s, d, which):
-    """region/rollup revenue on the write-once custkey layout (orders +
-    customer co-bucketed on custkey): the per-customer pre-agg and the
-    customer join run bucket-local — zero fact-side Exchange. The cold
-    (untimed) run writes the layout; warm runs measure the query."""
-    from compute_histogram_spark.sources import bucketing as BK
-
-    key = ("cklayout", d)
-    if key not in _IDX_CACHE:
-        db = "bench_ck_" + hashlib.md5(d.encode()).hexdigest()[:10]
-        s.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '/tmp/{db}_wh'")
-        _IDX_CACHE[key] = BK.write_custkey_layout(
-            s, d, buckets=BK.scaled_buckets(d, table="orders"), database=db
-        )
-    orders, customer = (s.table(t) for t in _IDX_CACHE[key])
-    if which == "q22":
-        return R.sales_opportunity(customer, orders)
-    fn = R.region_revenue if which == "region" else R.rollup_revenue
-    return fn(load(s, d, "region"), load(s, d, "nation"), customer, orders)
-
-
-def _orderkey_layout_served(s, d, which):
-    """Q3/Q4 on the SAME write-once orderkey layout Q5 uses (shared
-    _IDX_CACHE key, so one layout write serves all three queries —
-    exactly how a warehouse amortizes its fact layout)."""
-    from compute_histogram_spark.sources import bucketing as BK
-
-    key = ("q5layout", d)
-    if key not in _IDX_CACHE:
-        db = "bench_q5_" + hashlib.md5(d.encode()).hexdigest()[:10]
-        s.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '/tmp/{db}_wh'")
-        _IDX_CACHE[key] = BK.write_q5_layout(
-            s, d, buckets=BK.scaled_buckets(d), database=db
-        )
-    o, li = (s.table(t) for t in _IDX_CACHE[key])
-    if which == "q3":
-        return R.shipping_priority(load(s, d, "customer"), o, li)
-    if which == "q21":
-        return R.waiting_suppliers(o, li, load(s, d, "supplier"))
-    if which == "q18":
-        return R.large_volume_customers(load(s, d, "customer"), o, li)
-    if which == "q10":
-        return R.returned_item_customers(
-            load(s, d, "customer"), load(s, d, "nation"), o, li
-        )
-    if which == "q8":
-        return R.market_share(
-            li, o, load(s, d, "customer"), load(s, d, "supplier"),
-            load(s, d, "part"), load(s, d, "nation"), load(s, d, "region"),
-        )
-    if which == "q9":
-        return R.product_type_profit(
-            li, o, load(s, d, "supplier"), load(s, d, "part"),
-            load(s, d, "nation"),
-        )
-    if which == "q12":
-        return R.latency_mode_priority(o, li)
-    if which == "q7":
-        return R.volume_shipping(
-            li, o, load(s, d, "customer"), load(s, d, "supplier"),
-            load(s, d, "nation"), load(s, d, "region"),
-        )
-    return R.late_order_priority(o, li)
-
-
-def _userkey_layout_served(s, d, which):
-    """cohort_retention / event_transitions on a write-once events
-    layout bucketed by user_id (r13, the VERDICT r12 #4 attack on the
-    worst weak-class row): HashPartitioning(user_id) satisfies every
-    clustering the plans need — distinct(user, wk) and groupBy(user)
-    cluster on a superset of the bucket key, the cohort self-join and
-    the per-user windows cluster on the key itself — so the fact side
-    carries ZERO Exchange; only the bounded (cohort, week) /
-    (from, to) final aggregates shuffle. Same write-once amortization
-    claim as the orderkey/custkey layouts."""
-    from compute_histogram_spark.sources import bucketing as BK
-
-    key = ("uklayout", d)
-    if key not in _IDX_CACHE:
-        from compute_histogram_spark.operators.behavior import _week_key
-
-        db = "bench_uk_" + hashlib.md5(d.encode()).hexdigest()[:10]
-        s.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '/tmp/{db}_wh'")
-        # r15: materialize the epoch-week at write time (the tp_c
-        # derived-column precedent) — cohort's per-run timestamp
-        # decode + div chain was the layout row's remaining non-scan
-        # cost at sf100 (VERDICT r14 #6)
-        _IDX_CACHE[key] = BK.write_layout(
-            s, d, (("events", "user_id"),),
-            buckets=BK.scaled_buckets(d, table="events"), database=db,
-            derive={"events": {"wk": _week_key(load(s, d, "events"))}},
-        )["events"]
-    ev = s.table(_IDX_CACHE[key])
-    return (BH.cohort_retention_clustered if which == "cohort"
-            else BH.event_transitions)(ev)
-
-
-def _partkey_layout_served(s, d, which="q16"):
-    """Q16/q17/q20 on the write-once partkey layout (lineitem + part
-    co-bucketed on partkey, r15): the cold (untimed) run writes the
-    layout; warm runs measure the bucket-local plan — same amortization
-    claim as the orderkey/custkey families."""
-    from compute_histogram_spark.sources import bucketing as BK
-
-    key = ("pklayout", d)
-    if key not in _IDX_CACHE:
-        db = "bench_pk_" + hashlib.md5(d.encode()).hexdigest()[:10]
-        s.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '/tmp/{db}_wh'")
-        _IDX_CACHE[key] = BK.write_partkey_layout(
-            s, d, buckets=BK.scaled_buckets(d), database=db
-        )
-    li, part = (s.table(t) for t in _IDX_CACHE[key])
-    if which == "q17":
-        return R.small_quantity_revenue(li, load(s, d, "part"))
-    if which == "q20":
-        return R.promotion_suppliers(
-            li, load(s, d, "supplier"), load(s, d, "part")
-        )
-    if which == "q14":
-        return R.promo_revenue_share(part, li)
-    return R.supplier_part_counts(li, load(s, d, "supplier"), part)
-
-
-def _cents_projection_served(s, d):
-    """pricing_summary over the write-once integer-cents projection
-    (sources/bucketing.py:write_pricing_projection) — the derived-column
-    member of the layout family; value-exact vs the plain form."""
-    from compute_histogram_spark.sources import bucketing as BK
-
-    key = ("centsproj", d)
-    if key not in _IDX_CACHE:
-        _IDX_CACHE[key] = BK.write_pricing_projection(s, d)
-    return R.pricing_summary_projected(s.read.parquet(_IDX_CACHE[key]))
-
-
-def _ivfpq_index_served(s, d):
-    """Serve-time IVFPQ path: train/encode/persist once (cold run), then
-    measure ADC + exact rerank over the pruned code partitions only."""
-    from compute_histogram_spark.operators import pq as PQ
-
-    key = ("ivfpq", d)
-    if key not in _IDX_CACHE:
-        path = "/tmp/bench_ivfpq_idx_" + hashlib.md5(d.encode()).hexdigest()[:12]
-        PQ.write_ivfpq_index(load(s, d, "embeddings"), path, iters=2)
-        _IDX_CACHE[key] = path
-    return PQ.cosine_topk_ivfpq_index(s, _IDX_CACHE[key])
-
-
-def _ext_queries():
-    from compute_histogram_spark.operators import bpe as B
-    from compute_histogram_spark.operators import pq as PQ
-    from compute_histogram_spark.operators import profile as PR
-    from compute_histogram_spark.operators import text as TXm
-    from compute_histogram_spark.operators.pipeline import weighted_sample
-    from compute_histogram_spark.operators.windows import (
-        rolling_user_stats,
-        sessionize_salted,
-    )
-    from pyspark.sql import functions as Fx
-
-    from compute_histogram_spark.operators import behavior as BHx
-    from compute_histogram_spark.operators import lm as LM
-    from compute_histogram_spark.operators import windows as WDx
-
-    return {
-        "cosine_topk_ivf_index": _ivf_index_served,
-        "cosine_topk_ivfpq_index": _ivfpq_index_served,
-        "doc_perplexity": lambda s, d: LM.doc_perplexity(
-            load(s, d, "documents")
-        ),
-        "doc_perplexity_backoff": lambda s, d: LM.doc_perplexity_backoff(
-            load(s, d, "documents")
-        ),
-        "session_concurrency": lambda s, d: BHx.session_concurrency(
-            WDx.sessionize(load(s, d, "events"))
-        ),
-        "similarity_topk_pq": lambda s, d: PQ.cosine_topk_pq(
-            load(s, d, "embeddings"), iters=2
-        ),
-        "similarity_topk_ivfpq": lambda s, d: PQ.cosine_topk_ivfpq(
-            load(s, d, "embeddings"), iters=2
-        ),
-        "similarity_topk_sq": lambda s, d: PQ.cosine_topk_sq(
-            load(s, d, "embeddings")
-        ),
-        "bpe_encode": lambda s, d: B.bpe_encode(
-            load(s, d, "documents"),
-            B.bpe_train(B.word_freqs(load(s, d, "documents")), 6)[0],
-        ),
-        "token_pmi": lambda s, d: TXm.token_pmi(load(s, d, "documents")),
-        "distribution_drift": lambda s, d: PR.distribution_drift(
-            load(s, d, "events").where(Fx.col("event_type") != "purchase"),
-            load(s, d, "events").where(Fx.col("event_type") == "purchase"),
-        ),
-        "robust_outliers": lambda s, d: PR.robust_outliers(
-            load(s, d, "events")
-        ),
-        "rolling_user_stats": lambda s, d: rolling_user_stats(
-            load(s, d, "events")
-        ),
-        "sessionize_salted": lambda s, d: sessionize_salted(
-            load(s, d, "events")
-        ),
-        "weighted_sample": lambda s, d: weighted_sample(
-            load(s, d, "documents").withColumn(
-                "w", Fx.col("n_chars").cast("double")
-            ),
-            "w",
-            1000,
-        ),
-    }
 
 
 def _bench_set(spark, sf_dir, queries, times, errors,
@@ -848,10 +270,7 @@ def _bench_scale(
         if name in FLOOR_PROBES:
             fn, sql = FLOOR_PROBES[name]
         else:
-            # LOCAL first: bench rows may time a value-identical faster
-            # kernel than the window's declarative form (text_stats r10)
-            fn = LOCAL_QUERIES.get(name) or registry.QUERIES[name]
-            sql = registry.ORACLES.get(name) or LOCAL_ORACLES.get(name)
+            fn, sql = registry.CATALOG[TPCH.get(name, name)]
         if name in spark_only:
             sql = None  # comparator DNFs at this scale (see SF10_QUERIES)
         row: dict[str, float] = {}
@@ -939,92 +358,49 @@ def _bench_scale(
         out[label]["errors"] = errors
 
 
-# Full TPC-H-shape sweep as a tracked section (VERDICT r12 #3): all 22
-# adapted shapes, two engines, interleaved, at sf1 and sf10. Shapes
-# already in the registry window reuse their rows; the rest resolve from
-# the staged q_ builders + oracle constants (value-exactness pinned in
-# tests/test_staged_twins.py / test_rotated_out.py).
-_TPCH_STAGED = {
-    "tpch_q02": ("q_min_cost_supplier", "MIN_COST_SUPPLIER_ORACLE"),
-    "tpch_q06": ("q_forecast_revenue", "FORECAST_REVENUE_ORACLE"),
-    "tpch_q07": ("q_volume_shipping", "VOLUME_SHIPPING_ORACLE"),
-    "tpch_q08": ("q_market_share", "MARKET_SHARE_ORACLE"),
-    "tpch_q09": ("q_product_type_profit", "PRODUCT_PROFIT_ORACLE"),
-    "tpch_q10": ("q_returned_item_customers", "RETURNED_ITEM_CUSTOMERS_ORACLE"),
-    "tpch_q11": ("q_important_parts", "IMPORTANT_PARTS_ORACLE"),
-    "tpch_q12": ("q_latency_mode_priority", "LATENCY_MODE_ORACLE"),
-    "tpch_q13": ("q_customer_order_distribution", "CUSTOMER_ORDER_DIST_ORACLE"),
-    "tpch_q14": ("q_promo_revenue_share", "PROMO_REVENUE_SHARE_ORACLE"),
-    "tpch_q15": ("q_top_supplier", "TOP_SUPPLIER_ORACLE"),
-    "tpch_q16": ("q_supplier_part_counts", "SUPPLIER_PART_COUNTS_ORACLE"),
-    "tpch_q17": ("q_small_quantity_revenue", "SMALL_QUANTITY_ORACLE"),
-    "tpch_q19": ("q_disjunctive_band_revenue", "DISJUNCTIVE_BAND_ORACLE"),
-    "tpch_q20": ("q_promotion_suppliers", "PROMOTION_SUPPLIERS_ORACLE"),
-    "tpch_q21": ("q_waiting_suppliers", "WAITING_SUPPLIERS_ORACLE"),
-    "tpch_q22": ("q_sales_opportunity", "SALES_OPPORTUNITY_ORACLE"),
-}
-# window/fallback rows reused under their tpch label
-_TPCH_ALIASES = {
-    "tpch_q01": "pricing_summary",
-    "tpch_q03": "shipping_priority",
-    "tpch_q04": "late_order_priority",
-    "tpch_q05": "local_supplier_revenue",
-    "tpch_q18": "large_volume_customers",
-}
-for _lbl, (_qfn, _orc) in _TPCH_STAGED.items():
-    LOCAL_QUERIES[_lbl] = (
-        lambda s, d, _f=getattr(registry, _qfn): _f(s, d)
-    )
-    LOCAL_ORACLES[_lbl] = getattr(registry, _orc)
-for _lbl, _src in _TPCH_ALIASES.items():
-    LOCAL_QUERIES[_lbl] = (
-        lambda s, d, _n=_src: (LOCAL_QUERIES.get(_n) or registry.QUERIES[_n])(s, d)
-    )
-    LOCAL_ORACLES[_lbl] = (
-        registry.ORACLES.get(_src) or LOCAL_ORACLES[_src]
-    )
-# r16 (VERDICT r15 #5): the tracked TPC-H sweeps measure the ADOPTED
-# forms. Where the shipped answer is a layout-family member (value-exact
-# twin, plan-pinned in tests/test_bucketing.py), the tpch_* label
-# resolves to the layout-served callable — the warehouse write is the
-# untimed cold run, amortized across the sweep (the sf100 protocol).
-# DuckDB keeps the plain oracle over the raw parquet: the comparator is
-# unchanged; only Spark's recorded plan moves to what the engine would
-# actually run at scale.
-_TPCH_ADOPTED = {
+# Full TPC-H-shape sweep as a tracked section: all 22 adapted shapes, two
+# engines, interleaved, at sf1 and sf10. Each label names the catalog
+# entry it times. Where the shipped answer is a layout form, the label
+# times it: the layout write is the untimed cold run, amortized across
+# the sweep. DuckDB runs the entry's oracle, the base query's SQL over
+# the raw parquet.
+TPCH = {
     "tpch_q01": "pricing_summary_layout",
+    "tpch_q02": "min_cost_supplier",
     "tpch_q03": "shipping_priority_layout",
     "tpch_q04": "late_order_priority_layout",
     "tpch_q05": "local_supplier_revenue_layout",
+    "tpch_q06": "forecast_revenue",
     "tpch_q07": "volume_shipping_layout",
     "tpch_q08": "market_share_layout",
     "tpch_q09": "product_type_profit_layout",
     "tpch_q10": "returned_item_customers_layout",
+    "tpch_q11": "important_parts",
     "tpch_q12": "latency_mode_layout",
+    "tpch_q13": "customer_order_distribution",
     "tpch_q14": "promo_revenue_share_layout",
+    "tpch_q15": "top_supplier",
     "tpch_q16": "supplier_part_counts_layout",
     "tpch_q17": "small_quantity_revenue_layout",
     "tpch_q18": "large_volume_customers_layout",
+    "tpch_q19": "disjunctive_band_revenue",
     "tpch_q20": "promotion_suppliers_layout",
     "tpch_q21": "waiting_suppliers_layout",
     "tpch_q22": "sales_opportunity_layout",
 }
-for _lbl, _src in _TPCH_ADOPTED.items():
-    LOCAL_QUERIES[_lbl] = (lambda s, d, _n=_src: LOCAL_QUERIES[_n](s, d))
-TPCH_NAMES = sorted(set(_TPCH_STAGED) | set(_TPCH_ALIASES))
 
 
 def _bench_tpch(spark, out: dict) -> None:
     _bench_scale(
         spark, out, "tpch_sf1", 10,
         os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/sf1"),
-        TPCH_NAMES,
+        sorted(TPCH),
         float(os.environ.get("SPARK_GRAFT_TPCH1_BUDGET_S", "480")),
     )
     _bench_scale(
         spark, out, "tpch_sf10", 100,
         os.environ.get("SPARK_GRAFT_SF10_DIR", "/tmp/sf10"),
-        TPCH_NAMES,
+        sorted(TPCH),
         float(os.environ.get("SPARK_GRAFT_TPCH10_BUDGET_S", "900")),
         min_runs=1,
     )
@@ -1199,14 +575,11 @@ def main() -> None:
     _bench_set(
         spark,
         sf_dir,
-        {n: LOCAL_QUERIES.get(n) or registry.QUERIES[n] for n in HEADLINE},
+        {n: registry.CATALOG[n].build for n in HEADLINE},
         times,
         errors,
         mixed=mixed,
     )
-    ext: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_EXT"):
-        _bench_set(spark, sf_dir, _ext_queries(), ext, errors)
 
     # HEADLINE = the MIXED (order-randomized, dual-state) reading since
     # r12 (VERDICT r11 #6): tracking only the back-to-back fresh number
@@ -1226,8 +599,6 @@ def main() -> None:
         "n_err": len(errors),
         "calibration_pre": calib_pre,
     }
-    if ext:
-        out["ext"] = ext
     if errors:
         out["errors"] = errors
     # sf0.1 interleaved two-engine sweep (the box-robust ratio at the

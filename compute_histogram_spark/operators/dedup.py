@@ -91,12 +91,7 @@ def minhash_candidates(
 ) -> DataFrame:
     """LSH candidate pairs (doc_id_1 < doc_id_2) sharing >= 1 band bucket."""
     sig = minhash_signatures(shingle_table(docs, n=n, distinct=False), num_hashes)
-    bands = sig.select("doc_id", *band_hashes(num_hashes, rows_per_band))
-    n_bands = num_hashes // rows_per_band
-    stack_args = ", ".join(f"{b}, band{b}" for b in range(n_bands))
-    long = bands.selectExpr(
-        "doc_id", f"stack({n_bands}, {stack_args}) AS (band_id, band_hash)"
-    )
+    long = _band_long(sig, num_hashes, rows_per_band)
     a, b = long.alias("a"), long.alias("b")
     # r16 optimization round (guide §3.1): without a hint, the optimizer
     # broadcasts one side of this self-join at bench scales — and a

@@ -1689,10 +1689,9 @@ def supplier_part_counts(
     count(DISTINCT l_suppkey) per class is exact — partial distinct
     aggregation map-side, one shuffle on the class key.
 
-    r13 ADOPTED (tools/ab_q16_r13.py, sf10 min-of-3 interleaved,
-    value-exact): the class-ID indirection. The (brand, type, size)
-    class space is bounded (O(brands x types x sizes), never
-    data-scaled), so a dense int id broadcast onto part lets the
+    The class-ID indirection (measured sf10 min-of-3 interleaved,
+    value-exact): the (brand, type, size) class space is bounded
+    (O(brands x types x sizes), never data-scaled), so a dense int id broadcast onto part lets the
     distinct shuffle move (class_id, suppkey) = two ints instead of
     ~50 wide string bytes per fact row, and SHUFFLE_HASH on the part
     join (the one star whose part side CANNOT broadcast — the

@@ -1,58 +1,11 @@
-"""Value-exact pins for the staged-twin bank: the DuckDB oracles live in
-registry.py as module constants, rotation-ready; these tests are the
-driver-gate stand-in until the names enter the 50-entry window (the same
-arrangement every staged wave used).
+"""Value-exact checks of catalog entries against their DuckDB oracles,
+plus behavioral pins for the same operators.
 
-r12 status: five of the seven r11-staged twins rotated IN
-(chunk_documents, contamination_report, token_hll, quality_model_score,
-zorder_key — now driver-gated every round; their pins here stay as the
-sf0.001 fast check). The two spares (returned_item_customers,
-corpus_checksum) remain staged for the 9th rotation.
-
-r13 status: the 9th rotation landed — dup_span_removal, dsir_weights,
-pr_curve, large_volume_customers, vocab_growth are now driver-gated;
-their pins here stay as the fast check. Newly staged this round:
-streaming_user_stats (the first streaming-derived twin),
-end_to_end_corpus (the five-stage composed pipeline), blocklist_signals
-(C4-style blocked-word gate), embedding_covariance (the one-pass
-moments stage of PCA whitening), streaming_exact_dedup (the second
-streaming operator under the value-exact gate) and corpus_overlap_kmv
-(cross-corpus Jaccard from mergeable KMV sketches).
-
-r14 status: the 10th rotation landed — end_to_end_corpus,
-streaming_user_stats, blocklist_signals, embedding_covariance and
-corpus_overlap_kmv are now driver-gated; their pins here stay as the
-fast check. Newly staged this round: streaming_drift (the THIRD
-streaming twin — cumulative per-batch PSI through the deterministic
-drain, every intermediate report oracle-checked),
-similarity_topk_pca_index (the persisted PCA serving path at full dim,
-sharing the exact tier's oracle), streaming_norm_dedup (the FOURTH
-streaming twin: C4-normalized dedup over an augmented documents
-stream) and pricing_summary_projected (Q1 over the write-once cents
-projection, sharing the plain form's oracle).
-
-r16 status: the 12th rotation landed — token_bloom, dedup_triangles,
-similarity_topk_pca_index (plus the streaming twins from wave 11) are
-driver-gated; pins here stay as the fast check. Newly staged this round
-(wave-13 bank): neardup_source_overlap (cross-source near-dup provenance
-matrix over the banded MinHash pair set), skipgram_pairs (window-2
-skip-gram context counts, the word2vec/GloVe pre-pass) and
-doc_length_quantiles (per-lang EXACT quantiles by integer rank
-selection — zero float arithmetic, layout-invariant by construction),
-plus streaming_sessionize (the FIFTH streaming twin: the native
-session_window state machine drained to convergence via complete mode
-+ far-future watermark; exact-gap merge parity with the batch CTE
-pinned in tests/test_streaming.py). All passed check_oracle compare +
-the --layouts 1/7/64 pre-screen at sf0.01 before staging.
-
-r16 addendum: three more streaming twins joined the bank — 
-streaming_neardup (SIXTH: online MinHash-LSH first-occurrence marking;
-stateless array-HOF signatures, the one stateful agg holds per-band
-minima), streaming_segment_revenue (SEVENTH: the first two-input twin,
-orders stream x static customer dim broadcast join + integer-cents
-agg), and streaming_token_cms (EIGHTH: a Count-Min sketch AS streaming
-state, sharing TOKEN_CMS_ORACLE with the rotated-out batch twin). Each
-is value-exact at both SFs and pinned batch-split-invariant below."""
+PINS lists the entries checked one to one at the session sf_dir. The
+``*_both_sfs`` tests check an entry at both test SFs; the others pin
+behavior on small hand-built frames (ties, zero buckets, batch-split
+invariance, known graphs).
+"""
 
 import os
 import sys
@@ -61,48 +14,13 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-from check_oracle import compare, duck_connection  # noqa: E402
-
-
-def _check(name, sdf, con, sql):
-    pdf = sdf.toPandas()
-    odf = con.sql(sql).df()
-    assert len(pdf) > 0
-    assert compare(name, pdf, odf) == []
+from catalog_pins import add_pins, check as _check  # noqa: E402
+from check_oracle import duck_connection  # noqa: E402
 
 
 @pytest.fixture(scope="module")
 def con(sf_dir):
     return duck_connection(sf_dir)
-
-
-def test_chunk_documents_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        CHUNK_DOCUMENTS_ORACLE,
-        q_chunk_documents,
-    )
-
-    _check("chunk_documents", q_chunk_documents(spark, sf_dir), con,
-           CHUNK_DOCUMENTS_ORACLE)
-
-
-def test_contamination_report_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        CONTAMINATION_ORACLE,
-        q_contamination_report,
-    )
-
-    _check("contamination_report", q_contamination_report(spark, sf_dir),
-           con, CONTAMINATION_ORACLE)
-
-
-def test_token_hll_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        TOKEN_HLL_ORACLE,
-        q_token_hll,
-    )
-
-    _check("token_hll", q_token_hll(spark, sf_dir), con, TOKEN_HLL_ORACLE)
 
 
 def test_hll_portable_estimate_tracks_exact(spark, sf_dir):
@@ -122,70 +40,6 @@ def test_hll_portable_estimate_tracks_exact(spark, sf_dir):
     exact = t.distinct().count()
     est = hll_estimate(hll_register_table_portable(t, "t", p=12), p=12)
     assert abs(est - exact) / exact < 0.10, (est, exact)
-
-
-def test_returned_item_customers_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        RETURNED_ITEM_CUSTOMERS_ORACLE,
-        q_returned_item_customers,
-    )
-
-    _check("returned_item_customers",
-           q_returned_item_customers(spark, sf_dir), con,
-           RETURNED_ITEM_CUSTOMERS_ORACLE)
-
-
-def test_corpus_checksum_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        CORPUS_CHECKSUM_ORACLE,
-        q_corpus_checksum,
-    )
-
-    _check("corpus_checksum", q_corpus_checksum(spark, sf_dir), con,
-           CORPUS_CHECKSUM_ORACLE)
-
-
-def test_quality_model_score_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        QUALITY_MODEL_SCORE_ORACLE,
-        q_quality_model_score,
-    )
-
-    _check("quality_model_score", q_quality_model_score(spark, sf_dir),
-           con, QUALITY_MODEL_SCORE_ORACLE)
-
-
-def test_zorder_key_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        ZORDER_KEY_ORACLE,
-        q_zorder_key,
-    )
-
-    _check("zorder_key", q_zorder_key(spark, sf_dir), con,
-           ZORDER_KEY_ORACLE)
-
-
-# --- r12 bank refill: three new operators staged for the 9th rotation ---
-
-
-def test_token_entropy_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        TOKEN_ENTROPY_ORACLE,
-        q_token_entropy,
-    )
-
-    _check("token_entropy", q_token_entropy(spark, sf_dir), con,
-           TOKEN_ENTROPY_ORACLE)
-
-
-def test_normalized_dedup_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        NORMALIZED_DEDUP_ORACLE,
-        q_normalized_dedup,
-    )
-
-    _check("normalized_dedup", q_normalized_dedup(spark, sf_dir), con,
-           NORMALIZED_DEDUP_ORACLE)
 
 
 def test_normalized_dedup_catches_case_punct_copies(spark):
@@ -210,26 +64,6 @@ def test_normalized_dedup_catches_case_punct_copies(spark):
     by_id = {r.doc_id: r for r in kept}
     assert by_id[1].n_copies == 3
     assert by_id[4].n_copies == 1
-
-
-def test_idf_top_terms_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        IDF_TOP_TERMS_ORACLE,
-        q_idf_top_terms,
-    )
-
-    _check("idf_top_terms", q_idf_top_terms(spark, sf_dir), con,
-           IDF_TOP_TERMS_ORACLE)
-
-
-def test_dup_span_removal_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        DUP_SPAN_ORACLE,
-        q_dup_span_removal,
-    )
-
-    _check("dup_span_removal", q_dup_span_removal(spark, sf_dir), con,
-           DUP_SPAN_ORACLE)
 
 
 def test_dup_span_removal_planted_span(spark):
@@ -259,16 +93,6 @@ def test_dup_span_removal_planted_span(spark):
     assert out[3].text == "totally unique words here nothing shared"
     # 7-token docs have no 16-windows: nothing marked despite the overlap
     assert out[4].n_removed == 0 and out[5].n_removed == 0
-
-
-def test_token_bloom_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        TOKEN_BLOOM_ORACLE,
-        q_token_bloom,
-    )
-
-    _check("token_bloom", q_token_bloom(spark, sf_dir), con,
-           TOKEN_BLOOM_ORACLE)
 
 
 def test_bloom_no_false_negatives_and_merge(spark):
@@ -306,16 +130,6 @@ def test_bloom_no_false_negatives_and_merge(spark):
     assert got == want  # shard-merge == single-pass build (CRDT)
 
 
-def test_dsir_weights_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        DSIR_WEIGHTS_ORACLE,
-        q_dsir_weights,
-    )
-
-    _check("dsir_weights", q_dsir_weights(spark, sf_dir), con,
-           DSIR_WEIGHTS_ORACLE)
-
-
 def test_dsir_select_prefers_target_like_docs(spark):
     """Behavioral pin: with a target corpus of 'aa bb' docs and a mixed
     source, DSIR selects the target-like source docs first (plain
@@ -340,15 +154,6 @@ def test_dsir_select_prefers_target_like_docs(spark):
     assert [(r.doc_id, r.score) for r in g1] == [(r.doc_id, r.score) for r in g2]
 
 
-def test_pr_curve_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        PR_CURVE_ORACLE,
-        q_pr_curve,
-    )
-
-    _check("pr_curve", q_pr_curve(spark, sf_dir), con, PR_CURVE_ORACLE)
-
-
 def test_pr_curve_known_values(spark):
     """Hand-checkable pin: 4 docs, scores .1/.4/.6/.9, labels 0/1/0/1."""
     from pyspark.sql import Row
@@ -371,27 +176,6 @@ def test_pr_curve_known_values(spark):
     assert r0.precision == 0.5 and r0.recall == 1.0
 
 
-def test_large_volume_customers_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        LARGE_VOLUME_ORACLE,
-        q_large_volume_customers,
-    )
-
-    _check("large_volume_customers",
-           q_large_volume_customers(spark, sf_dir), con,
-           LARGE_VOLUME_ORACLE)
-
-
-def test_dedup_triangles_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        TRIANGLE_ORACLE,
-        q_dedup_triangles,
-    )
-
-    _check("dedup_triangles", q_dedup_triangles(spark, sf_dir), con,
-           TRIANGLE_ORACLE)
-
-
 def test_triangle_count_known_graphs(spark):
     """Hand-checkable pins: K4 has 4 triangles; a square has 0; adding
     one diagonal makes 2; duplicate/reversed edges don't double-count."""
@@ -410,26 +194,6 @@ def test_triangle_count_known_graphs(spark):
     assert tc(square + [(1, 3)]) == 2
     noisy = k4 + [(2, 1), (3, 1), (1, 2)]  # reversed + duplicate edges
     assert tc(noisy) == 4
-
-
-def test_waiting_suppliers_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        WAITING_SUPPLIERS_ORACLE,
-        q_waiting_suppliers,
-    )
-
-    _check("waiting_suppliers", q_waiting_suppliers(spark, sf_dir), con,
-           WAITING_SUPPLIERS_ORACLE)
-
-
-def test_vocab_growth_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        VOCAB_GROWTH_ORACLE,
-        q_vocab_growth,
-    )
-
-    _check("vocab_growth", q_vocab_growth(spark, sf_dir), con,
-           VOCAB_GROWTH_ORACLE)
 
 
 def test_vocab_growth_monotone_and_bounded(spark):
@@ -451,17 +215,6 @@ def test_vocab_growth_monotone_and_bounded(spark):
     assert [r.vocab_size for r in rows] == [2, 3, 4, 4]
 
 
-def test_customer_order_distribution_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        CUSTOMER_ORDER_DIST_ORACLE,
-        q_customer_order_distribution,
-    )
-
-    _check("customer_order_distribution",
-           q_customer_order_distribution(spark, sf_dir), con,
-           CUSTOMER_ORDER_DIST_ORACLE)
-
-
 def test_customer_order_distribution_keeps_zero_bucket(spark):
     """The outer-join point: a customer with no orders lands in
     c_count=0 — an inner join would silently drop the bucket."""
@@ -480,40 +233,6 @@ def test_customer_order_distribution_keeps_zero_bucket(spark):
     rows = {r.c_count: r.custdist
             for r in customer_order_distribution(cust, orders).collect()}
     assert rows == {0: 2, 2: 1}
-
-
-# --- r12 continuation: the TPC-H completion sweep ---
-
-
-def test_forecast_revenue_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        FORECAST_REVENUE_ORACLE,
-        q_forecast_revenue,
-    )
-
-    _check("forecast_revenue", q_forecast_revenue(spark, sf_dir), con,
-           FORECAST_REVENUE_ORACLE)
-
-
-def test_latency_mode_priority_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        LATENCY_MODE_ORACLE,
-        q_latency_mode_priority,
-    )
-
-    _check("latency_mode_priority",
-           q_latency_mode_priority(spark, sf_dir), con, LATENCY_MODE_ORACLE)
-
-
-def test_disjunctive_band_revenue_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        DISJUNCTIVE_BAND_ORACLE,
-        q_disjunctive_band_revenue,
-    )
-
-    _check("disjunctive_band_revenue",
-           q_disjunctive_band_revenue(spark, sf_dir), con,
-           DISJUNCTIVE_BAND_ORACLE)
 
 
 def test_disjunctive_prefilter_is_necessary_condition(spark):
@@ -546,56 +265,6 @@ def test_disjunctive_prefilter_is_necessary_condition(spark):
     assert row.revenue == 100.0 * 0.95 + 200.0 * 0.90
 
 
-def test_sales_opportunity_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        SALES_OPPORTUNITY_ORACLE,
-        q_sales_opportunity,
-    )
-
-    _check("sales_opportunity", q_sales_opportunity(spark, sf_dir), con,
-           SALES_OPPORTUNITY_ORACLE)
-
-
-def test_volume_shipping_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        VOLUME_SHIPPING_ORACLE,
-        q_volume_shipping,
-    )
-
-    _check("volume_shipping", q_volume_shipping(spark, sf_dir), con,
-           VOLUME_SHIPPING_ORACLE)
-
-
-def test_market_share_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        MARKET_SHARE_ORACLE,
-        q_market_share,
-    )
-
-    _check("market_share", q_market_share(spark, sf_dir), con,
-           MARKET_SHARE_ORACLE)
-
-
-def test_product_type_profit_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        PRODUCT_PROFIT_ORACLE,
-        q_product_type_profit,
-    )
-
-    _check("product_type_profit", q_product_type_profit(spark, sf_dir),
-           con, PRODUCT_PROFIT_ORACLE)
-
-
-def test_top_supplier_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        TOP_SUPPLIER_ORACLE,
-        q_top_supplier,
-    )
-
-    _check("top_supplier", q_top_supplier(spark, sf_dir), con,
-           TOP_SUPPLIER_ORACLE)
-
-
 def test_top_supplier_keeps_exact_ties(spark):
     """The winner filter compares integer rev_e4, so exact revenue ties
     return BOTH suppliers (the Q15 tie semantics a double-compare can
@@ -624,57 +293,6 @@ def test_top_supplier_keeps_exact_ties(spark):
         (1, 100.0), (2, 100.0)]
 
 
-def test_min_cost_supplier_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        MIN_COST_SUPPLIER_ORACLE,
-        q_min_cost_supplier,
-    )
-
-    _check("min_cost_supplier", q_min_cost_supplier(spark, sf_dir), con,
-           MIN_COST_SUPPLIER_ORACLE)
-
-
-def test_important_parts_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        IMPORTANT_PARTS_ORACLE,
-        q_important_parts,
-    )
-
-    _check("important_parts", q_important_parts(spark, sf_dir), con,
-           IMPORTANT_PARTS_ORACLE)
-
-
-def test_supplier_part_counts_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        SUPPLIER_PART_COUNTS_ORACLE,
-        q_supplier_part_counts,
-    )
-
-    _check("supplier_part_counts", q_supplier_part_counts(spark, sf_dir),
-           con, SUPPLIER_PART_COUNTS_ORACLE)
-
-
-def test_small_quantity_revenue_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        SMALL_QUANTITY_ORACLE,
-        q_small_quantity_revenue,
-    )
-
-    _check("small_quantity_revenue",
-           q_small_quantity_revenue(spark, sf_dir), con,
-           SMALL_QUANTITY_ORACLE)
-
-
-def test_promotion_suppliers_twin(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        PROMOTION_SUPPLIERS_ORACLE,
-        q_promotion_suppliers,
-    )
-
-    _check("promotion_suppliers", q_promotion_suppliers(spark, sf_dir),
-           con, PROMOTION_SUPPLIERS_ORACLE)
-
-
 def test_small_quantity_gate_is_integer_exact(spark):
     """The 1/5-of-average gate multiplies through by the group count —
     a part with avg qty 10.0 keeps qty 1.99 (< 2.0) and drops qty 2.0
@@ -698,20 +316,6 @@ def test_small_quantity_gate_is_integer_exact(spark):
     assert row.avg_yearly == 100.0 / 7.0
 
 
-def test_streaming_user_stats_twin(spark, sf_dir, con):
-    """r13: the first streaming-derived staged twin — the stateful
-    applyInPandasWithState operator drained through four deterministic
-    micro-batches must match the DuckDB GROUP BY value-exact."""
-    from compute_histogram_spark.registry import (
-        STREAMING_USER_STATS_ORACLE,
-        q_streaming_user_stats,
-    )
-
-    _check("streaming_user_stats",
-           q_streaming_user_stats(spark, sf_dir), con,
-           STREAMING_USER_STATS_ORACLE)
-
-
 def test_streaming_user_stats_batches_are_deterministic(spark, sf_dir):
     """The harness replays identical batch boundaries run to run: same
     file set, same mtimes, same per-file row counts."""
@@ -732,55 +336,6 @@ def test_streaming_user_stats_batches_are_deterministic(spark, sf_dir):
     assert mtimes == sorted(mtimes) and len(set(mtimes)) == 4
 
 
-def test_end_to_end_corpus_twin(spark, sf_dir, con):
-    """r13: the five-stage composed pipeline (url -> exact -> near-dup ->
-    span scrub -> quality gate) as ONE lazy plan, value-exact against
-    the five stage oracles chained in one SQL."""
-    from compute_histogram_spark.registry import (
-        END_TO_END_CORPUS_ORACLE,
-        q_end_to_end_corpus,
-    )
-
-    _check("end_to_end_corpus", q_end_to_end_corpus(spark, sf_dir), con,
-           END_TO_END_CORPUS_ORACLE)
-
-
-def test_blocklist_signals_twin(spark, sf_dir, con):
-    """r13 (wave-10 bank): C4-style blocklist gate."""
-    from compute_histogram_spark.registry import (
-        BLOCKLIST_ORACLE,
-        q_blocklist_signals,
-    )
-
-    _check("blocklist_signals", q_blocklist_signals(spark, sf_dir), con,
-           BLOCKLIST_ORACLE)
-
-
-def test_embedding_covariance_twin(spark, sf_dir, con):
-    """r13 (wave-10 bank): one-pass distributed covariance — the moments
-    stage of PCA whitening."""
-    from compute_histogram_spark.registry import (
-        EMBEDDING_COVARIANCE_ORACLE,
-        q_embedding_covariance,
-    )
-
-    _check("embedding_covariance", q_embedding_covariance(spark, sf_dir),
-           con, EMBEDDING_COVARIANCE_ORACLE)
-
-
-def test_streaming_exact_dedup_twin(spark, sf_dir, con):
-    """r13 (wave-10 bank): the SECOND streaming operator under the
-    value-exact gate — dropDuplicatesWithinWatermark drained through the
-    fixed micro-batch harness equals the batch first-occurrence set."""
-    from compute_histogram_spark.registry import (
-        STREAMING_EXACT_DEDUP_ORACLE,
-        q_streaming_exact_dedup,
-    )
-
-    _check("streaming_exact_dedup", q_streaming_exact_dedup(spark, sf_dir),
-           con, STREAMING_EXACT_DEDUP_ORACLE)
-
-
 def test_streaming_exact_dedup_drain_deterministic(spark, sf_dir):
     """Two independent drains produce identical rows (batch content and
     order are pinned by the harness; the projection is emission-invariant)."""
@@ -789,18 +344,6 @@ def test_streaming_exact_dedup_drain_deterministic(spark, sf_dir):
     a = [tuple(r) for r in q_streaming_exact_dedup(spark, sf_dir).collect()]
     b = [tuple(r) for r in q_streaming_exact_dedup(spark, sf_dir).collect()]
     assert a == b and len(a) > 0
-
-
-def test_corpus_overlap_kmv_twin(spark, sf_dir, con):
-    """r13 (wave-10 bank): cross-corpus Jaccard/intersection from two
-    mergeable KMV sketches — overlap planning without a corpus join."""
-    from compute_histogram_spark.registry import (
-        CORPUS_OVERLAP_KMV_ORACLE,
-        q_corpus_overlap_kmv,
-    )
-
-    _check("corpus_overlap_kmv", q_corpus_overlap_kmv(spark, sf_dir), con,
-           CORPUS_OVERLAP_KMV_ORACLE)
 
 
 def test_streaming_drift_twin_both_sfs(spark):
@@ -1034,3 +577,22 @@ def test_streaming_token_cms_invariant_under_batch_split(spark):
     a = [tuple(r) for r in drained_token_cms(spark, sf, 4).collect()]
     b = [tuple(r) for r in drained_token_cms(spark, sf, 2).collect()]
     assert a == b and len(a) == 10
+
+
+# catalog entries checked one to one against their oracles
+PINS = (
+    "chunk_documents", "contamination_report", "token_hll",
+    "returned_item_customers", "corpus_checksum", "quality_model_score",
+    "zorder_key", "token_entropy", "normalized_dedup", "idf_top_terms",
+    "dup_span_removal", "token_bloom", "dsir_weights", "pr_curve",
+    "large_volume_customers", "dedup_triangles", "waiting_suppliers",
+    "vocab_growth", "customer_order_distribution", "forecast_revenue",
+    "latency_mode_priority", "disjunctive_band_revenue",
+    "sales_opportunity", "volume_shipping", "market_share",
+    "product_type_profit", "top_supplier", "min_cost_supplier",
+    "important_parts", "supplier_part_counts", "small_quantity_revenue",
+    "promotion_suppliers", "streaming_user_stats", "end_to_end_corpus",
+    "blocklist_signals", "embedding_covariance", "streaming_exact_dedup",
+    "corpus_overlap_kmv",
+)
+add_pins(globals(), PINS, "_twin")

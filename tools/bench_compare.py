@@ -2,9 +2,9 @@
 
 Regenerates the BASELINE.md comparison table: for each headline query, the
 Spark plan is materialized to a noop sink (full execution, no driver
-transfer) and the registry's own oracle SQL runs in DuckDB over the same
-parquet files — both min-of-3 warm. Queries without an oracle time
-Spark-only. Output: a markdown table on stdout plus one JSON line.
+transfer) and the catalog entry's oracle SQL runs in DuckDB over the same
+parquet files — both min-of-3 warm. Output: a markdown table on stdout
+plus one JSON line.
 
 Usage: python tools/bench_compare.py [sf_dir]
 """
@@ -21,7 +21,7 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(_HERE))  # repo root: bench.py, package
 sys.path.insert(0, _HERE)  # sibling tool modules: check_oracle
 
-from bench import HEADLINE, LOCAL_ORACLES, LOCAL_QUERIES, materialize
+from bench import HEADLINE, materialize
 from check_oracle import duck_connection
 from compute_histogram_spark import registry
 from compute_histogram_spark.session import get_session
@@ -42,7 +42,7 @@ def main() -> None:
 
     rows = []
     for name in HEADLINE:
-        fn = registry.QUERIES.get(name) or LOCAL_QUERIES[name]
+        fn, sql = registry.CATALOG[name]
         materialize(fn(spark, sf_dir))  # warm-up
         s_times = []
         for _ in range(3):
@@ -50,31 +50,21 @@ def main() -> None:
             materialize(fn(spark, sf_dir))
             s_times.append(time.time() - t0)
 
-        d_best = None
-        sql = registry.ORACLES.get(name) or LOCAL_ORACLES.get(name)
-        if sql is not None:
-            con.execute(sql).fetchall()  # warm-up
-            d_times = []
-            for _ in range(3):
-                t0 = time.time()
-                con.execute(sql).fetchall()
-                d_times.append(time.time() - t0)
-            d_best = round(min(d_times), 3)
-        rows.append((name, round(min(s_times), 3), d_best))
+        con.execute(sql).fetchall()  # warm-up
+        d_times = []
+        for _ in range(3):
+            t0 = time.time()
+            con.execute(sql).fetchall()
+            d_times.append(time.time() - t0)
+        rows.append((name, round(min(s_times), 3), round(min(d_times), 3)))
 
     print("| query | Spark engine (s) | DuckDB (s) |")
     print("|---|---|---|")
     for name, s, d in rows:
-        print(f"| {name} | {s:.2f} | {'—' if d is None else f'{d:.3f}'} |")
-    # totals compare the SAME query set: only oracle-backed queries count on
-    # both sides, so an oracle-less headline entry can't skew the ratio
-    both = [(s, d) for _, s, d in rows if d is not None]
-    s_total = round(sum(s for s, _ in both), 3)
-    d_total = round(sum(d for _, d in both), 3)
-    print(
-        f"| **total ({len(both)} oracle-backed of {len(rows)})** "
-        f"| **{s_total}** | **{d_total}** |"
-    )
+        print(f"| {name} | {s:.2f} | {d:.3f} |")
+    s_total = round(sum(s for _, s, _ in rows), 3)
+    d_total = round(sum(d for _, _, d in rows), 3)
+    print(f"| **total ({len(rows)})** | **{s_total}** | **{d_total}** |")
     print(
         json.dumps(
             {

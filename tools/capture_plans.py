@@ -1,5 +1,7 @@
-"""Capture .explain("formatted") for every declared registry query (and
-the benched layout/fallback rows) into plans/<round>/<name>_<tag>.txt (round via SPARK_GRAFT_PLAN_ROUND, default r17).
+"""Capture .explain("formatted") for every entry of registry.CATALOG (the
+declared window, the benched rows and their layout forms, and the queries
+outside the window) into plans/<round>/<name>_<tag>.txt (round via
+SPARK_GRAFT_PLAN_ROUND, default r17; an absolute path is used as is).
 
 Usage: python tools/capture_plans.py <tag> [sf_dir] [name ...]
 
@@ -30,27 +32,20 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     only = set(sys.argv[3:])
 
-    import bench
-
     spark = get_session("capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", __import__("os").environ.get("SPARK_GRAFT_PLAN_ROUND", "r17"),
+        "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r17"),
     )
     os.makedirs(outdir, exist_ok=True)
 
-    names: dict[str, object] = dict(registry.QUERIES)
-    # benched rows not in the window (fallbacks + layout-served forms)
-    for n, fn in bench.LOCAL_QUERIES.items():
-        names.setdefault(n, fn)
-
     n_ok = n_err = 0
-    for name in sorted(names):
+    for name in sorted(registry.CATALOG):
         if only and name not in only:
             continue
-        fn = names[name]
+        fn = registry.CATALOG[name].build
         spark.sparkContext.setJobDescription(f"plan:{name}")
         try:
             df = fn(spark, sf_dir)

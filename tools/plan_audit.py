@@ -1,7 +1,8 @@
 """Physical-plan audit: the scale-shape gate.
 
-For every registry query, materialize the executed plan string and check
-the properties that decide 100 TB behavior:
+For every declared query and the EXTRA catalog entries, materialize the
+executed plan string and check the properties that decide 100 TB
+behavior:
 
 - parquet scans carry PushedFilters / a pruned ReadSchema when the query
   filters/projects (pushdown reached the source)
@@ -22,8 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from compute_histogram_spark import registry
 from compute_histogram_spark.session import get_session
-import __spark_entry__ as entrymod
 
 # queries where a nested-loop join is the intended physical strategy:
 # - range_band_join: non-equi band predicate over a broadcast 4-row dim
@@ -95,9 +96,9 @@ NLJ_ALLOWED = {
 PY_KERNEL = {
     "multimodal_features",
     "similarity_topk_gemm",
-    "doc_fingerprint_arrow",
-    "text_profile_arrow",
-    "ngram_jaccard_arrow",
+    "doc_fingerprint",
+    "text_stats",
+    "dedup_ngram_jaccard",
 }
 
 # queries whose plan carries a GLOBAL ordered window (single-partition sort)
@@ -124,142 +125,40 @@ GLOBAL_WINDOW_BOUNDED = {
 }
 
 
-def _extra_queries():
-    """Non-registry operators added in r6 — plan-shape-gated here even
-    though they sit outside the 50-entry driver window."""
-    from compute_histogram_spark.operators import behavior as BH
-    from compute_histogram_spark.operators import lm as LM
-    from compute_histogram_spark.operators.pipeline import temperature_mix
-    from compute_histogram_spark.operators.windows import sessionize
-    from compute_histogram_spark.sources.tables import load
-
-    from compute_histogram_spark.operators import dedup as DD
-    from compute_histogram_spark.operators import text as TXa
-
-    return {
-        # the three Arrow bench-swap forms (r10-r11): value-identical to
-        # their declarative window twins, so their plan SHAPES are gated
-        # here even though the driver window carries the JVM forms
-        "doc_fingerprint_arrow": lambda s, d: TXa.doc_fingerprint_arrow(
-            load(s, d, "documents")
-        ),
-        "text_profile_arrow": lambda s, d: TXa.text_profile_arrow(
-            load(s, d, "documents")
-        ),
-        "ngram_jaccard_arrow": lambda s, d: DD.ngram_jaccard_pairs_arrow(
-            load(s, d, "documents"), threshold=0.5, max_df=100
-        ),
-        "doc_perplexity": lambda s, d: LM.doc_perplexity(
-            load(s, d, "documents")
-        ),
-        "doc_perplexity_backoff": lambda s, d: LM.doc_perplexity_backoff(
-            load(s, d, "documents")
-        ),
-        "session_concurrency": lambda s, d: BH.session_concurrency(
-            sessionize(load(s, d, "events"))
-        ),
-        "peak_concurrency": lambda s, d: BH.peak_concurrency(
-            sessionize(load(s, d, "events"))
-        ),
-        "temperature_mix": lambda s, d: temperature_mix(
-            load(s, d, "documents")
-        ),
-        # r12 staged twins (9th-rotation bank) — gated before they enter
-        # the driver window, same treatment every staged wave got
-        "token_entropy": lambda s, d: entrymod.registry.q_token_entropy(s, d),
-        "normalized_dedup": lambda s, d: entrymod.registry.q_normalized_dedup(
-            s, d
-        ),
-        "idf_top_terms": lambda s, d: entrymod.registry.q_idf_top_terms(s, d),
-        "dup_span_removal": lambda s, d: entrymod.registry.q_dup_span_removal(
-            s, d
-        ),
-        "token_bloom": lambda s, d: entrymod.registry.q_token_bloom(s, d),
-        "dsir_weights": lambda s, d: entrymod.registry.q_dsir_weights(s, d),
-        "pr_curve": lambda s, d: entrymod.registry.q_pr_curve(s, d),
-        "large_volume_customers": lambda s, d: (
-            entrymod.registry.q_large_volume_customers(s, d)
-        ),
-        "dedup_triangles": lambda s, d: entrymod.registry.q_dedup_triangles(
-            s, d
-        ),
-        "waiting_suppliers": lambda s, d: (
-            entrymod.registry.q_waiting_suppliers(s, d)
-        ),
-        "vocab_growth": lambda s, d: entrymod.registry.q_vocab_growth(s, d),
-        "customer_order_distribution": lambda s, d: (
-            entrymod.registry.q_customer_order_distribution(s, d)
-        ),
-        # r12 continuation: TPC-H completion sweep (staged twins)
-        "forecast_revenue": lambda s, d: (
-            entrymod.registry.q_forecast_revenue(s, d)
-        ),
-        "latency_mode_priority": lambda s, d: (
-            entrymod.registry.q_latency_mode_priority(s, d)
-        ),
-        "disjunctive_band_revenue": lambda s, d: (
-            entrymod.registry.q_disjunctive_band_revenue(s, d)
-        ),
-        "sales_opportunity": lambda s, d: (
-            entrymod.registry.q_sales_opportunity(s, d)
-        ),
-        "volume_shipping": lambda s, d: (
-            entrymod.registry.q_volume_shipping(s, d)
-        ),
-        "market_share": lambda s, d: entrymod.registry.q_market_share(s, d),
-        "product_type_profit": lambda s, d: (
-            entrymod.registry.q_product_type_profit(s, d)
-        ),
-        "top_supplier": lambda s, d: entrymod.registry.q_top_supplier(s, d),
-        "min_cost_supplier": lambda s, d: (
-            entrymod.registry.q_min_cost_supplier(s, d)
-        ),
-        "important_parts": lambda s, d: (
-            entrymod.registry.q_important_parts(s, d)
-        ),
-        "supplier_part_counts": lambda s, d: (
-            entrymod.registry.q_supplier_part_counts(s, d)
-        ),
-        "small_quantity_revenue": lambda s, d: (
-            entrymod.registry.q_small_quantity_revenue(s, d)
-        ),
-        "promotion_suppliers": lambda s, d: (
-            entrymod.registry.q_promotion_suppliers(s, d)
-        ),
-        # r16 staged twins (wave-13 bank) — same pre-rotation gating
-        "neardup_source_overlap": lambda s, d: (
-            entrymod.registry.q_neardup_source_overlap(s, d)
-        ),
-        "skipgram_pairs": lambda s, d: (
-            entrymod.registry.q_skipgram_pairs(s, d)
-        ),
-        "doc_length_quantiles": lambda s, d: (
-            entrymod.registry.q_doc_length_quantiles(s, d)
-        ),
-        # r12 layout-served bench rows: audited on a layout written into a
-        # temp database at the audit SF (the plan shape is what's gated;
-        # the zero-orderkey-Exchange property itself is pinned in
-        # tests/test_bucketing.py)
-        "shipping_priority_layout": _layout_form("q3"),
-        "late_order_priority_layout": _layout_form("q4"),
-        "region_revenue_layout": _layout_form("region"),
-        "rollup_revenue_layout": _layout_form("rollup"),
-    }
-
-
-def _layout_form(which: str):
-    def fn(s, d):
-        import bench as B
-
-        name = {
-            "q3": "shipping_priority_layout",
-            "q4": "late_order_priority_layout",
-            "region": "region_revenue_layout",
-            "rollup": "rollup_revenue_layout",
-        }[which]
-        return B.LOCAL_QUERIES[name](s, d)
-
-    return fn
+# catalog entries outside the declared window whose plan shapes are gated
+# too: the Arrow headline forms, the benched rows, the TPC-H shapes and the
+# layout forms (audited on a layout written at the audit SF; the
+# zero-Exchange property itself is pinned in tests/test_bucketing.py)
+EXTRA = (
+    "doc_fingerprint",
+    "text_stats",
+    "doc_perplexity",
+    "doc_perplexity_backoff",
+    "session_concurrency",
+    "peak_concurrency",
+    "temperature_mix",
+    "idf_top_terms",
+    "forecast_revenue",
+    "latency_mode_priority",
+    "disjunctive_band_revenue",
+    "sales_opportunity",
+    "volume_shipping",
+    "market_share",
+    "product_type_profit",
+    "top_supplier",
+    "min_cost_supplier",
+    "important_parts",
+    "supplier_part_counts",
+    "small_quantity_revenue",
+    "promotion_suppliers",
+    "neardup_source_overlap",
+    "skipgram_pairs",
+    "doc_length_quantiles",
+    "shipping_priority_layout",
+    "late_order_priority_layout",
+    "region_revenue_layout",
+    "rollup_revenue_layout",
+)
 
 
 # Broadcasts whose subtree contains a shuffle over a data-scaled table are
@@ -527,14 +426,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_session("plan_audit")
-    queries = dict(entrymod.queries())
-    queries.update(_extra_queries())
     failures = []
-    for name, fn in queries.items():
+    for name in (*registry.DECLARED, *EXTRA):
         if only and name not in only:
             continue
         try:
-            hard, flags = audit(name, fn(spark, sf_dir))
+            hard, flags = audit(name, registry.CATALOG[name].build(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             print(f"ERROR {name}: {e}")
             failures.append(name)

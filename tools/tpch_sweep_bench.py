@@ -1,10 +1,9 @@
-"""Two-engine timings for the r12-continuation TPC-H sweep (the 13
-query shapes added after the 9-shape base: Q2/Q6/Q7/Q8/Q9/Q11/Q12/Q15/
-Q16/Q17/Q19/Q20/Q22).
+"""Two-engine timings for 13 of the TPC-H shapes (Q2/Q6/Q7/Q8/Q9/Q11/
+Q12/Q15/Q16/Q17/Q19/Q20/Q22), each run as its registry.CATALOG entry.
 
 Same protocol as tools/bench_compare.py: Spark plans materialize to a
 noop sink (full execution, no driver transfer), DuckDB runs the
-registry's own oracle SQL over the same parquet — both min-of-3 warm.
+catalog entry's oracle SQL over the same parquet — both min-of-3 warm.
 
 Usage: python tools/tpch_sweep_bench.py [sf_dir]
 """
@@ -29,26 +28,19 @@ from compute_histogram_spark.session import (  # noqa: E402
 )
 
 SWEEP = [
-    ("q2_min_cost_supplier", "q_min_cost_supplier",
-     "MIN_COST_SUPPLIER_ORACLE"),
-    ("q6_forecast_revenue", "q_forecast_revenue", "FORECAST_REVENUE_ORACLE"),
-    ("q7_volume_shipping", "q_volume_shipping", "VOLUME_SHIPPING_ORACLE"),
-    ("q8_market_share", "q_market_share", "MARKET_SHARE_ORACLE"),
-    ("q9_product_type_profit", "q_product_type_profit",
-     "PRODUCT_PROFIT_ORACLE"),
-    ("q11_important_parts", "q_important_parts", "IMPORTANT_PARTS_ORACLE"),
-    ("q12_latency_mode", "q_latency_mode_priority", "LATENCY_MODE_ORACLE"),
-    ("q15_top_supplier", "q_top_supplier", "TOP_SUPPLIER_ORACLE"),
-    ("q16_supplier_part_counts", "q_supplier_part_counts",
-     "SUPPLIER_PART_COUNTS_ORACLE"),
-    ("q17_small_quantity", "q_small_quantity_revenue",
-     "SMALL_QUANTITY_ORACLE"),
-    ("q19_disjunctive_bands", "q_disjunctive_band_revenue",
-     "DISJUNCTIVE_BAND_ORACLE"),
-    ("q20_promotion_suppliers", "q_promotion_suppliers",
-     "PROMOTION_SUPPLIERS_ORACLE"),
-    ("q22_sales_opportunity", "q_sales_opportunity",
-     "SALES_OPPORTUNITY_ORACLE"),
+    ("q2_min_cost_supplier", "min_cost_supplier"),
+    ("q6_forecast_revenue", "forecast_revenue"),
+    ("q7_volume_shipping", "volume_shipping"),
+    ("q8_market_share", "market_share"),
+    ("q9_product_type_profit", "product_type_profit"),
+    ("q11_important_parts", "important_parts"),
+    ("q12_latency_mode", "latency_mode_priority"),
+    ("q15_top_supplier", "top_supplier"),
+    ("q16_supplier_part_counts", "supplier_part_counts"),
+    ("q17_small_quantity", "small_quantity_revenue"),
+    ("q19_disjunctive_bands", "disjunctive_band_revenue"),
+    ("q20_promotion_suppliers", "promotion_suppliers"),
+    ("q22_sales_opportunity", "sales_opportunity"),
 ]
 
 
@@ -59,9 +51,8 @@ def main() -> None:
     con = duck_connection(sf_dir)
 
     rows = []
-    for name, qfn_name, oracle_name in SWEEP:
-        qfn = getattr(REG, qfn_name)
-        sql = getattr(REG, oracle_name)
+    for name, entry in SWEEP:
+        qfn, sql = REG.CATALOG[entry]
         # one untimed warmup each: first execution carries AQE stage
         # compilation and post-previous-query JVM state (the r9 aging
         # finding); min-of-3 after it reads steady state
