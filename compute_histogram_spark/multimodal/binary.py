@@ -1,19 +1,15 @@
-"""Multimodal (image/audio/video) columns as opaque BINARY + typed metadata.
+"""Multimodal columns as opaque BINARY + typed metadata.
 
-The Spark-side plumbing is real: schemas, Arrow-batched ``mapInPandas``
-kernels, partition-preserving feature extraction, frame-sampling explosion.
-Decoders: PNG is REAL (stdlib zlib + unfilter, this module), baseline
-JPEG is REAL (stdlib Huffman + numpy IDCT, ``multimodal/jpeg.py``),
-GeoTIFF is REAL (stdlib struct/zlib baseline-TIFF reader,
-``multimodal/geotiff.py``), GIF and BMP are REAL (stdlib LZW + palette
-reader, ``multimodal/gif.py``), and WAV/FLAC audio are REAL (stdlib
-readers, ``multimodal/audio.py``, ``multimodal/flac.py``); everything
-else falls back to a clearly-marked deterministic fake (derived from
-the byte content, so tests are stable).
-Only LOSSY audio (MP3/AAC/OGG) still raises — those genuinely need codec
-libraries the container lacks. Swapping a fake for a real decoder
-changes only the inner function; the distributed plan (batch iteration,
-schema, partitioning) is unchanged.
+An asset table (``ASSET_SCHEMA``: id, kind, content bytes, source) is
+read by Arrow-batched ``mapInPandas`` kernels in the scan stage's task.
+:func:`extract_features` emits one metadata row per asset. For images it
+parses a REAL header for exactly two formats, both with the stdlib:
+PNG (IHDR, this module) and TIFF (first IFD, ``multimodal/geotiff.py``).
+Every other payload gets a clearly-marked deterministic fake derived
+from the sha256 of its bytes, so results are stable and the text-derived
+``multimodal_features`` query has a value-exact DuckDB oracle.
+:func:`decode_audio` is the gateway to the stdlib audio readers: WAV and
+AIFF (``multimodal/audio.py``) and FLAC (``multimodal/flac.py``).
 
 Scale notes: mapInPandas streams Arrow batches — one batch in memory per
 task, never the whole partition; binary payloads never pass through a
@@ -33,6 +29,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from compute_histogram_spark.multimodal.geotiff import (
+    TIFF_MAGIC_BE,
+    TIFF_MAGIC_LE,
+    geotiff_info,
+)
+
 ASSET_SCHEMA = (
     "asset_id BIGINT, kind STRING, content BINARY, source STRING"
 )
@@ -41,8 +43,6 @@ FEATURE_SCHEMA = (
     "asset_id BIGINT, kind STRING, n_bytes BIGINT, sha256 STRING, "
     "width INT, height INT, n_channels INT"
 )
-
-FRAME_SCHEMA = "asset_id BIGINT, frame_idx INT, frame_sha256 STRING, n_bytes BIGINT"
 
 
 def assets_from_documents(docs: DataFrame) -> DataFrame:
@@ -78,80 +78,10 @@ def png_info(content: bytes) -> tuple[int, int, int]:
     return w, h, _PNG_CHANNELS[color_type]
 
 
-def decode_png(content: bytes):
-    """Full PNG pixel decode (stdlib zlib + numpy unfiltering) ->
-    ``np.ndarray[h, w, channels]`` uint8. Supports the mainstream subset:
-    bit depth 8, color types 0/2/4/6, non-interlaced — exactly what
-    :func:`encode_png` writes. Filters 0-4 (None/Sub/Up/Average/Paeth) are
-    undone per scanline; the scanline loop is O(height) Python with all
-    per-pixel work vectorized in numpy."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if not content.startswith(PNG_MAGIC):
-        raise ValueError("not a PNG")
-    pos, idat, meta = 8, [], None
-    while pos < len(content):
-        length, ctype = struct.unpack(">I4s", content[pos : pos + 8])
-        data = content[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            w, h, depth, color_type, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if depth != 8 or interlace != 0 or color_type == 3:
-                raise ValueError("unsupported PNG variant (need 8-bit, "
-                                 "non-interlaced, non-palette)")
-            meta = (w, h, _PNG_CHANNELS[color_type])
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # len + type + data + crc
-    if meta is None or not idat:
-        raise ValueError("malformed PNG: missing IHDR/IDAT")
-    w, h, c = meta
-    raw = zlib.decompress(b"".join(idat))
-    stride = w * c
-    if len(raw) != h * (stride + 1):
-        raise ValueError("malformed PNG: bad IDAT length")
-    rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride + 1)
-    filters, scan = rows[:, 0], rows[:, 1:].astype(np.int32)
-    out = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        cur = scan[y].copy()
-        up = out[y - 1].astype(np.int32) if y else np.zeros(stride, np.int32)
-        f = filters[y]
-        if f == 0:
-            line = cur
-        elif f == 2:  # Up
-            line = (cur + up) & 0xFF
-        elif f in (1, 3, 4):  # Sub / Average / Paeth need a left-to-right pass
-            line = np.zeros(stride, np.int32)
-            for x in range(stride):
-                left = line[x - c] if x >= c else 0
-                if f == 1:
-                    p = left
-                elif f == 3:
-                    p = (left + up[x]) // 2
-                else:
-                    ul = up[x - c] if x >= c else 0
-                    pa, pb, pc = abs(up[x] - ul), abs(left - ul), abs(
-                        left + up[x] - 2 * ul
-                    )
-                    p = left if pa <= pb and pa <= pc else (up[x] if pb <= pc else ul)
-                line[x] = (cur[x] + p) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter {f}")
-        out[y] = line.astype(np.uint8)
-    return out.reshape(h, w, c)
-
-
 def encode_png(arr) -> bytes:
     """Minimal stdlib PNG writer (filter 0, one IDAT) for ``uint8``
-    ``[h, w]`` or ``[h, w, channels]`` arrays — fixture generator for the
-    real-decode tests and the round-trip proof for :func:`decode_png`."""
+    ``[h, w]`` or ``[h, w, channels]`` arrays — the fixture generator for
+    the real PNG header path of :func:`decode_image`."""
     import struct
     import zlib
 
@@ -181,67 +111,22 @@ def encode_png(arr) -> bytes:
     )
 
 
-def _try_real_image_decode(content: bytes) -> tuple[int, int, int] | None:
-    """Real metadata decode, all in-repo: PNG IHDR, TIFF IFD, JPEG SOF,
-    GIF logical screen, BMP info header. Returns None — never raises —
-    when the payload isn't decodable, so callers fall through to the
-    deterministic fake (ADVICE r01: an exception here must not poison
-    the whole Arrow batch)."""
-    if content.startswith(PNG_MAGIC):
-        try:
+def decode_image(content: bytes) -> tuple[int, int, int]:
+    """(width, height, channels). REAL for PNG (IHDR) and TIFF (first
+    IFD); DETERMINISTIC FAKE for everything else, JPEG, GIF and WebP
+    included: dimensions derived from the content digest — stable,
+    content-addressed, clearly not a real decode. Magic-byte gating means
+    synthetic (text) payloads always take the fake path, keeping the
+    driver oracle exact. Never raises: a malformed header takes the fake
+    path too, so one bad payload cannot poison the whole Arrow batch."""
+    try:
+        if content.startswith(PNG_MAGIC):
             return png_info(content)
-        except Exception:
-            return None
-    if content.startswith((b"II*\x00", b"MM\x00*")):
-        try:
-            from compute_histogram_spark.multimodal.geotiff import geotiff_info
-
+        if content.startswith((TIFF_MAGIC_LE, TIFF_MAGIC_BE)):
             i = geotiff_info(content)
             return i["width"], i["height"], i["bands"]
-        except Exception:
-            return None
-    if content.startswith(b"\xff\xd8"):
-        try:
-            from compute_histogram_spark.multimodal.jpeg import jpeg_info
-
-            return jpeg_info(content)
-        except Exception:
-            return None
-    if content.startswith((b"GIF87a", b"GIF89a")):
-        try:
-            from compute_histogram_spark.multimodal.gif import gif_info
-
-            return gif_info(content)
-        except Exception:
-            return None
-    if content.startswith(b"BM"):
-        try:
-            from compute_histogram_spark.multimodal.gif import bmp_info
-
-            return bmp_info(content)
-        except Exception:
-            return None
-    if content[:4] == b"RIFF" and content[8:12] == b"WEBP":
-        try:
-            from compute_histogram_spark.multimodal.webp import webp_info
-
-            return webp_info(content)
-        except Exception:
-            return None
-    return None
-
-
-def decode_image(content: bytes) -> tuple[int, int, int]:
-    """(width, height, channels). REAL for PNG (stdlib header decode),
-    JPEG (stdlib SOF parse, ``multimodal/jpeg.py``), TIFF, GIF and BMP
-    (``multimodal/gif.py``); DETERMINISTIC FAKE otherwise:
-    dimensions derived from the content digest — stable, content-addressed,
-    clearly not a real decode. Magic-byte gating means synthetic (text)
-    payloads always take the fake path, keeping the driver oracle exact
-    regardless of which decoders are installed."""
-    real = _try_real_image_decode(content)
-    if real is not None:
-        return real
+    except Exception:
+        pass
     d = hashlib.sha256(content).digest()
     return 16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 3
 
@@ -273,15 +158,12 @@ def decode_audio(content: bytes) -> Any:
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
-    """Per-asset features via Arrow-batched mapInPandas.
+    """Per-asset features via Arrow-batched mapInPandas; non-image kinds
+    get zeroed dimensions.
 
-    The kernel imports the repo's own header parsers executor-side
-    (identical to the sibling kernels extract_pixel_stats /
-    sample_video_frames) — ship the package to executors like any Spark
-    app dependency (``--py-files`` / archives). A r7 review found the
-    previous "self-contained" inline parsers had already drifted from
-    :func:`decode_image` (no TIFF branch), the exact failure mode
-    duplicated parsers invite.
+    The kernel imports :func:`decode_image` executor-side — ship the
+    package to executors like any Spark app dependency (``--py-files`` /
+    archives) — so the header parsers exist once.
 
     Arrow batch sizing comes from the session conf
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` — it is read at JOB
@@ -292,25 +174,15 @@ def extract_features(assets: DataFrame) -> DataFrame:
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
-        from compute_histogram_spark.multimodal.binary import (
-            _try_real_image_decode,
-        )
-
-        def decode(content: bytes) -> tuple[int, int, int]:
-            # real metadata parse behind magic-byte gates; ANY failure
-            # falls through to the deterministic sha256 fake — a bad byte
-            # must not poison the Arrow batch (ADVICE r01)
-            real = _try_real_image_decode(content)
-            if real is not None:
-                return real
-            d = hashlib.sha256(content).digest()
-            return 16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 3
+        from compute_histogram_spark.multimodal.binary import decode_image
 
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 content = bytes(row.content)
-                w, h, c = decode(content) if row.kind == "image" else (0, 0, 0)
+                w, h, c = (
+                    decode_image(content) if row.kind == "image" else (0, 0, 0)
+                )
                 out.append(
                     (
                         row.asset_id,
@@ -336,157 +208,3 @@ def extract_features(assets: DataFrame) -> DataFrame:
             )
 
     return assets.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def sample_frames(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """'Video' frame sampling: one output row per sampled chunk — the
-    row-explosion shape of real frame extraction, with a byte-slice standing
-    in for codec-decoded frames. REAL frame decode exists for MJPEG/AVI in
-    :func:`sample_video_frames`; this codec-free twin stays because the
-    driver oracle pins it for arbitrary (synthetic) payloads."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib  # local: keep the closure self-contained
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content)
-                for i, off in enumerate(range(0, len(content), every_n_bytes)):
-                    chunk = content[off : off + every_n_bytes]
-                    rows.append(
-                        (row.asset_id, i, hashlib.sha256(chunk).hexdigest(), len(chunk))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_idx", "frame_sha256", "n_bytes"]
-            )
-
-    return assets.where(F.col("kind") == "video").mapInPandas(kernel, FRAME_SCHEMA)
-
-
-VIDEO_FRAME_SCHEMA = (
-    "asset_id BIGINT, frame_idx INT, width INT, height INT, "
-    "mean_luma DOUBLE, decoded BOOLEAN"
-)
-
-
-def sample_video_frames(
-    assets: DataFrame, every: int = 1, max_frames: int | None = None
-) -> DataFrame:
-    """REAL video frame sampling for MJPEG-in-AVI payloads (multimodal/
-    avi.py — stdlib RIFF walk + the repo's baseline JPEG decoder): one
-    row per SAMPLED frame with decoded pixel stats. Skipped frames are
-    never Huffman-decoded — the container walk seeks chunk-to-chunk, so
-    stride sampling costs O(sampled), the property that matters when a
-    100 TB corpus stores hour-long clips and the pipeline wants 1 fps.
-    Non-AVI / non-decodable video payloads emit a single
-    ``decoded=false`` row instead of poisoning the Arrow batch
-    (:func:`sample_frames` remains the codec-free byte-chunk twin the
-    driver oracle pins)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from compute_histogram_spark.multimodal.avi import video_frame_stats
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content)
-                n_before = len(rows)
-                try:
-                    for idx, w, h, luma in video_frame_stats(
-                        content, every=every, max_frames=max_frames
-                    ):
-                        rows.append((row.asset_id, idx, w, h, luma, True))
-                except Exception:
-                    # decoded=false only when ZERO frames decoded; a
-                    # mid-clip corruption keeps the good frames and drops
-                    # the tail (one file never mixes success+failure rows)
-                    if len(rows) == n_before:
-                        rows.append(
-                            (row.asset_id, None, None, None, None, False)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "frame_idx", "width", "height",
-                         "mean_luma", "decoded"],
-            )
-
-    return assets.where(F.col("kind") == "video").mapInPandas(
-        kernel, VIDEO_FRAME_SCHEMA
-    )
-
-
-PIXEL_STATS_SCHEMA = (
-    "asset_id BIGINT, width INT, height INT, n_channels INT, "
-    "mean_luma DOUBLE, min_px INT, max_px INT, decoded BOOLEAN"
-)
-
-
-def extract_pixel_stats(assets: DataFrame) -> DataFrame:
-    """REAL pixel statistics for decodable (PNG, JPEG, GIF, BMP,
-    lossless WebP) image payloads via Arrow-batched ``mapInPandas``:
-    full stdlib decode (PNG: zlib + unfilter; JPEG: Huffman + IDCT,
-    multimodal/jpeg.py; GIF: LZW + palette; BMP: padded BGR rows,
-    multimodal/gif.py; VP8L: prefix codes + LZ77 + color cache + the
-    four inverse transforms, multimodal/vp8l.py), then
-    vectorized numpy reductions — mean luminance, min/max sample.
-    Non-decodable payloads pass through with ``decoded=false`` and NULL
-    stats instead of poisoning the batch; binary content never crosses a
-    shuffle (stats are projected out in the scan stage's task)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from compute_histogram_spark.multimodal.binary import decode_png
-        from compute_histogram_spark.multimodal.gif import decode_bmp, decode_gif
-        from compute_histogram_spark.multimodal.jpeg import decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                content = bytes(row.content)
-                try:
-                    if content.startswith(b"\xff\xd8"):
-                        px = decode_jpeg(content)
-                        if px.ndim == 2:
-                            px = px[:, :, None]
-                    elif content.startswith((b"GIF87a", b"GIF89a")):
-                        px = decode_gif(content)
-                    elif content.startswith(b"BM"):
-                        px = decode_bmp(content)
-                    elif (content[:4] == b"RIFF"
-                          and content[8:12] == b"WEBP"):
-                        from compute_histogram_spark.multimodal.vp8l import (
-                            decode_webp,
-                        )
-
-                        px = decode_webp(content)
-                    else:
-                        px = decode_png(content)
-                    h, w, c = px.shape
-                    # ITU-R 601 luma for RGB(A); first channel otherwise
-                    if c >= 3:
-                        luma = (
-                            0.299 * px[:, :, 0]
-                            + 0.587 * px[:, :, 1]
-                            + 0.114 * px[:, :, 2]
-                        )
-                    else:
-                        luma = px[:, :, 0].astype(np.float64)
-                    rows.append(
-                        (row.asset_id, w, h, c, float(luma.mean()),
-                         int(px.min()), int(px.max()), True)
-                    )
-                except Exception:
-                    rows.append(
-                        (row.asset_id, None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "width", "height", "n_channels",
-                         "mean_luma", "min_px", "max_px", "decoded"],
-            )
-
-    return assets.where(F.col("kind") == "image").mapInPandas(
-        kernel, PIXEL_STATS_SCHEMA
-    )

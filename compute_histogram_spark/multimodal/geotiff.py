@@ -56,7 +56,7 @@ _FIELD_TYPES = {
     4: ("I", 4),   # LONG
     5: ("II", 8),  # RATIONAL (num, den)
     6: ("b", 1),   # SBYTE
-    7: ("B", 1),   # UNDEFINED (opaque bytes, e.g. JPEGTables)
+    7: ("B", 1),   # UNDEFINED (opaque bytes)
     8: ("h", 2),   # SSHORT
     9: ("i", 4),   # SLONG
     11: ("f", 4),  # FLOAT
@@ -70,7 +70,6 @@ T_BITS, T_COMPRESSION, T_PHOTOMETRIC = 258, 259, 262
 T_STRIP_OFFSETS, T_SPP, T_ROWS_PER_STRIP, T_STRIP_COUNTS = 273, 277, 278, 279
 T_PLANAR, T_PREDICTOR, T_SAMPLE_FORMAT = 284, 317, 339
 T_TILE_W, T_TILE_H, T_TILE_OFFSETS, T_TILE_COUNTS = 322, 323, 324, 325
-T_JPEGTABLES = 347
 T_PIXEL_SCALE, T_TIEPOINT, T_GDAL_NODATA = 33550, 33922, 42113
 
 # (sample_format, bits) -> numpy dtype char (endianness applied at read)
@@ -331,13 +330,11 @@ def decode_geotiff(content: bytes, band: int = 1) -> np.ndarray:
         raise ValueError(f"unsupported sample (format={fmt}, bits={bits[0]})")
     dtype = np.dtype(eb + _DTYPES[(fmt, bits[0])])
     comp = _tag1(tags, T_COMPRESSION, 1)
-    if comp not in (1, 5, 7, 8, 32946, 32773):
+    if comp not in (1, 5, 8, 32946, 32773):
         raise ValueError(
             f"unsupported compression {comp} "
-            "(need none/lzw/jpeg/deflate/packbits)"
+            "(need none/lzw/deflate/packbits)"
         )
-    if comp == 7 and (fmt, bits[0]) != (1, 8):
-        raise ValueError("JPEG compression requires uint8 samples")
     predictor = _tag1(tags, T_PREDICTOR, 1)
     if predictor not in (1, 2, 3):
         raise ValueError(f"unsupported predictor {predictor}")
@@ -382,8 +379,7 @@ def decode_geotiff(content: bytes, band: int = 1) -> np.ndarray:
         )
     if any(off + cnt > len(content) for off, cnt in zip(offsets, counts)):
         raise ValueError("malformed TIFF: strip/tile beyond end of file")
-    max_expansion = {1: 1, 8: 1100, 32946: 1100, 5: 4096, 32773: 128,
-                     7: 4096}[comp]
+    max_expansion = {1: 1, 8: 1100, 32946: 1100, 5: 4096, 32773: 128}[comp]
     if h * w * spp * dtype.itemsize > max(sum(counts), 1) * max_expansion:
         raise ValueError(
             "malformed TIFF: dimensions implausible for container size "
@@ -391,38 +387,9 @@ def decode_geotiff(content: bytes, band: int = 1) -> np.ndarray:
             f"{sum(counts)} payload bytes)"
         )
 
-    jpeg_tables = (
-        bytes(_tag(tags, T_JPEGTABLES)) if T_JPEGTABLES in tags else None
-    )
     out = np.zeros((h, w), dtype=dtype.newbyteorder("="))
     for idx, (off, cnt) in enumerate(zip(offsets, counts)):
         data = content[off : off + cnt]
-        if comp == 7:
-            # new-style JPEG (TIFF TechNote 2): each chunk is a baseline
-            # stream, shared tables optionally in the JPEGTables tag
-            from compute_histogram_spark.multimodal.jpeg import decode_jpeg
-
-            px = decode_jpeg(data, tables=jpeg_tables)
-            if px.ndim == 2:
-                px = px[:, :, None]
-            if px.shape[2] != spp:
-                raise ValueError(
-                    f"chunk {idx}: JPEG channels {px.shape[2]} != "
-                    f"samples/pixel {spp}"
-                )
-            row0 = (idx // tiles_across) * ch
-            col0 = (idx % tiles_across) * cw
-            vis_r = min(ch, h - row0)
-            vis_c = min(cw, w - col0)
-            if px.shape[0] < vis_r or px.shape[1] < vis_c:
-                raise ValueError(
-                    f"chunk {idx}: JPEG {px.shape[:2]} smaller than "
-                    f"visible region ({vis_r}, {vis_c})"
-                )
-            out[row0 : row0 + vis_r, col0 : col0 + vis_c] = (
-                px[:vis_r, :vis_c, band - 1]
-            )
-            continue
         if comp in (8, 32946):
             data = zlib.decompress(data)
         elif comp == 5:
@@ -476,17 +443,12 @@ def encode_geotiff(
     tiepoint: tuple[float, ...] = (0.0, 0.0, 0.0, 10.0, 40.0, 0.0),
     predictor: int = 1,
     bigtiff: bool = False,
-    jpeg_quality: int = 90,
-    jpeg_shared_tables: bool = False,
 ) -> bytes:
     """Minimal little-endian GeoTIFF writer for ``[h, w]`` or ``[h, w, c]``
     arrays — the fixture generator proving :func:`decode_geotiff` by
     round-trip (the same role :func:`~compute_histogram_spark.multimodal.
     binary.encode_png` plays for the PNG path). Supports none/lzw/deflate/
-    packbits compression plus new-style JPEG (code 7, uint8 1- or 3-band,
-    lossy — round-trip-provable under a tolerance; ``jpeg_shared_tables``
-    moves DQT/DHT into the ``JPEGTables`` tag, the TIFF TechNote 2 layout
-    real COG emitters use), optional square tiling, predictor 2 (ints) and
+    packbits compression, optional square tiling, predictor 2 (ints) and
     3 (floats), and the BigTIFF layout (20-byte IFD entries, LONG8
     chunk locations) so the 8-byte parsing path is round-trip-provable
     without a >4 GiB fixture."""
@@ -517,22 +479,7 @@ def encode_geotiff(
             return d.astype(np.uint8)
         return chunk
 
-    if compression == "jpeg":
-        if a.dtype != np.uint8 or spp not in (1, 3):
-            raise ValueError("jpeg compression needs uint8 1- or 3-band")
-        if predictor != 1:
-            raise ValueError("jpeg compression excludes predictors")
-
     def pack(chunk: np.ndarray) -> bytes:
-        if compression == "jpeg":
-            from compute_histogram_spark.multimodal.jpeg import (
-                encode_jpeg_baseline,
-            )
-
-            img = chunk[:, :, 0] if spp == 1 else chunk
-            return encode_jpeg_baseline(
-                np.ascontiguousarray(img), quality=jpeg_quality
-            )
         raw = apply_predictor(chunk).tobytes()
         if compression == "deflate":
             return zlib.compress(raw, 6)
@@ -576,18 +523,8 @@ def encode_geotiff(
     else:
         chunks.append(pack(a))
 
-    jpeg_tables_blob = b""
-    if compression == "jpeg" and jpeg_shared_tables:
-        from compute_histogram_spark.multimodal.jpeg import split_jpeg_tables
-
-        split = [split_jpeg_tables(c) for c in chunks]
-        if len({t for t, _ in split}) != 1:
-            raise ValueError("jpeg chunks disagree on tables")
-        jpeg_tables_blob = split[0][0]
-        chunks = [img for _, img in split]
-
-    comp_code = {"none": 1, "lzw": 5, "deflate": 8, "packbits": 32773,
-                 "jpeg": 7}[compression]
+    comp_code = {"none": 1, "lzw": 5, "deflate": 8,
+                 "packbits": 32773}[compression]
     nodata_ascii = (
         (repr(float(nodata)).encode() + b"\x00") if nodata is not None else b""
     )
@@ -607,9 +544,7 @@ def encode_geotiff(
     add(T_HEIGHT, 4, (h,))
     add(T_BITS, 3, (bits,) * spp)
     add(T_COMPRESSION, 3, (comp_code,))
-    add(T_PHOTOMETRIC, 3, (6 if compression == "jpeg" and spp == 3 else 1,))
-    if jpeg_tables_blob:
-        add(T_JPEGTABLES, 7, tuple(jpeg_tables_blob))
+    add(T_PHOTOMETRIC, 3, (1,))
     add(T_SPP, 3, (spp,))
     add(T_PLANAR, 3, (1,))
     if predictor != 1:
@@ -712,10 +647,6 @@ def encode_geotiff(
 
 RASTER_MINMAX_SCHEMA = "min_value DOUBLE, max_value DOUBLE, n_valid BIGINT"
 RASTER_HISTO_PARTIAL_SCHEMA = "bin INT, pixel_count BIGINT"
-RASTER_INFO_SCHEMA = (
-    "asset_id BIGINT, width INT, height INT, bands INT, dtype STRING, "
-    "compression INT, tiled BOOLEAN, nodata DOUBLE"
-)
 
 
 def _valid_pixels(content: bytes, band: int) -> np.ndarray:
@@ -727,28 +658,6 @@ def _valid_pixels(content: bytes, band: int) -> np.ndarray:
     if info["nodata"] is not None:
         px = px[px != info["nodata"]]
     return px
-
-
-def raster_info(assets: DataFrame, content_col: str = "content") -> DataFrame:
-    """Per-tile header metadata (no pixel decode — IFD parse only)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from compute_histogram_spark.multimodal.geotiff import geotiff_info
-
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                i = geotiff_info(bytes(getattr(row, content_col)))
-                rows.append(
-                    (row.asset_id, i["width"], i["height"], i["bands"],
-                     str(i["dtype"]), i["compression"], i["tiled"], i["nodata"])
-                )
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "width", "height", "bands",
-                               "dtype", "compression", "tiled", "nodata"],
-            )
-
-    return assets.mapInPandas(kernel, RASTER_INFO_SCHEMA)
 
 
 def raster_minmax(
@@ -831,21 +740,4 @@ def raster_histogram(
             "pixel_count",
         )
         .orderBy("bin")
-    )
-
-
-def raster_pipeline(
-    assets: DataFrame, bins: int = 256, content_col: str = "content",
-    band: int = 1,
-) -> DataFrame:
-    """The reference CLI's full program (main.py:53-66): min/max pass, then
-    histogram pass with the derived range. The min/max collect is a single
-    3-column row — the same driver-side scalar the reference passes between
-    its two pool.map calls."""
-    mm = raster_minmax(assets, content_col, band).first()
-    if mm is None or mm["n_valid"] in (None, 0):
-        raise ValueError("no valid pixels in any tile")
-    return raster_histogram(
-        assets, float(mm["min_value"]), float(mm["max_value"]), bins,
-        content_col, band,
     )

@@ -1,8 +1,7 @@
 """H.264/AVC sequence-parameter-set parsing — metadata only (the same
 honest boundary as mp3.py/aac.py/ogg.py: SPS syntax is a short public
 Exp-Golomb structure (ISO/IEC 14496-10 §7.3.2.1), while FRAME decode
-needs the full CABAC/CAVLC + prediction machinery and stays behind the
-deterministic fake in ``binary.sample_frames``).
+needs the full CABAC/CAVLC + prediction machinery and is not done).
 
 Gives the AUTHORITATIVE coded dimensions (tkhd carries the display size,
 which differs under cropping/anamorphic), profile/level, chroma format,

@@ -5,9 +5,8 @@ Video joins PNG (binary.py), WAV (audio.py), FLAC (flac.py) and GeoTIFF
 ISO base-media file format (MP4/MOV/M4A/3GP) is a public box structure
 (ISO/IEC 14496-12), so duration, timescale, track layout, codec fourccs
 and visual dimensions parse with ``struct`` alone. FRAME decode would
-need an H.264/H.265/AV1 codec the container lacks — that stays behind
-the deterministic fake in ``binary.sample_frames``; this module gives
-the real metadata the typed-columns contract promises.
+need an H.264/H.265/AV1 codec the container lacks and is not done;
+this module gives the real metadata the typed-columns contract promises.
 
 Box model: ``[size u32][type 4cc][payload]``; size 1 -> u64 largesize
 follows; size 0 -> box runs to end of enclosure. Containers nest:
@@ -163,12 +162,9 @@ VIDEO_INFO_SCHEMA = (
 
 def extract_video_info(assets: DataFrame) -> DataFrame:
     """Per-asset container metadata via Arrow ``mapInPandas`` — real parse
-    for ISO-BMFF payloads and (since r7) RIFF AVI payloads through the
-    same schema (brand='AVI ', MJPEG duration = frames/fps),
-    ``parsed=false`` passthrough otherwise."""
+    for ISO-BMFF payloads, ``parsed=false`` passthrough otherwise."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from compute_histogram_spark.multimodal.avi import avi_info
         from compute_histogram_spark.multimodal.mp4 import mp4_info
 
         for pdf in batches:
@@ -176,27 +172,6 @@ def extract_video_info(assets: DataFrame) -> DataFrame:
             for row in pdf.itertuples(index=False):
                 try:
                     content = bytes(row.content)
-                    if content[:4] == b"RIFF" and content[8:12] == b"AVI ":
-                        a = avi_info(content)
-                        rows.append(
-                            (
-                                row.asset_id,
-                                "AVI ",
-                                (
-                                    round(a["n_frames"] / a["fps"], 3)
-                                    if a["fps"]
-                                    else None
-                                ),
-                                int(round(a["fps"] * 1000)),
-                                1,
-                                a.get("codec"),
-                                a["width"],
-                                a["height"],
-                                None,
-                                True,
-                            )
-                        )
-                        continue
                     i = mp4_info(content)
                     vid = next(
                         (t for t in i["tracks"] if t["handler"] == "vide"),

@@ -24,8 +24,7 @@ Implements the public WebP Lossless Bitstream Specification (RFC 9649
   deltas), SUBTRACT_GREEN, and COLOR_INDEXING (delta-coded palette,
   sub-byte pixel bundling for palettes <= 16 colors).
 
-``encode_vp8l`` is the fixture builder (the gif.py `_gif_lzw_encode`
-arrangement): a real, spec-conformant encoder — greedy LZ77 with
+``encode_vp8l`` is the fixture builder: a real, spec-conformant encoder — greedy LZ77 with
 vertical/horizontal matches, real Huffman construction, optional cache /
 subtract-green / palette — so every decoder path is exercised by
 round-trip without any codec library in the container. No external

@@ -922,8 +922,9 @@ def end_to_end_corpus(
     # its input for windows AND reassembly), and Catalyst re-executes
     # the whole upstream subtree per reference. Unpersisted, the
     # re-execution compounds per stage: the captured plan read 64
-    # parquet scans of the SAME documents file (plans/r16/
-    # end_to_end_corpus_before.txt), zero ReusedExchange. Persisting
+    # parquet scans of the SAME documents file (the end_to_end_corpus
+    # "before" capture of tools/capture_plans.py, committed in c2bd39d),
+    # zero ReusedExchange. Persisting
     # the three stage boundaries makes the chain linear again: 64 -> 2
     # scans, sf0.1 warm 5.68 -> 4.77 s (-16%), sf1 12.65 -> 8.81 s
     # (-30%, fresh-JVM warm-min probes — the delta grows with corpus

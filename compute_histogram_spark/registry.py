@@ -3759,15 +3759,14 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Runs the operator's default min_qty=300 where large_volume_customers
-# and this oracle use 200, so its rows differ from the oracle's; kept as
-# the benched form until the bench changes.
 @register("large_volume_customers_layout", LARGE_VOLUME_ORACLE)
 def q_large_volume_customers_layout(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     o, li = _orderkey_layout(spark, sf_dir)
-    return R.large_volume_customers(load(spark, sf_dir, "customer"), o, li)
+    return R.large_volume_customers(
+        load(spark, sf_dir, "customer"), o, li, min_qty=200
+    )
 
 
 # Triangle count of the MinHash near-dup candidate graph (graph.py:

@@ -23,11 +23,10 @@ task STREAMS its records; the driver lists paths only and bytes never
 cross a shuffle. Filter pushdown is unnecessary: the per-record work is
 dominated by decompression, which any reader pays once.
 
-Error contract matches the multimodal parsers: structurally malformed
+Error contract matches the GeoTIFF reader: structurally malformed
 records raise ``ValueError('malformed WARC: ...')`` parser-side; the
 SOURCE keeps whatever records decoded before a mid-file corruption and
-marks zero-yield files with a single ``parsed=false`` row (posture shared
-with sources/video.py).
+marks zero-yield files with a single ``parsed=false`` row.
 """
 
 from __future__ import annotations

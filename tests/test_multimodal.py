@@ -5,7 +5,6 @@ from pyspark.sql import Row
 from compute_histogram_spark.multimodal.binary import (
     decode_image,
     extract_features,
-    sample_frames,
 )
 
 
@@ -32,9 +31,3 @@ def test_extract_features_schema_and_determinism(spark):
     # non-image kinds pass through with zeroed dims
     assert out[2]["width"] == 0 and out[3]["width"] == 0
 
-
-def test_sample_frames_explodes_video_only(spark):
-    out = sample_frames(assets_df(spark), every_n_bytes=64).collect()
-    assert {r["asset_id"] for r in out} == {2}
-    assert [r["frame_idx"] for r in sorted(out, key=lambda r: r["frame_idx"])] == [0, 1, 2, 3]
-    assert sum(r["n_bytes"] for r in out) == 200

@@ -1,7 +1,9 @@
 """Round-2 additions: equi-depth approx path, distributed bloom merge,
 finer fuzzy blocking (value-identical), ngram-jaccard max_df lever, fused
-text profile, windowed sketches, real stdlib PNG decode, streaming HALF_UP
-cents parity."""
+text profile, windowed sketches, real PNG/TIFF image headers, streaming
+HALF_UP cents parity."""
+
+import hashlib
 
 import numpy as np
 import pytest
@@ -196,78 +198,26 @@ def test_windowed_quantiles_within_rank_error_of_exact(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# PNG: real stdlib decode — round-trip, header parse, and the gated kernel
+# Image headers: real PNG/TIFF parse, content-derived fake otherwise, and
+# the gated kernel
 # ---------------------------------------------------------------------------
 
 
-def test_png_roundtrip_all_channel_counts():
-    rng = np.random.default_rng(7)
-    for c in (1, 2, 3, 4):
-        arr = rng.integers(0, 256, size=(13, 9, c), dtype=np.uint8)
-        blob = MM.encode_png(arr)
-        assert MM.png_info(blob) == (9, 13, c)
-        out = MM.decode_png(blob)
-        assert out.shape == (13, 9, c)
-        assert (out == arr).all()
-
-
-def test_png_decode_handles_all_filters():
-    # exercise filters 1/2/3/4 by rewriting scanline filters manually
-    import struct
-    import zlib
-
-    rng = np.random.default_rng(11)
-    arr = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
-    ref = MM.decode_png(MM.encode_png(arr))
-    # re-encode with per-row filters: None,Sub,Up,Average,Paeth,Up — the
-    # filtered bytes are computed from the reference decoder's own inverse
-    h, w, c = arr.shape
-    a = arr.astype(np.int32).reshape(h, w * c)
-    lines = []
-    for y, f in enumerate([0, 1, 2, 3, 4, 2]):
-        cur, up = a[y], (a[y - 1] if y else np.zeros(w * c, np.int32))
-        if f == 0:
-            enc = cur
-        elif f == 1:
-            left = np.concatenate([np.zeros(c, np.int32), cur[:-c]])
-            enc = (cur - left) % 256
-        elif f == 2:
-            enc = (cur - up) % 256
-        elif f == 3:
-            left = np.concatenate([np.zeros(c, np.int32), cur[:-c]])
-            enc = (cur - (left + up) // 2) % 256
-        else:
-            left = np.concatenate([np.zeros(c, np.int32), cur[:-c]])
-            ul = np.concatenate([np.zeros(c, np.int32), up[:-c]])
-            pa, pb, pc = np.abs(up - ul), np.abs(left - ul), np.abs(left + up - 2 * ul)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul)
-            )
-            enc = (cur - pred) % 256
-        lines.append(bytes([f]) + enc.astype(np.uint8).tobytes())
-
-    def chunk(ctype, data):
-        return struct.pack(">I", len(data)) + ctype + data + struct.pack(
-            ">I", zlib.crc32(ctype + data)
-        )
-
-    blob = (
-        MM.PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(b"".join(lines)))
-        + chunk(b"IEND", b"")
-    )
-    assert (MM.decode_png(blob) == ref).all()
-
-
 def test_decode_image_real_for_png_fake_for_text():
-    png = MM.encode_png(np.zeros((20, 30, 3), dtype=np.uint8))
-    assert MM.decode_image(png) == (30, 20, 3)
-    # non-image bytes -> deterministic content-addressed fake
-    fake = MM.decode_image(b"just some text payload")
-    assert fake == MM.decode_image(b"just some text payload")
-    d = __import__("hashlib").sha256(b"just some text payload").digest()
-    assert fake == (16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 3)
+    from compute_histogram_spark.multimodal.geotiff import encode_geotiff
+
+    for c in (1, 2, 3, 4):
+        png = MM.encode_png(np.zeros((20, 30, c), dtype=np.uint8))
+        assert MM.decode_image(png) == (30, 20, c)
+    tif = encode_geotiff(np.zeros((7, 11, 2), dtype=np.float32))
+    assert MM.decode_image(tif) == (11, 7, 2)
+    # non-image bytes, and formats without a header parser (a JPEG SOI
+    # marker here), -> deterministic content-addressed fake
+    for payload in (b"just some text payload", b"\xff\xd8\xff\xe0 not parsed"):
+        fake = MM.decode_image(payload)
+        assert fake == MM.decode_image(payload)
+        d = hashlib.sha256(payload).digest()
+        assert fake == (16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 3)
 
 
 def test_extract_features_real_png_asset(spark):
@@ -279,7 +229,7 @@ def test_extract_features_real_png_asset(spark):
     )
     rows = {r["asset_id"]: r for r in MM.extract_features(assets).collect()}
     assert (rows[1]["width"], rows[1]["height"], rows[1]["n_channels"]) == (12, 8, 4)
-    d = __import__("hashlib").sha256(b"not an image").digest()
+    d = hashlib.sha256(b"not an image").digest()
     assert (rows[2]["width"], rows[2]["height"], rows[2]["n_channels"]) == (
         16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 3
     )
@@ -329,25 +279,6 @@ def test_ngram_jaccard_hub_prefilter_paths_identical(spark, sf_dir):
     ).collect()
     assert sorted(map(tuple, one_pass)) == sorted(map(tuple, two_phase))
     assert len(one_pass) > 0
-
-
-def test_extract_pixel_stats_real_decode(spark):
-    rng = np.random.default_rng(3)
-    arr = rng.integers(0, 256, size=(10, 6, 3), dtype=np.uint8)
-    assets = spark.createDataFrame(
-        [(1, "image", bytearray(MM.encode_png(arr)), "fx"),
-         (2, "image", bytearray(b"opaque bytes"), "fx"),
-         (3, "audio", bytearray(b"x"), "fx")],
-        MM.ASSET_SCHEMA,
-    )
-    rows = {r["asset_id"]: r for r in MM.extract_pixel_stats(assets).collect()}
-    assert set(rows) == {1, 2}  # non-image kinds filtered out
-    r1 = rows[1]
-    luma = (0.299 * arr[:, :, 0] + 0.587 * arr[:, :, 1] + 0.114 * arr[:, :, 2])
-    assert r1["decoded"] and (r1["width"], r1["height"]) == (6, 10)
-    assert r1["mean_luma"] == pytest.approx(float(luma.mean()))
-    assert (r1["min_px"], r1["max_px"]) == (int(arr.min()), int(arr.max()))
-    assert rows[2]["decoded"] is False and rows[2]["mean_luma"] is None
 
 
 def test_fuzzy_fastss_equals_banded_blocking(spark, sf_dir):

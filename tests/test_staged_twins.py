@@ -585,7 +585,8 @@ PINS = (
     "returned_item_customers", "corpus_checksum", "quality_model_score",
     "zorder_key", "token_entropy", "normalized_dedup", "idf_top_terms",
     "dup_span_removal", "token_bloom", "dsir_weights", "pr_curve",
-    "large_volume_customers", "dedup_triangles", "waiting_suppliers",
+    "large_volume_customers", "large_volume_customers_layout",
+    "dedup_triangles", "waiting_suppliers",
     "vocab_growth", "customer_order_distribution", "forecast_revenue",
     "latency_mode_priority", "disjunctive_band_revenue",
     "sales_opportunity", "volume_shipping", "market_share",

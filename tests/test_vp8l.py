@@ -1,12 +1,10 @@
 """Lossless-WebP (VP8L) decoder: round-trips over every bitstream
-feature via the in-repo spec-conformant fixture encoder (the gif.py
-arrangement — no codec library exists in the container), structural
-invariants of the spec tables, malformed-input behavior, and the
-Spark pixel-stats integration."""
+feature via the in-repo spec-conformant fixture encoder (no codec
+library exists in the container), structural invariants of the spec
+tables, and malformed-input behavior."""
 
 import numpy as np
 import pytest
-from pyspark.sql import Row
 
 from compute_histogram_spark.multimodal.vp8l import (
     DIST_MAP,
@@ -177,24 +175,6 @@ def test_webp_info_agrees_with_pixel_decode():
     w, h, _ = webp_info(data)
     assert (w, h) == (34, 21)
     assert decode_webp(data).shape == (21, 34, 4)
-
-
-def test_pixel_stats_decodes_webp(spark):
-    from compute_histogram_spark.multimodal import binary as MM
-
-    img = _noise(24, 32, seed=14)
-    img[:, :, 3] = 255
-    assets = spark.createDataFrame([
-        Row(asset_id=0, kind="image",
-            content=encode_vp8l(img, subtract_green=True), source="w"),
-    ])
-    stats = {r["asset_id"]: r
-             for r in MM.extract_pixel_stats(assets).collect()}
-    luma = (0.299 * img[..., 0] + 0.587 * img[..., 1]
-            + 0.114 * img[..., 2]).mean()
-    assert stats[0]["decoded"] is True
-    assert (stats[0]["width"], stats[0]["height"]) == (32, 24)
-    assert abs(stats[0]["mean_luma"] - luma) < 1e-6  # lossless decode
 
 
 # --- property-based round-trips (hypothesis) ---

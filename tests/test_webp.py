@@ -1,6 +1,5 @@
 """WebP container metadata (multimodal/webp.py): all three stream
-variants round-trip through the in-repo fixtures, and decode_image
-dispatches on the RIFF/WEBP magic."""
+variants round-trip through the in-repo fixtures."""
 
 import pytest
 
@@ -43,13 +42,3 @@ def test_rejects_non_webp_and_interframe():
     body = b"WEBP" + b"VP8 " + struct.pack("<I", len(p)) + p
     with pytest.raises(ValueError):
         webp_info(b"RIFF" + struct.pack("<I", len(body)) + body)
-
-
-def test_decode_image_dispatches_webp():
-    from compute_histogram_spark.multimodal.binary import decode_image
-
-    assert decode_image(build_webp_lossless(320, 200)) == (320, 200, 3)
-    # a WAV-looking RIFF is NOT WebP: falls through to the deterministic
-    # fake rather than raising (the batch-poisoning guard)
-    w, h, c = decode_image(b"RIFF\x10\x00\x00\x00WAVEfmt ")
-    assert 16 <= w <= 255 and 16 <= h <= 255 and 1 <= c <= 3
