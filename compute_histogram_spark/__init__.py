@@ -21,8 +21,8 @@ Layout
                    reader and two-pass raster histogram (``geotiff``), and
                    the asset feature kernel (``binary``), which parses real
                    image headers for PNG and TIFF only, and audio/video
-                   metadata readers (WAV/AIFF, FLAC, MP3, AAC, Ogg, MP4,
-                   H.264 SPS) plus the lossless-WebP decoder
+                   metadata readers (WAV/AIFF, MP3, AAC, Ogg, MP4,
+                   H.264 SPS)
 
 Every operator is designed for a 1000-executor / 100 TB deployment:
 aggregations rely on Spark's partial->final hash aggregation, small

@@ -13,8 +13,8 @@ codec), any channel count, chunk order per spec (fmt before data, unknown
 chunks skipped). ``WAVE_FORMAT_EXTENSIBLE`` (tag 0xFFFE) resolves through
 its SubFormat GUID. G.711 decodes through the canonical CCITT segment
 tables (LUT, vectorized); IMA-ADPCM walks its predictor state per block —
-O(samples) Python like the FLAC Rice path, with the same native plug
-point if ADPCM corpora ever dominate a workload.
+O(samples) Python, with a native plug point if ADPCM corpora ever
+dominate a workload.
 
 Spark side: :func:`extract_audio_features` follows the module's kernel
 pattern — Arrow-batched ``mapInPandas``, per-row decode inside the scan
@@ -361,7 +361,7 @@ AUDIO_FEATURE_SCHEMA = (
 
 def extract_audio_features(assets: DataFrame) -> DataFrame:
     """Per-asset audio features via Arrow-batched ``mapInPandas``: REAL
-    decode for WAV and FLAC payloads; MP3 payloads report real HEADER
+    decode for WAV payloads; MP3 payloads report real HEADER
     metadata (rate/channels/frames/duration from the frame walk,
     multimodal/mp3.py) with ``decoded=false`` and null PCM features;
     ``decoded=false`` all-null passthrough otherwise. rms/peak are over
@@ -371,10 +371,6 @@ def extract_audio_features(assets: DataFrame) -> DataFrame:
         import numpy as np
 
         from compute_histogram_spark.multimodal.audio import decode_wav
-        from compute_histogram_spark.multimodal.flac import (
-            FLAC_MAGIC,
-            decode_flac,
-        )
         from compute_histogram_spark.multimodal.aac import aac_info
         from compute_histogram_spark.multimodal.mp3 import id3v2_size, mp3_info
         from compute_histogram_spark.multimodal.ogg import OGG_MAGIC, ogg_info
@@ -413,10 +409,7 @@ def extract_audio_features(assets: DataFrame) -> DataFrame:
                              info["duration_s"], None, None, False)
                         )
                         continue
-                    if content[:4] == FLAC_MAGIC:
-                        x, rate = decode_flac(content)
-                    else:
-                        x, rate = decode_wav(content)
+                    x, rate = decode_wav(content)
                     n, c = x.shape
                     rows.append(
                         (row.asset_id, rate, c, n, n / rate,

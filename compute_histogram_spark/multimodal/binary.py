@@ -9,7 +9,7 @@ Every other payload gets a clearly-marked deterministic fake derived
 from the sha256 of its bytes, so results are stable and the text-derived
 ``multimodal_features`` query has a value-exact DuckDB oracle.
 :func:`decode_audio` is the gateway to the stdlib audio readers: WAV and
-AIFF (``multimodal/audio.py``) and FLAC (``multimodal/flac.py``).
+AIFF (``multimodal/audio.py``).
 
 Scale notes: mapInPandas streams Arrow batches — one batch in memory per
 task, never the whole partition; binary payloads never pass through a
@@ -132,10 +132,9 @@ def decode_image(content: bytes) -> tuple[int, int, int]:
 
 
 def decode_audio(content: bytes) -> Any:
-    """REAL for WAV (RIFF PCM / IEEE-float, multimodal/audio.py) and FLAC
-    (full bitstream decode, multimodal/flac.py) -> (samples [n, ch]
-    float64, sample_rate). Lossy formats (MP3/AAC/OGG) genuinely need a
-    codec library the container lacks and still raise."""
+    """REAL for WAV (RIFF PCM / IEEE-float) and AIFF/AIFF-C
+    (multimodal/audio.py) -> (samples [n, ch] float64, sample_rate).
+    Every other payload (FLAC, MP3/AAC/OGG) raises NotImplementedError."""
     if content[:4] == b"RIFF":
         from compute_histogram_spark.multimodal.audio import decode_wav
 
@@ -144,13 +143,9 @@ def decode_audio(content: bytes) -> Any:
         from compute_histogram_spark.multimodal.audio import decode_aiff
 
         return decode_aiff(content)
-    if content[:4] == b"fLaC":
-        from compute_histogram_spark.multimodal.flac import decode_flac
-
-        return decode_flac(content)
     raise NotImplementedError(
-        "lossy audio decode needs soundfile/librosa; WAV and FLAC decode "
-        "for real (multimodal/audio.py, flac.py), MP3 gets real HEADER "
+        "audio decode beyond WAV/AIFF needs soundfile/librosa; WAV and "
+        "AIFF decode for real (multimodal/audio.py), MP3 gets real HEADER "
         "metadata (multimodal/mp3.py: frame walk, Xing, ID3) without PCM, "
         "and the mapInPandas plumbing (extract_audio_features) is shared "
         "by all paths"

@@ -116,69 +116,3 @@ def bpe_segment(
         if (i + 1) % chunk == 0:
             out = out.localCheckpoint()
     return out
-
-
-def bpe_vocab(seg: DataFrame) -> DataFrame:
-    """``(token STRING, token_id INT)`` from a segmented-word table —
-    deterministic ids by lexicographic token order (stable across engines,
-    layouts, and reruns). The global window runs over the VOCABULARY
-    (subword units), which is bounded by construction (merges + alphabet),
-    never over corpus-sized data."""
-    from pyspark.sql import Window
-
-    units = seg.select(F.explode("syms").alias("token")).distinct()
-    w = Window.orderBy("token")
-    return units.withColumn("token_id", F.row_number().over(w).cast("int"))
-
-
-def bpe_encode(
-    docs: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
-) -> DataFrame:
-    """Encode a corpus to token-id sequences with a learned merge list ->
-    ``(doc_id, token_ids ARRAY<INT>, n_tokens)``.
-
-    The production-tokenizer shape at 100 TB:
-
-    1. one corpus pass explodes ``(doc_id, pos, word)``;
-    2. the expensive merge fold (:func:`bpe_segment`) runs once per
-       DISTINCT word — the same corpus-compression trick training uses;
-    3. subword ids come from :func:`bpe_vocab` (vocab-sized work);
-    4. one word-keyed equi-join maps the token stream onto id arrays, and a
-       per-doc ``collect_list`` + position sort reassembles each document's
-       sequence in order, flattened subword-by-subword.
-
-    The corpus is touched by exactly one explode, one join shuffle, and one
-    doc-keyed aggregation; all per-word/fold/vocab work is on compressed
-    tables. Pinned against a sequential pure-Python encoder in
-    tests/test_bpe.py.
-    """
-    tok = (
-        ensure_parallelism(docs)
-        .select("doc_id", F.posexplode(tokens(text_col)).alias("pos", "word"))
-        .where(F.col("word") != "")
-    )
-    words = tok.select("word").distinct()
-    seg = bpe_segment(words, merges)
-    vocab = bpe_vocab(seg)
-    word_ids = (
-        seg.select("word", F.posexplode("syms").alias("spos", "token"))
-        .join(vocab, "token")
-        .groupBy("word")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("spos", "token_id"))
-            ).alias("z")
-        )
-        .select("word", F.expr("transform(z, s -> s.token_id)").alias("ids"))
-    )
-    return (
-        tok.join(word_ids, "word")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "ids"))).alias("z"))
-        .select(
-            "doc_id",
-            F.flatten(F.expr("transform(z, s -> s.ids)")).alias("token_ids"),
-        )
-        .withColumn("n_tokens", F.size("token_ids"))
-        .orderBy("doc_id")
-    )

@@ -142,8 +142,7 @@ def probe_rerank(
     nprobe: int = 2,
 ) -> DataFrame:
     """IVF probe + exact rerank over an assigned index ``(vec_id, v, nrm,
-    cid)`` — the query side of the learned index, shared by the in-memory
-    and the persisted (partitionBy('cid')) layouts.
+    cid)`` — the query side of the learned index.
 
     Each query probes its ``nprobe`` nearest centroids and exact-reranks
     only those buckets: an *equi*-join on ``cid`` — Spark co-partitions both
@@ -209,90 +208,6 @@ def cosine_topk_kmeans(
     end: train centroids (Lloyd's), assign the corpus, probe + rerank."""
     centroids = kmeans(emb, n_clusters=n_clusters, iters=iters)
     cand = assign_clusters(emb, centroids)
-    return probe_rerank(cand, centroids, k=k, query_filter=query_filter, nprobe=nprobe)
-
-
-def write_ivf_index(
-    emb: DataFrame,
-    centroids: np.ndarray,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Persist the assigned index partitioned BY CLUSTER: queries that probe
-    ``nprobe`` clusters then touch only those directories — planning-time
-    partition pruning (PartitionFilters), no listing or IO for the rest of
-    the corpus. This is how the learned index pays off at 100 TB: the
-    train/assign cost is one-off at write time, per-query cost scales with
-    nprobe x bucket size."""
-    assign_clusters(emb, centroids, vec_col=vec_col, id_col=id_col).write.mode(
-        "overwrite"
-    ).partitionBy("cid").parquet(path)
-
-
-def append_to_ivf_index(
-    new_emb: DataFrame,
-    centroids: np.ndarray,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Incremental ingest into a persisted IVF index: assign NEW vectors
-    to the EXISTING centroids and APPEND their partitions — no retrain,
-    no rewrite of prior data. A map-only job touching only the assigned
-    ``cid=`` directories; probe queries see old+new rows with unchanged
-    partition pruning (value-equivalence and pruning asserted in
-    tests/test_clustering.py). Rebuild when :func:`ivf_assignment_drift`
-    says the trained centroids no longer fit the data."""
-    assign_clusters(new_emb, centroids, vec_col=vec_col, id_col=id_col).write.mode(
-        "append"
-    ).partitionBy("cid").parquet(path)
-
-
-def ivf_assignment_drift(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    new_emb: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """The rebuild trigger the append operators point at: PSI drift
-    between the persisted index's cluster-occupancy histogram and the
-    NEW batch's assignment under the SAME centroids.
-
-    Reuses :func:`profile.distribution_drift` with the cid as the bin
-    (bin_width=1): -> (bin, bin_value, n_ref, n_cur, psi_term);
-    ``sum(psi_term)`` is the PSI (<0.1 stable — keep appending; >0.25
-    the trained centroids no longer fit the incoming data — retrain and
-    rewrite). Cost: one column-pruned scan of the index's cid partition
-    column (count-only), one map-only assignment of the new batch, two
-    bin-sized aggregations; nothing row-sized shuffles."""
-    from compute_histogram_spark.operators.profile import distribution_drift
-
-    ref = spark.read.parquet(path).select(
-        F.col("cid").cast("double").alias("cid")
-    )
-    cur = assign_clusters(
-        new_emb, centroids, vec_col=vec_col, id_col=id_col
-    ).select(F.col("cid").cast("double").alias("cid"))
-    return distribution_drift(ref, cur, value_col="cid", bin_width=1.0)
-
-
-def cosine_topk_ivf_index(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    k: int = 5,
-    query_filter: str = "vec_id < 10",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Top-k over a PERSISTED IVF index (see :func:`write_ivf_index`).
-
-    The probe's ``cid`` equi-join pushes down onto the partition column, so
-    only probed directories are scanned (asserted on the physical plan in
-    tests/test_clustering.py)."""
-    cand = spark.read.parquet(path)
     return probe_rerank(cand, centroids, k=k, query_filter=query_filter, nprobe=nprobe)
 
 
@@ -672,14 +587,14 @@ def write_pca_index(
     id_col: str = "vec_id",
 ) -> None:
     """Persist the PCA ANN tier's serving state (VERDICT r13 #6):
-    ``model/`` holds the [dim x d] rotation (dim tiny rows — the
-    write_ivf_index precedent: train once, never at query time) and
+    ``model/`` holds the [dim x d] rotation (dim tiny rows: train once,
+    never at query time) and
     ``vectors/`` the map-only candidate table (vec_id, v, nrm, rv, rn).
     Serving then needs ZERO data-scaled training passes: no moments
     scan, no eigh, no projection — :func:`cosine_topk_pca_index` reads
     the candidates and goes straight to shortlist + rerank. Incremental
     ingest = project the new batch with the stored model and append
-    (same O(delta) story as append_to_ivf_index)."""
+    (:func:`append_to_pca_index`, O(delta))."""
     p = pca_rotation(emb, dim, vec_col, id_col)
     spark = emb.sparkSession
     spark.createDataFrame(
@@ -707,8 +622,7 @@ def append_to_pca_index(
 ) -> None:
     """Incremental ingest: project ONLY the new batch with the stored
     rotation and append its candidate rows — O(delta), no retrain, no
-    rewrite (rebuild when the moments drift; the KMV/IVF drift triggers
-    generalize unchanged)."""
+    rewrite (rebuild when the moments drift)."""
     spark = new_emb.sparkSession
     p = read_pca_model(spark, path)
     _pca_candidates(new_emb, p, vec_col, id_col).write.mode(

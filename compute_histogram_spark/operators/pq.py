@@ -252,194 +252,6 @@ def cosine_topk_pq(
     return _ranked(pairs, k)
 
 
-def ivfpq_index(
-    emb: DataFrame,
-    n_clusters: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-) -> tuple[DataFrame, np.ndarray, np.ndarray]:
-    """FAISS-style IVFPQ index: coarse k-means assignment + PQ codes of the
-    RESIDUAL (v - centroid[cid]) -> (index_df, centroids, codebooks) with
-    ``index_df = (vec_id, v, nrm, cid, code)``.
-
-    Residual encoding is what makes the composition beat flat PQ: within a
-    cluster the residual magnitudes are small, so the same ksub centroids
-    per subspace quantize them with far less error. Residuals are computed
-    as a broadcast centroid join + ``zip_with`` subtraction (map-only), and
-    the codebooks train on the residual table with the same deterministic
-    distributed Lloyd's."""
-    import pandas as pd
-
-    centroids = CL.kmeans(emb, n_clusters=n_clusters, iters=iters)
-    cand = CL.assign_clusters(emb, centroids)  # (vec_id, v, nrm, cid)
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid int, cvec array<double>",
-    )
-    resid = cand.join(F.broadcast(cdf), "cid").withColumn(
-        "r", F.zip_with("v", "cvec", lambda x, y: x - y)
-    )
-    codebooks = pq_train(resid, m=m, ksub=ksub, iters=iters, vec_col="r",
-                         id_col="vec_id")
-    return ivfpq_encode(emb, centroids, codebooks), centroids, codebooks
-
-
-def ivfpq_encode(
-    emb: DataFrame,
-    centroids: np.ndarray,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Encode vectors against EXISTING IVFPQ meta (coarse assign ->
-    residual -> per-subspace codes) — the shared map-only step behind
-    initial builds and incremental appends; deterministic given
-    (centroids, codebooks)."""
-    cand = CL.assign_clusters(emb, centroids, vec_col=vec_col, id_col=id_col)
-    spark = emb.sparkSession
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid int, cvec array<double>",
-    )
-    resid = cand.join(F.broadcast(cdf), "cid").withColumn(
-        "r", F.zip_with("v", "cvec", lambda x, y: x - y)
-    )
-
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    mm, _, dsub = cb.shape
-    c_sq = (cb * cb).sum(axis=2)
-
-    def kernel(batches):
-        for pdf in batches:
-            rm = np.stack(pdf["r"].to_numpy())
-            b = rm.shape[0]
-            codes = np.empty((b, mm), dtype=np.int32)
-            for s in range(mm):
-                x = rm[:, s * dsub : (s + 1) * dsub]
-                d = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ cb[s].T)
-                    + c_sq[s][None, :]
-                )
-                codes[:, s] = np.argmin(np.round(d, CL.DEC), axis=1)
-            out = pdf[["vec_id", "v", "nrm", "cid"]].copy()
-            out["code"] = list(codes)
-            yield out
-
-    return resid.select("vec_id", "v", "nrm", "cid", "r").mapInPandas(
-        kernel,
-        "vec_id bigint, v array<double>, nrm double, cid int, code array<int>",
-    )
-
-
-def cosine_topk_ivfpq(
-    emb: DataFrame,
-    k: int = 5,
-    n_clusters: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-    nprobe: int = 3,
-    rerank: int = 50,
-    query_filter: str = "vec_id < 10",
-) -> DataFrame:
-    """End-to-end IVFPQ ANN: probe the ``nprobe`` nearest coarse clusters
-    per query, ADC-score ONLY those buckets' codes
-    (``dot(q, v) ~= dot(q, centroid_cid) + sum_s lut[s][code_s]`` on the
-    residual), shortlist, exact rerank. The probed-cid filter is a
-    driver-side literal ``isin`` — on a partitionBy('cid') layout it prunes
-    at planning time, so at 100 TB the ADC pass reads nprobe/n_clusters of
-    the (already 32x-compressed) code table, never the corpus."""
-    import pandas as pd
-
-    index, centroids, codebooks = ivfpq_index(
-        emb, n_clusters=n_clusters, m=m, ksub=ksub, iters=iters
-    )
-    e = _with_norms(emb)
-    q_rows = e.where(query_filter).select("vec_id", "v", "nrm").collect()
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["v"] for r in q_rows], dtype=np.float64)
-    qn = np.array([r["nrm"] for r in q_rows], dtype=np.float64)
-
-    d = (
-        (qm * qm).sum(axis=1)[:, None]
-        - 2.0 * (qm @ centroids.T)
-        + (centroids * centroids).sum(axis=1)[None, :]
-    )
-    probe = np.argsort(np.round(d, CL.DEC), axis=1, kind="stable")[:, :nprobe]
-    probed = sorted({int(c) for row in probe for c in row})
-    probe_sets = [set(int(c) for c in row) for row in probe]
-    qc_dot = qm @ centroids.T  # [nq, n_clusters]
-
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    mm, _, dsub = cb.shape
-    lut = np.einsum("qsd,sjd->qsj", qm.reshape(len(q_ids), mm, dsub), cb)
-
-    def adc_kernel(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cn = pdf["nrm"].to_numpy(dtype=np.float64)
-            cids = pdf["cid"].to_numpy(dtype=np.int64)
-            codes_m = np.stack(pdf["code"].to_numpy())
-            adc = np.zeros((len(q_ids), len(ids)), dtype=np.float64)
-            for s in range(mm):
-                adc += lut[:, s, codes_m[:, s]]
-            frames = []
-            for qi in range(len(q_ids)):
-                mask = np.fromiter(
-                    (c in probe_sets[qi] for c in cids), bool, len(cids)
-                ) & (ids != q_ids[qi])
-                if not mask.any():
-                    continue
-                approx = (qc_dot[qi, cids[mask]] + adc[qi, mask]) / (
-                    qn[qi] * cn[mask]
-                )
-                frames.append(pd.DataFrame({
-                    "query_id": q_ids[qi],
-                    "vec_id": ids[mask],
-                    "approx": np.round(approx, 6),
-                }))
-            yield (
-                pd.concat(frames)
-                if frames
-                else pd.DataFrame(
-                    {"query_id": [], "vec_id": [], "approx": []}
-                ).astype({"query_id": "int64", "vec_id": "int64"})
-            )
-
-    cand = (
-        index.where(F.col("cid").isin(probed))
-        .select("vec_id", "nrm", "cid", "code")
-        .mapInPandas(adc_kernel, "query_id bigint, vec_id bigint, approx double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    short = (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    qdf = emb.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in v], float(n))
-         for i, v, n in zip(q_ids, qm, qn)],
-        "query_id bigint, qv array<double>, qn double",
-    )
-    pairs = (
-        short.join(index.select("vec_id", "v", "nrm"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                V.cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("nrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    return _ranked(pairs, k)
-
-
 def sq_encode(
     emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
@@ -534,171 +346,4 @@ def cosine_topk_sq(
     # over the post-WindowGroupLimit shortlist only (<= |queries| x rerank
     # rows read back from the shortlist's materialized exchange) — bounded
     # by construction, listed in plan_audit SORT_RESAMPLE_BOUNDED
-    return _ranked(pairs, k)
-
-
-def write_ivfpq_index(
-    emb: DataFrame,
-    path: str,
-    n_clusters: int = 10,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 3,
-) -> None:
-    """Persist an IVFPQ index: ``path/codes`` partitionBy(cid) (the 32x-
-    compressed candidate table — probed queries touch only their buckets'
-    directories at planning time, like clustering.write_ivf_index) plus
-    ``path/centroids`` and ``path/codebooks`` as tiny parquet tables so the
-    query side needs NO retraining. Training cost is one-off at write time.
-    """
-    index, centroids, codebooks = ivfpq_index(
-        emb, n_clusters=n_clusters, m=m, ksub=ksub, iters=iters
-    )
-    spark = emb.sparkSession
-    index.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid int, cvec array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    mm, kk, _dsub = codebooks.shape
-    spark.createDataFrame(
-        [
-            (int(s), int(j), [float(x) for x in codebooks[s, j]])
-            for s in range(mm)
-            for j in range(kk)
-        ],
-        "s int, j int, cvec array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def append_to_ivfpq_index(new_emb: DataFrame, path: str) -> None:
-    """Incremental ingest into a persisted IVFPQ index: encode NEW vectors
-    against the index's OWN persisted meta (no retrain) and APPEND their
-    code partitions — prior data is never rewritten.
-
-    100 TB story: ingest is a map-only job (assign + residual + PQ codes)
-    that writes only the touched ``cid=`` directories; the amortized
-    train-at-write claim extends to a train-ONCE claim across the index's
-    whole append lifetime. Quality degrades only as the data distribution
-    drifts from the trained centroids/codebooks — monitor with
-    clustering.ivf_assignment_drift over path/codes and rebuild
-    (write_ivfpq_index) when it flags; recall floors for appended indexes
-    are pinned in tests/test_pq.py."""
-    spark = new_emb.sparkSession
-    centroids, codebooks = load_ivfpq_meta(spark, path)
-    ivfpq_encode(new_emb, centroids, codebooks).write.mode(
-        "append"
-    ).partitionBy("cid").parquet(f"{path}/codes")
-
-
-def load_ivfpq_meta(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
-    """-> (centroids, codebooks) from a persisted index — two tiny reads."""
-    crows = spark.read.parquet(f"{path}/centroids").collect()
-    centroids = np.stack(
-        [r["cvec"] for r in sorted(crows, key=lambda r: r["cid"])]
-    )
-    brows = spark.read.parquet(f"{path}/codebooks").collect()
-    mm = 1 + max(r["s"] for r in brows)
-    kk = 1 + max(r["j"] for r in brows)
-    books = np.zeros((mm, kk, len(brows[0]["cvec"])))
-    for r in brows:
-        books[r["s"], r["j"]] = r["cvec"]
-    return centroids, books
-
-
-def cosine_topk_ivfpq_index(
-    spark,
-    path: str,
-    k: int = 5,
-    nprobe: int = 3,
-    rerank: int = 50,
-    query_filter: str = "vec_id < 10",
-) -> DataFrame:
-    """Top-k over a PERSISTED IVFPQ index — no training at query time; the
-    probed-cid literal filter prunes code partitions at planning time
-    (plan-asserted in tests/test_pq.py)."""
-    import pandas as pd
-
-    centroids, codebooks = load_ivfpq_meta(spark, path)
-    index = spark.read.parquet(f"{path}/codes")
-    q_rows = (
-        index.where(query_filter).select("vec_id", "v", "nrm").collect()
-    )
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["v"] for r in q_rows], dtype=np.float64)
-    qn = np.array([r["nrm"] for r in q_rows], dtype=np.float64)
-
-    d = (
-        (qm * qm).sum(axis=1)[:, None]
-        - 2.0 * (qm @ centroids.T)
-        + (centroids * centroids).sum(axis=1)[None, :]
-    )
-    probe = np.argsort(np.round(d, CL.DEC), axis=1, kind="stable")[:, :nprobe]
-    probed = sorted({int(c) for row in probe for c in row})
-    probe_sets = [set(int(c) for c in row) for row in probe]
-    qc_dot = qm @ centroids.T
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    mm, _, dsub = cb.shape
-    lut = np.einsum("qsd,sjd->qsj", qm.reshape(len(q_ids), mm, dsub), cb)
-
-    def adc_kernel(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cn = pdf["nrm"].to_numpy(dtype=np.float64)
-            cids = pdf["cid"].to_numpy(dtype=np.int64)
-            codes_m = np.stack(pdf["code"].to_numpy())
-            adc = np.zeros((len(q_ids), len(ids)), dtype=np.float64)
-            for s in range(mm):
-                adc += lut[:, s, codes_m[:, s]]
-            frames = []
-            for qi in range(len(q_ids)):
-                mask = np.fromiter(
-                    (c in probe_sets[qi] for c in cids), bool, len(cids)
-                ) & (ids != q_ids[qi])
-                if not mask.any():
-                    continue
-                approx = (qc_dot[qi, cids[mask]] + adc[qi, mask]) / (
-                    qn[qi] * cn[mask]
-                )
-                frames.append(pd.DataFrame({
-                    "query_id": q_ids[qi],
-                    "vec_id": ids[mask],
-                    "approx": np.round(approx, 6),
-                }))
-            yield (
-                pd.concat(frames)
-                if frames
-                else pd.DataFrame(
-                    {"query_id": [], "vec_id": [], "approx": []}
-                ).astype({"query_id": "int64", "vec_id": "int64"})
-            )
-
-    cand = (
-        index.where(F.col("cid").isin(probed))
-        .select("vec_id", "nrm", "cid", "code")
-        .mapInPandas(adc_kernel, "query_id bigint, vec_id bigint, approx double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    short = (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= rerank)
-        .select("query_id", "vec_id")
-    )
-    qdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in v], float(n))
-         for i, v, n in zip(q_ids, qm, qn)],
-        "query_id bigint, qv array<double>, qn double",
-    )
-    pairs = (
-        short.join(index.select("vec_id", "v", "nrm"), "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                V.cosine(F.col("qv"), F.col("v"), F.col("qn"), F.col("nrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
     return _ranked(pairs, k)

@@ -104,6 +104,8 @@ def test_decode_audio_gateway():
     assert rate == 8000
     with pytest.raises(NotImplementedError):
         decode_audio(b"ID3\x04mp3-ish payload")
+    with pytest.raises(NotImplementedError):
+        decode_audio(b"fLaC" + bytes(38))  # no FLAC decoder
     with pytest.raises(ValueError):
         decode_audio(b"RIFF\x00\x00\x00\x00AVI LIST")  # RIFF but not WAVE
 

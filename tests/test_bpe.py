@@ -74,81 +74,6 @@ def test_bpe_segment_matches_training_output(spark, sf_dir):
     assert got == want
 
 
-def py_encode(texts, merges):
-    """Sequential corpus encoder twin: tokenize (whitespace, matching the
-    engine's tokens()), fold merges per word, id = 1-based rank of the
-    subword in the lexicographically sorted corpus vocabulary."""
-    def fold(word):
-        s = list(word)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            s = out
-        return s
-
-    segs = {
-        d: [fold(w) for w in t.split() if w] for d, t in texts.items()
-    }
-    units = sorted({u for ws in segs.values() for w in ws for u in w})
-    ids = {u: i + 1 for i, u in enumerate(units)}
-    return {
-        d: [ids[u] for w in ws for u in w] for d, ws in segs.items()
-    }
-
-
-def test_bpe_encode_matches_sequential(spark):
-    texts = {
-        0: "low lower lowest",
-        1: "newest widest lowest low",
-        2: "the newest new width",
-    }
-    rows = [Row(doc_id=k, text=v) for k, v in texts.items()]
-    docs = spark.createDataFrame(rows)
-    merges, _ = B.bpe_train(B.word_freqs(docs), num_merges=8, min_freq=2)
-    out = {
-        r["doc_id"]: (list(r["token_ids"]), r["n_tokens"])
-        for r in B.bpe_encode(docs, merges).collect()
-    }
-    expect = py_encode(texts, merges)
-    assert set(out) == set(expect)
-    for d in expect:
-        assert out[d][0] == expect[d], d
-        assert out[d][1] == len(expect[d])
-
-
-def test_bpe_encode_real_corpus_roundtrip_counts(spark, sf_dir):
-    """On the real documents table: every doc encodes, token counts are
-    positive, and decoding ids back through the vocab reproduces each
-    word's concatenated text (subwords partition the word)."""
-    docs = load(spark, sf_dir, "documents")
-    merges, vocab_df = B.bpe_train(B.word_freqs(docs), num_merges=6)
-    enc = B.bpe_encode(docs, merges)
-    rows = enc.collect()
-    assert len(rows) == docs.count()
-    assert all(r["n_tokens"] > 0 for r in rows)
-    # spot-check invertibility on one doc
-    vocab = {
-        r["token_id"]: r["token"]
-        for r in B.bpe_vocab(
-            B.bpe_segment(
-                docs.select(B.F.explode(B.tokens("text")).alias("word"))
-                .where(B.F.col("word") != "").distinct(),
-                merges,
-            )
-        ).collect()
-    }
-    doc0 = docs.orderBy("doc_id").first()
-    enc0 = enc.where(B.F.col("doc_id") == doc0["doc_id"]).first()
-    decoded = "".join(vocab[i] for i in enc0["token_ids"])
-    assert decoded == "".join(doc0["text"].split())
-
-
 # ------------------------------------------- staged DuckDB twins (r10)
 
 

@@ -104,87 +104,6 @@ def test_kmeans_probes_rank_by_true_cosine(emb):
         assert cosines == sorted(cosines, reverse=True), q
 
 
-def test_persisted_ivf_index_prunes_partitions_and_matches(emb, vecs, spark, tmp_path):
-    c = _numpy_kmeans(vecs, n_clusters=10, iters=2)
-    path = str(tmp_path / "ivf_index")
-    CL.write_ivf_index(emb, c, path)
-
-    persisted = CL.cosine_topk_ivf_index(spark, path, c, k=5, nprobe=2)
-    # planning-time directory pruning: the probed-cid isin must land in
-    # PartitionFilters of the index scan, not a post-scan data filter
-    plan = persisted._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "cid" in plan.split("PartitionFilters")[1][:200]
-
-    in_memory = CL.probe_rerank(CL.assign_clusters(emb, c), c, k=5, nprobe=2)
-    assert sorted(map(tuple, persisted.collect())) == sorted(
-        map(tuple, in_memory.collect())
-    )
-
-
-def test_ivf_index_append_matches_full_build(emb, vecs, spark, tmp_path):
-    """Incremental ingest (clustering.append_to_ivf_index): building on
-    half the corpus and appending the rest must answer every probe
-    identically to a one-shot full build over the same centroids, and
-    the appended files must land only in their assigned cid dirs."""
-    import os
-
-    c = _numpy_kmeans(vecs, n_clusters=10, iters=2)
-    inc = str(tmp_path / "ivf_inc")
-    full = str(tmp_path / "ivf_full")
-    CL.write_ivf_index(emb.where("vec_id < 250"), c, inc)
-    CL.append_to_ivf_index(emb.where("vec_id >= 250"), c, inc)
-    CL.write_ivf_index(emb, c, full)
-
-    got = CL.cosine_topk_ivf_index(spark, inc, c, k=5, nprobe=2)
-    want = CL.cosine_topk_ivf_index(spark, full, c, k=5, nprobe=2)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    # appended rows live under the same partitioned layout (cid= dirs
-    # only, no top-level files beyond _SUCCESS)
-    top = set(os.listdir(inc))
-    assert all(
-        e.startswith("cid=") or e.startswith("_") or e.startswith(".")
-        for e in top
-    )
-    # pruning still applies after the append
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "cid" in plan.split("PartitionFilters")[1][:200]
-
-
-def test_ivf_assignment_drift_flags_shifted_batches(emb, vecs, spark, tmp_path):
-    """The rebuild trigger: a same-distribution batch reads stable PSI, a
-    batch forced into few clusters reads major-shift PSI."""
-    from pyspark.sql import functions as F
-
-    c = _numpy_kmeans(vecs, n_clusters=10, iters=2)
-    path = str(tmp_path / "ivf_drift")
-    CL.write_ivf_index(emb.where("vec_id < 400"), c, path)
-
-    same = CL.ivf_assignment_drift(
-        spark, path, c, emb.where("vec_id >= 400")
-    ).agg(F.round(F.sum("psi_term"), 6).alias("psi")).first()["psi"]
-    assert same < 0.25, same  # held-out slice of the SAME distribution
-
-    # adversarial batch: every vector is centroid 0 + tiny noise -> the
-    # whole batch lands in one cluster
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    rows = [
-        (int(10_000 + i), [float(x) for x in c[0] + rng.normal(0, 1e-3, c.shape[1])])
-        for i in range(100)
-    ]
-    shifted = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    bad = CL.ivf_assignment_drift(spark, path, c, shifted).agg(
-        F.round(F.sum("psi_term"), 6).alias("psi")
-    ).first()["psi"]
-    assert bad > 0.25, bad
-    assert bad > same
-
-
 def test_embedding_moments_matches_numpy(spark, sf_dir):
     """The distributed one-pass covariance equals np.cov(bias=True) on the
     collected matrix (population covariance, rounded to DEC)."""

@@ -117,47 +117,6 @@ def test_pq_compression_shape(emb):
     assert codes.count() == emb.count()
 
 
-def test_ivfpq_recall_floor_and_determinism(emb):
-    exact = {}
-    for r in SIM.cosine_topk(emb, k=5).collect():
-        exact.setdefault(r["query_id"], set()).add(r["vec_id"])
-    run1 = PQ.cosine_topk_ivfpq(emb, k=5, nprobe=3, rerank=50).collect()
-    run2 = PQ.cosine_topk_ivfpq(emb, k=5, nprobe=3, rerank=50).collect()
-    assert sorted(map(tuple, run1)) == sorted(map(tuple, run2))  # deterministic
-    approx = {}
-    for r in run1:
-        approx.setdefault(r["query_id"], set()).add(r["vec_id"])
-    assert set(approx) == set(exact)
-    assert all(len(v) == 5 for v in approx.values())
-    hits = sum(len(exact[q] & approx[q]) for q in exact)
-    total = sum(len(v) for v in exact.values())
-    # nprobe=3 of 10 clusters scans ~30% of codes; residual PQ + rerank
-    # should still recover most true neighbors
-    assert hits / total >= 0.5, f"recall {hits}/{total}"
-
-
-def test_ivfpq_probes_bound_the_scan(emb, vecs):
-    """Every returned neighbor must live in one of its query's nprobe
-    nearest coarse clusters — the structural guarantee that the ADC pass
-    reads only probed buckets."""
-    index, centroids, _ = PQ.ivfpq_index(emb, n_clusters=10, iters=2)
-    cid_of = {r["vec_id"]: r["cid"] for r in index.select("vec_id", "cid").collect()}
-    out = PQ.cosine_topk_ivfpq(
-        emb, k=5, n_clusters=10, iters=2, nprobe=2, rerank=30
-    ).collect()
-    ids = np.array(sorted(vecs))
-    mat = np.stack([vecs[i] for i in ids])
-    # NOTE: centroids from a separate ivfpq_index call — deterministic
-    # training makes them identical to the ones inside cosine_topk_ivfpq
-    d = (mat * mat).sum(1)[:, None] - 2.0 * (mat @ centroids.T) + (
-        centroids * centroids
-    ).sum(1)[None, :]
-    probe = np.argsort(np.round(d, CL.DEC), axis=1, kind="stable")[:, :2]
-    probes_by_id = {int(i): set(map(int, p)) for i, p in zip(ids, probe)}
-    for r in out:
-        assert cid_of[r["vec_id"]] in probes_by_id[r["query_id"]], r
-
-
 def test_sq_encode_bounds_and_fidelity(emb, vecs):
     rows = PQ.sq_encode(emb).collect()
     assert len(rows) == len(vecs)
@@ -181,59 +140,6 @@ def test_sq_topk_recall_floor(emb):
     total = sum(len(v) for v in exact.values())
     # int8 is high fidelity: near-perfect recall expected
     assert hits / total >= 0.9, f"recall {hits}/{total}"
-
-
-def test_persisted_ivfpq_index_prunes_and_matches(emb, spark, tmp_path):
-    """The persisted index must (a) answer identically to the in-memory
-    IVFPQ (same deterministic training), and (b) scan ONLY probed cid
-    partitions — PartitionFilters on the physical plan."""
-    path = str(tmp_path / "ivfpq")
-    PQ.write_ivfpq_index(emb, path, n_clusters=10, iters=2)
-    from_disk = PQ.cosine_topk_ivfpq_index(
-        spark, path, k=5, nprobe=2, rerank=30
-    )
-    in_mem = PQ.cosine_topk_ivfpq(
-        emb, k=5, n_clusters=10, iters=2, nprobe=2, rerank=30
-    )
-    assert sorted(map(tuple, from_disk.collect())) == sorted(
-        map(tuple, in_mem.collect())
-    )
-    # partition pruning evidence: the probed-cid filter must appear as a
-    # PartitionFilters entry on the codes scan
-    plan = from_disk._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "cid" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
-
-
-def test_ivfpq_index_append_matches_full_encode(emb, spark, tmp_path):
-    """Incremental ingest (pq.append_to_ivfpq_index): write on half the
-    corpus, append the other half against the PERSISTED meta — served
-    answers must equal a full index encoded with the same meta (encode is
-    deterministic given centroids+codebooks; no retrain on append)."""
-    inc = str(tmp_path / "ivfpq_inc")
-    PQ.write_ivfpq_index(
-        emb.where("vec_id < 250"), inc, n_clusters=10, iters=2
-    )
-    PQ.append_to_ivfpq_index(emb.where("vec_id >= 250"), inc)
-
-    # reference: encode the FULL corpus with the meta the half-build
-    # trained, through the same serve path
-    centroids, codebooks = PQ.load_ivfpq_meta(spark, inc)
-    full = str(tmp_path / "ivfpq_full")
-    PQ.ivfpq_encode(emb, centroids, codebooks).write.mode(
-        "overwrite"
-    ).partitionBy("cid").parquet(f"{full}/codes")
-    import shutil
-
-    shutil.copytree(f"{inc}/centroids", f"{full}/centroids")
-    shutil.copytree(f"{inc}/codebooks", f"{full}/codebooks")
-
-    got = PQ.cosine_topk_ivfpq_index(spark, inc, k=5, nprobe=2, rerank=30)
-    want = PQ.cosine_topk_ivfpq_index(spark, full, k=5, nprobe=2, rerank=30)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
 
 
 def test_similarity_topk_pq_seed_oracle(spark, sf_dir):

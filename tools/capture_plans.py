@@ -13,11 +13,16 @@ scale-independent by construction, and AQE re-planning is noted inline
 where it applies. Queries whose BUILD phase runs driver actions (min/max
 planning, layout writes, index training) execute those actions here; the
 explain itself is plan-only.
+
+Every dump has its per-process counters replaced by ``N`` (expression ids
+``#123``, ``plan_id=...``, RDD ids ``MapPartitionsRDD[12]`` and lambda
+variables ``x_15``), so two captures of one commit diff cleanly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import traceback
 
@@ -25,6 +30,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from compute_histogram_spark.session import get_session
 from compute_histogram_spark import registry
+
+# (pattern, replacement) pairs for the counters a JVM hands out per process.
+_MASKS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[N]"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+]
+
+
+def mask_ids(plan: str) -> str:
+    for pat, rep in _MASKS:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main() -> None:
@@ -59,7 +78,7 @@ def main() -> None:
             n_ok += 1
         with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as f:
             f.write(f"-- {name} ({tag}, sf_dir={sf_dir})\n")
-            f.write(plan)
+            f.write(mask_ids(plan))
         print(f"plan {name}: {'ok' if 'FAILED' not in plan[:30] else 'ERR'}")
     print(f"{n_ok} ok, {n_err} failed -> {outdir}")
 
