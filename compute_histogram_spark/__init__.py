@@ -20,9 +20,8 @@ Layout
 - ``multimodal`` : binary columns over mapInPandas: the GeoTIFF raster
                    reader and two-pass raster histogram (``geotiff``), and
                    the asset feature kernel (``binary``), which parses real
-                   image headers for PNG and TIFF only, and audio/video
-                   metadata readers (WAV/AIFF, MP3, AAC, Ogg, MP4,
-                   H.264 SPS)
+                   image headers for PNG and TIFF only, and video
+                   metadata readers (MP4, H.264 SPS)
 
 Every operator is designed for a 1000-executor / 100 TB deployment:
 aggregations rely on Spark's partial->final hash aggregation, small

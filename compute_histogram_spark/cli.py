@@ -18,7 +18,9 @@ Differences from the reference, all deliberate:
   directory of GeoTIFF tiles read through Spark's built-in ``binaryFile``
   source, decoded by the stdlib reader (multimodal/geotiff.py), band 1 by
   default (main.py:239), two passes exactly like main.py:53-57, CSV rows
-  in the reference's ``%1.2f, %d`` format (main.py:124).
+  in the reference's ``%1.2f, %d`` format (main.py:124). Its bins are
+  always linear and dense, so it rejects ``--method log``,
+  ``--ref-compat`` and ``--sparse``.
 """
 
 from __future__ import annotations
@@ -125,7 +127,10 @@ def _raster_main(args, spark: SparkSession) -> int:
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    if args.raster and (args.method == "log" or args.ref_compat or args.sparse):
+        parser.error("--raster does not take --method log, --ref-compat or --sparse")
 
     from compute_histogram_spark.operators import deciles as D
     from compute_histogram_spark.operators import histogram as H
@@ -134,7 +139,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
     own_session = spark is None
     if own_session:
-        master = f"local[{args.workers}]" if args.workers else "local[*]"
+        # None lets get_session pick local[$SPARK_GRAFT_CPUS].
+        master = f"local[{args.workers}]" if args.workers else None
         spark = get_session("compute-histogram-spark", master=master)
 
     try:

@@ -8,8 +8,6 @@ PNG (IHDR, this module) and TIFF (first IFD, ``multimodal/geotiff.py``).
 Every other payload gets a clearly-marked deterministic fake derived
 from the sha256 of its bytes, so results are stable and the text-derived
 ``multimodal_features`` query has a value-exact DuckDB oracle.
-:func:`decode_audio` is the gateway to the stdlib audio readers: WAV and
-AIFF (``multimodal/audio.py``).
 
 Scale notes: mapInPandas streams Arrow batches — one batch in memory per
 task, never the whole partition; binary payloads never pass through a
@@ -22,7 +20,6 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -129,27 +126,6 @@ def decode_image(content: bytes) -> tuple[int, int, int]:
         pass
     d = hashlib.sha256(content).digest()
     return 16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 3
-
-
-def decode_audio(content: bytes) -> Any:
-    """REAL for WAV (RIFF PCM / IEEE-float) and AIFF/AIFF-C
-    (multimodal/audio.py) -> (samples [n, ch] float64, sample_rate).
-    Every other payload (FLAC, MP3/AAC/OGG) raises NotImplementedError."""
-    if content[:4] == b"RIFF":
-        from compute_histogram_spark.multimodal.audio import decode_wav
-
-        return decode_wav(content)
-    if content[:4] == b"FORM" and content[8:12] in (b"AIFF", b"AIFC"):
-        from compute_histogram_spark.multimodal.audio import decode_aiff
-
-        return decode_aiff(content)
-    raise NotImplementedError(
-        "audio decode beyond WAV/AIFF needs soundfile/librosa; WAV and "
-        "AIFF decode for real (multimodal/audio.py), MP3 gets real HEADER "
-        "metadata (multimodal/mp3.py: frame walk, Xing, ID3) without PCM, "
-        "and the mapInPandas plumbing (extract_audio_features) is shared "
-        "by all paths"
-    )
 
 
 def extract_features(assets: DataFrame) -> DataFrame:

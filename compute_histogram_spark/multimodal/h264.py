@@ -1,5 +1,5 @@
 """H.264/AVC sequence-parameter-set parsing — metadata only (the same
-honest boundary as mp3.py/aac.py/ogg.py: SPS syntax is a short public
+honest boundary as mp4.py: SPS syntax is a short public
 Exp-Golomb structure (ISO/IEC 14496-10 §7.3.2.1), while FRAME decode
 needs the full CABAC/CAVLC + prediction machinery and is not done).
 

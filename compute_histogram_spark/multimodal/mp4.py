@@ -1,6 +1,6 @@
 """REAL MP4 / ISO-BMFF container parsing — pure stdlib struct, no codec.
 
-Video joins PNG (binary.py), WAV (audio.py) and GeoTIFF (geotiff.py) in
+Video joins PNG (binary.py) and GeoTIFF (geotiff.py) in
 the "real parsing, honestly-gated decode" policy: the ISO base-media file
 format (MP4/MOV/M4A/3GP) is a public box structure
 (ISO/IEC 14496-12), so duration, timescale, track layout, codec fourccs

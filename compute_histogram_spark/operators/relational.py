@@ -294,21 +294,6 @@ def orders_pivot(orders: DataFrame) -> DataFrame:
     ).orderBy("order_year")
 
 
-def monthly_orders(orders: DataFrame) -> DataFrame:
-    """Per-month order volume/revenue — date-part functions + group agg."""
-    return (
-        orders.groupBy(
-            F.year("o_orderdate").alias("order_year"),
-            F.month("o_orderdate").alias("order_month"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            (F.sum(cents("o_totalprice")) / 100.0).alias("revenue"),
-        )
-        .orderBy("order_year", "order_month")
-    )
-
-
 def users_in_both(events: DataFrame, type_a: str, type_b: str) -> DataFrame:
     """INTERSECT: users who emitted both event types (set semantics)."""
     a = events.where(F.col("event_type") == type_a).select("user_id")

@@ -4,6 +4,8 @@ reference's dead flag, main.py:27-33), bounds pruning, csv output."""
 import glob
 import os
 
+import pytest
+
 from compute_histogram_spark.cli import main
 
 
@@ -112,3 +114,43 @@ def test_raster_deciles(spark, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "p100" in out or "p90" in out
+
+
+@pytest.mark.parametrize(
+    "flag",
+    [["--method", "log"], ["--ref-compat"], ["--sparse"]],
+    ids=["method-log", "ref-compat", "sparse"],
+)
+def test_raster_rejects_parquet_only_flags(spark, tmp_path, flag, capsys):
+    # --raster bins linearly and densely; a flag it cannot honour is an
+    # argument error (exit 2), not a silently different histogram.
+    d, _ = _tif_dir(tmp_path)
+    with pytest.raises(SystemExit) as exc:
+        main([d, "--raster", *flag], spark=spark)
+    assert exc.value.code == 2
+    assert "--raster does not take" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "workers, master",
+    [([], None), (["--workers", "3"], "local[3]")],
+    ids=["default", "workers"],
+)
+def test_own_session_master(monkeypatch, tmp_path, workers, master):
+    # Without --workers the CLI leaves the master to get_session, which
+    # honours SPARK_GRAFT_CPUS.
+    from compute_histogram_spark import session
+
+    class Built(Exception):
+        pass
+
+    seen = []
+
+    def fake_get_session(app_name, master=None, **kw):
+        seen.append(master)
+        raise Built
+
+    monkeypatch.setattr(session, "get_session", fake_get_session)
+    with pytest.raises(Built):
+        main([str(tmp_path), *workers])
+    assert seen == [master]
