@@ -20,7 +20,8 @@ Differences from the reference, all deliberate:
   default (main.py:239), two passes exactly like main.py:53-57, CSV rows
   in the reference's ``%1.2f, %d`` format (main.py:124). Its bins are
   always linear and dense, so it rejects ``--method log``,
-  ``--ref-compat`` and ``--sparse``.
+  ``--ref-compat`` and ``--sparse``; it reads a band, not a column, so it
+  rejects ``--column``. ``--band`` and ``--bins`` need ``--raster``.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ def build_parser() -> argparse.ArgumentParser:
         description="Distributed histogram + deciles over a parquet column.",
     )
     p.add_argument("source", help="parquet file/dir with the value column")
-    p.add_argument("--column", "-c", default="value", help="value column name")
+    p.add_argument("--column", "-c", help="value column name (default: value)")
     p.add_argument(
         "--method", "-m", choices=("linear", "log"), default="linear"
     )
@@ -58,8 +59,8 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="SOURCE is a dir of GeoTIFF tiles (binaryFile scan + decode)",
     )
-    p.add_argument("--band", type=int, default=1, help="raster band (1-based)")
-    p.add_argument("--bins", type=int, default=256, help="raster histogram bins")
+    p.add_argument("--band", type=int, help="raster band, 1-based (default: 1)")
+    p.add_argument("--bins", type=int, help="raster histogram bins (default: 256)")
     return p
 
 
@@ -71,6 +72,8 @@ def _raster_main(args, spark: SparkSession) -> int:
         raster_minmax,
     )
 
+    band = 1 if args.band is None else args.band
+    bins = 256 if args.bins is None else args.bins
     tiles = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.tif*")
@@ -82,7 +85,7 @@ def _raster_main(args, spark: SparkSession) -> int:
         )
     )
     if args.minmax_only:
-        row = raster_minmax(tiles, band=args.band).first()
+        row = raster_minmax(tiles, band=band).first()
         if row is None or not row["n_valid"]:
             print("no valid pixels", file=sys.stderr)
             return 1
@@ -91,12 +94,12 @@ def _raster_main(args, spark: SparkSession) -> int:
     if args.min_value is not None and args.max_value is not None:
         lo, hi = args.min_value, args.max_value  # skip pass 1 (main.py:53-54)
     else:
-        row = raster_minmax(tiles, band=args.band).first()
+        row = raster_minmax(tiles, band=band).first()
         if row is None or not row["n_valid"]:
             print("no valid pixels", file=sys.stderr)
             return 1
         lo, hi = float(row["min_value"]), float(row["max_value"])
-    histo = raster_histogram(tiles, lo, hi, bins=args.bins, band=args.band)
+    histo = raster_histogram(tiles, lo, hi, bins=bins, band=band)
     if args.output:
         from compute_histogram_spark.sources.sinks import write_histogram_csv
 
@@ -129,8 +132,15 @@ def _raster_main(args, spark: SparkSession) -> int:
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
     parser = build_parser()
     args = parser.parse_args(argv)
-    if args.raster and (args.method == "log" or args.ref_compat or args.sparse):
-        parser.error("--raster does not take --method log, --ref-compat or --sparse")
+    if args.raster and (
+        args.method == "log" or args.ref_compat or args.sparse
+        or args.column is not None
+    ):
+        parser.error(
+            "--raster does not take --method log, --ref-compat, --sparse or --column"
+        )
+    if not args.raster and (args.band is not None or args.bins is not None):
+        parser.error("--band and --bins need --raster")
 
     from compute_histogram_spark.operators import deciles as D
     from compute_histogram_spark.operators import histogram as H
@@ -151,15 +161,16 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         # BIGINT is the documented engine representation (sources/tables.py).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(args.source)
+        column = "value" if args.column is None else args.column
 
         if args.minmax_only:
-            mn, mx = H.compute_min_max(df, args.column, ref_compat=args.ref_compat)
+            mn, mx = H.compute_min_max(df, column, ref_compat=args.ref_compat)
             print(f"min={mn} max={mx}")
             return 0
 
         histo = H.histogram(
             df,
-            args.column,
+            column,
             args.method,
             min_value=args.min_value,
             max_value=args.max_value,

@@ -31,8 +31,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
-
 
 def _boxes(data: bytes, start: int, end: int):
     """Yield (type, payload_start, payload_end) for each box in a span."""

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from compute_histogram_spark.operators.temporal import epoch_micros_sql
 
-NS_PER_S = 1_000_000_000
 US_PER_S = 1_000_000
 
 

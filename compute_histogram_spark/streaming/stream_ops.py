@@ -37,6 +37,7 @@ import os
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -97,6 +98,51 @@ def _event_time(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "event_time", F.timestamp_micros(F.expr(epoch_micros_sql(df)))
     )
+
+
+def start_available_now(
+    df: DataFrame,
+    mode: str,
+    sink=None,
+    query_name: str | None = None,
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Start ``df`` as an ``availableNow`` query in output ``mode``, into
+    the foreachBatch ``sink`` or, without one, into the memory table
+    ``query_name``. Every query this module starts goes through here.
+
+    Sizing rule: state partitions = cores (``defaultParallelism``), not
+    the batch ``spark.sql.shuffle.partitions``. Spark fixes a stateful
+    query's state partition count when the query first starts, and AQE
+    is off inside streaming, so nothing coalesces 32 state stores that
+    hold a few keys; each one loads and commits a state version on every
+    micro-batch. The session conf is changed only around ``start()``,
+    which copies it into the query, and the caller's value is restored
+    even when ``start()`` raises; a batch query that another thread
+    plans on the same session meanwhile would see the per-core count. A
+    query restarted from an existing checkpoint keeps the count recorded
+    there.
+    """
+    spark = df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    caller = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        w = df.writeStream.outputMode(mode).trigger(availableNow=True)
+        if sink is None:
+            w = w.format("memory").queryName(query_name)
+        else:
+            w = w.foreachBatch(sink)
+        if checkpoint is not None:
+            w = w.option("checkpointLocation", checkpoint)
+        return w.start()
+    finally:
+        spark.conf.set(key, caller)
+
+
+def _drain(df: DataFrame, mode: str, sink) -> None:
+    """Run ``df`` through ``sink`` until its finite input is consumed."""
+    start_available_now(df, mode, sink).awaitTermination()
 
 
 def streaming_windowed_histogram(
@@ -466,12 +512,7 @@ def streaming_incremental_histogram(
             .parquet(state_path)
         )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(stream, "append", sink, checkpoint=checkpoint_path)
 
 
 def read_histogram_state(spark: SparkSession, state_path: str, scheme) -> DataFrame:
@@ -524,14 +565,7 @@ def run_to_completion(
     """Drain a finite stream (availableNow) into a memory sink and return
     the materialized result. Test/debug helper — production writes go to a
     real sink (kafka/parquet/delta) with ``trigger(processingTime=...)``."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start_available_now(result, mode, query_name=query_name).awaitTermination()
     return result.sparkSession.table(query_name)
 
 
@@ -551,7 +585,12 @@ def streaming_distribution_drift(
     Returns ``(query, reports)``: ``reports`` is an append-only list of
     ``(batch_id, psi)`` driver-side observations (in production the sink
     would page an alerting system instead). State is ONE row per occupied
-    bin — bounded by the value domain, not the stream length.
+    bin — bounded by the value domain, not the stream length — held in
+    one state partition per core (:func:`start_available_now`): the
+    count is fixed when the query first starts and AQE is off in
+    streaming, so the batch 32 would commit 32 near-empty state stores
+    per micro-batch. A restart from an existing checkpoint keeps the
+    count recorded there.
     """
     from pyspark.sql import functions as F  # noqa: PLC0415
 
@@ -578,13 +617,7 @@ def streaming_distribution_drift(
             psi += round((pc - pr) * __import__("math").log(pc / pr), 6)
         reports.append((batch_id, round(psi, 6)))
 
-    q = (
-        binned.writeStream.outputMode("complete")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, reports
+    return start_available_now(binned, "complete", sink), reports
 
 
 def streaming_normalized_dedup(
@@ -619,7 +652,11 @@ def streaming_normalized_dedup(
 # return the converged result as an ordinary DataFrame — the bridge that
 # lets a stateful streaming op carry a value-exact DuckDB twin in the
 # driver's correctness window (which can only call (spark, sf_dir) ->
-# DataFrame).
+# DataFrame). Every drain runs through ``_drain`` with one state
+# partition per core, not the batch shuffle count: the count is fixed
+# when a query first starts, AQE is off in streaming, and a query
+# restarted from an existing checkpoint keeps the count recorded there
+# (see :func:`start_available_now`).
 # ---------------------------------------------------------------------------
 
 
@@ -721,14 +758,7 @@ def drained_user_stats(
                 r["n_events"], r["sum_value"], r["min_value"], r["max_value"]
             )
 
-    q = (
-        streaming_user_stats(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(streaming_user_stats(stream), "update", sink)
     rows = [
         (uid, n, s, mn, mx)
         for uid, (n, s, mn, mx) in sorted(final.items())
@@ -762,16 +792,13 @@ def drained_exact_dedup(
         for r in df.select("event_id", "value").collect():
             emitted.append((r["event_id"], r["value"]))
 
-    q = (
+    _drain(
         streaming_exact_dedup(
             stream, id_cols=("event_id", "value"), watermark="3650 days"
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "append",
+        sink,
     )
-    q.awaitTermination()
     rows = sorted(
         (v, int(eid % n_batches)) for eid, v in emitted
     )
@@ -874,17 +901,14 @@ def drained_normalized_dedup(
         for r in df.select("doc_id", "norm_hash").collect():
             emitted.append((r["doc_id"], r["norm_hash"]))
 
-    q = (
+    _drain(
         streaming_normalized_dedup(
             stream, content_col="text", id_cols=("doc_id",),
             watermark="3650 days",
-        )
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "append",
+        sink,
     )
-    q.awaitTermination()
     rows = sorted((h, int(d % n_batches)) for d, h in emitted)
     return spark.createDataFrame(
         rows, "norm_hash string, first_batch int"
@@ -934,14 +958,7 @@ def drained_sessionize(
             for r in df.collect()
         ]
 
-    q = (
-        streaming_sessionize(stream, watermark="3650 days")
-        .writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(streaming_sessionize(stream, watermark="3650 days"), "complete", sink)
     return spark.createDataFrame(
         sorted(final["rows"]),
         "user_id bigint, session_start_s bigint, session_end_s bigint, "
@@ -1046,14 +1063,7 @@ def drained_neardup_mark(
             if k not in minima or v < minima[k]:
                 minima[k] = v
 
-    q = (
-        streaming_neardup_index(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(streaming_neardup_index(stream), "update", sink)
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     mins = spark.createDataFrame(
@@ -1132,14 +1142,7 @@ def drained_segment_revenue(
         for r in df.collect():
             final[r["segment"]] = (r["n_orders"], r["cents"])
 
-    q = (
-        streaming_segment_revenue(stream, customer)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(streaming_segment_revenue(stream, customer), "update", sink)
     rows = [
         (seg, n, c / 100.0) for seg, (n, c) in sorted(final.items())
     ]
@@ -1224,14 +1227,7 @@ def drained_token_cms(
         for r in df.collect():
             cells[(r["r"], r["b"])] = r["cnt"]
 
-    q = (
-        streaming_token_cms(stream, depth=depth, width=width)
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(streaming_token_cms(stream, depth=depth, width=width), "update", sink)
 
     cms = spark.createDataFrame(
         sorted((r, b, c) for (r, b), c in cells.items()),

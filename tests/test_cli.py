@@ -118,8 +118,8 @@ def test_raster_deciles(spark, tmp_path, capsys):
 
 @pytest.mark.parametrize(
     "flag",
-    [["--method", "log"], ["--ref-compat"], ["--sparse"]],
-    ids=["method-log", "ref-compat", "sparse"],
+    [["--method", "log"], ["--ref-compat"], ["--sparse"], ["--column", "v"]],
+    ids=["method-log", "ref-compat", "sparse", "column"],
 )
 def test_raster_rejects_parquet_only_flags(spark, tmp_path, flag, capsys):
     # --raster bins linearly and densely; a flag it cannot honour is an
@@ -129,6 +129,19 @@ def test_raster_rejects_parquet_only_flags(spark, tmp_path, flag, capsys):
         main([d, "--raster", *flag], spark=spark)
     assert exc.value.code == 2
     assert "--raster does not take" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "flag",
+    [["--bins", "8"], ["--band", "2"]],
+    ids=["bins", "band"],
+)
+def test_parquet_rejects_raster_only_flags(spark, sf_dir, flag, capsys):
+    # the parquet path picks its own bins and reads a column, not a band
+    with pytest.raises(SystemExit) as exc:
+        main([_events(sf_dir), *flag], spark=spark)
+    assert exc.value.code == 2
+    assert "need --raster" in capsys.readouterr().err
 
 
 @pytest.mark.parametrize(

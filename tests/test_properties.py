@@ -11,7 +11,7 @@ import math
 import numpy as np
 from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row
 
 from compute_histogram_spark.operators import histogram as H
 from compute_histogram_spark.plans.bin_scheme import BinScheme

@@ -517,3 +517,73 @@ def test_drained_sessionize_exact_gap_merges_like_batch(spark, tmp_path):
     # session would have read (0, 1800, 1), (1800, 3600, 1).
     # u2: cross-batch overlap merged; start floors 100us -> 0 s.
     assert final["rows"] == [(1, 0, 3600, 2), (2, 0, 2700, 2)]
+
+
+def test_drains_get_one_state_partition_per_core(spark, sf_dir, stream_dir):
+    """A stateful query started by stream_ops gets one state partition per
+    core, whatever the session's batch shuffle count; its result is the
+    one the oracle checks; and the session reads its own count again
+    afterwards, also when start() raises."""
+    import sys
+    import time
+
+    from pyspark.errors import AnalysisException, IllegalArgumentException
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from compute_histogram_spark.registry import CATALOG
+    from compute_histogram_spark.streaming.stream_ops import (
+        drained_distribution_drift,
+        drained_user_stats,
+        start_available_now,
+    )
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from catalog_pins import check  # noqa: PLC0415
+    from check_oracle import duck_connection  # noqa: PLC0415
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self):
+            self.started, self.ended, self.parts = set(), set(), []
+
+        def onQueryStarted(self, event):
+            self.started.add(str(event.id))
+
+        def onQueryProgress(self, event):
+            self.parts += [
+                op.numShufflePartitions for op in event.progress.stateOperators
+            ]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.ended.add(str(event.id))
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != 3
+    own = spark.conf.get(key)
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    spark.conf.set(key, "3")
+    try:
+        con = duck_connection(sf_dir)
+        for name, drain in (
+            ("streaming_drift", drained_distribution_drift),
+            ("streaming_user_stats", drained_user_stats),
+        ):
+            check(name, drain(spark, sf_dir), con, CATALOG[name].oracle)
+            assert spark.conf.get(key) == "3"
+        stateless = read_events_stream(spark, stream_dir).select("value")
+        for mode in ("no-such-mode", "complete"):
+            with pytest.raises((AnalysisException, IllegalArgumentException)):
+                start_available_now(stateless, mode, lambda df, _epoch: None)
+            assert spark.conf.get(key) == "3"
+        deadline = time.monotonic() + 60
+        while len(listener.ended) < 2 and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, own)
+    assert len(listener.started) == 2 and listener.ended == listener.started
+    assert listener.parts and set(listener.parts) == {cores}, listener.parts
